@@ -17,8 +17,8 @@ import graft.app.BenchUtil
   *    then best-of-2 timed runs — the reproducible number, not the
   *    GC/page-cache-noise envelope;
   *  - the ingest headline is full-size-warmed then best-of-2;
-  *  - steady-state multi-batch COW, MOR and CURATED ingests (the CowAB
-  *    shape) are reported so the per-batch O(batch) merge cost is visible in
+  *  - steady-state multi-batch COW, MOR and CURATED ingests (16 batches
+  *    into a growing table) are reported so the per-batch O(batch) merge cost is visible in
   *    round diffs; the three modes' attempts alternate across the window,
   *    best-of-3 per mode (drift-resistant — the ScalingBench protocol).
   *
@@ -141,7 +141,7 @@ object Bench {
     spark.stop()
   }
 
-  /** 16-batch growing-table replay (the CowAB shape, single run). */
+  /** 16-batch growing-table replay, single run. */
   private def steadyReplay(spark: SparkSession, binlog: java.nio.file.Path,
       eventsPerBatch: Long, mode: graft.cdc.MergeMode): (Long, Double, Double) = {
     val work = java.nio.file.Files.createTempDirectory(

@@ -6,8 +6,7 @@ import graft.binlog.GenProfile
   * fetch) against the default full-payload shuffle, at two duplicate
   * factors. Wall clock on tmpfs-local shuffle understates the win (shuffle
   * moves at memory speed here but crosses a NETWORK on a real cluster), so
-  * shuffle bytes per run is the headline number — the same protocol CowAB
-  * uses for the co-located merge.
+  * shuffle bytes per run is the headline number.
   *
   * Env: GRAFT_AB_EVENTS (default 1M), GRAFT_AB_CORES (default 16),
   * GRAFT_AB_MODE (mor|cow, default mor), GRAFT_AB_HTML (mean payload bytes,

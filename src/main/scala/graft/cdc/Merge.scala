@@ -22,18 +22,17 @@ import graft.functions.NativeFns
   *     parquet footers, unsigned-UTF-8 compared) intersect the batch are
   *     rewritten; everything else is carried forward untouched (manifest
   *     skip-scan ≙ chunk-index skip-scan);
-  *  2. resolve winners CO-LOCATED ([[graft.plans.BucketMergeExec]],
-  *     default): the table side is read IN PLACE — its files are already
+  *  2. resolve winners CO-LOCATED ([[graft.plans.BucketMergeExec]]): the
+  *     table side is read IN PLACE — its files are already
   *     bucket-partitioned with `bucketOf(url) == Spark's partitionId(url)`
   *     by construction ([[LakeTable.bucketOf]]), which the custom scan
   *     truthfully declares, so only the BATCH is shuffled (O(batch) bytes
-  *     regardless of table size) and each task streams its bucket's stored
-  *     rows (k-way LWW-folded when the bucket holds several files, e.g.
-  *     MOR delta history) against the url-sorted batch winners in an O(1)-
-  *     state sorted merge. Fallback (mixed schema
-  *     versions among touched files, or `useColocatedCow=false`): union
-  *     target+batch, `repartition(nBuckets, url)` + `max_by` — the round-1
-  *     single-shuffle formulation, shuffling touched table rows too;
+  *     regardless of table size). Each task folds its bucket's stored files
+  *     with the same k-way LWW reader every SQL read uses
+  *     ([[graft.sql.GraftBucketReader]]: tombstone winners kept, files of
+  *     older schema versions aligned, several versions of a url in one file
+  *     tolerated) and streams the winners against the url-sorted batch
+  *     winners in a sorted merge;
   *  3. a winning delete is persisted as a TOMBSTONE (`_deleted = true`):
   *     the final state must be independent of how the log is split into
   *     batches, and only a durable tombstone beats a late upsert replayed
@@ -45,10 +44,10 @@ import graft.functions.NativeFns
   *     stats from parquet footers, commit with the `(batchId, lineage)`
   *     marker.
   *
-  * Scale: shuffle bounded by batch rows (co-located path); `nBuckets`
-  * sizes rewrite granularity, write parallelism AND per-task merge state
-  * (grow via [[graft.lake.Maintain.rebucket]]); hot-url duplicates
-  * collapse in the per-bucket winners map (the Zipf-head defense).
+  * Scale: shuffle bounded by batch rows; `nBuckets` sizes rewrite
+  * granularity, write parallelism AND per-task merge state (grow via
+  * [[graft.lake.Maintain.rebucket]]); hot-url duplicates collapse in the
+  * batch side's sorted url runs (the Zipf-head defense).
   */
 /** Merge strategy: copy-on-write (rewrite touched buckets each batch — reads
   * amplify writes, zero read overhead) vs merge-on-read (append per-bucket
@@ -61,13 +60,12 @@ case object Cow extends MergeMode
 case object Mor extends MergeMode
 
 /** Per-call merge strategy knobs. The defaults snapshot the process-global
-  * escape hatches ([[Merge.useColocatedCow]], [[Merge.lateMaterialize]]) AT
-  * CALL TIME, so existing callers and the A/B apps that flip the globals
-  * keep working — while callers running CONCURRENT merges in one JVM (or
-  * wanting a mode for exactly one pipeline) pass their own options instead
-  * of racing on the globals. */
+  * escape hatch ([[Merge.lateMaterialize]]) AT CALL TIME, so existing
+  * callers and the A/B apps that flip the global keep working — while
+  * callers running CONCURRENT merges in one JVM (or wanting a mode for
+  * exactly one pipeline) pass their own options instead of racing on the
+  * global. */
 final case class MergeOptions(
-    colocatedCow: Boolean = Merge.useColocatedCow,
     lateMaterialize: Boolean = Merge.lateMaterialize,
     audit: Option[MergeAudit] = None)
 
@@ -104,13 +102,6 @@ object Merge {
     * BENCH_LOCAL.md (resolve cost vs file count); lower it (and/or
     * MidFilesPerBucket) for read-heavy deployments. */
   @volatile var MaxFilesPerBucket = 8
-
-  /** Escape hatch for A/B: when false, COW uses the round-1 union+max_by
-    * shuffle formulation instead of the co-located [[graft.plans.BucketMergeExec]].
-    * Process-wide DEFAULT only — each merge snapshots it into its
-    * [[MergeOptions]] at call time; pass opts explicitly to pin a mode per
-    * pipeline. */
-  @volatile var useColocatedCow: Boolean = true
 
   /** LATE MATERIALIZATION for the dedup shuffle (network-cluster mode,
     * default off): resolve LWW winners over the batch's META projection
@@ -519,23 +510,15 @@ object Merge {
   /** Fold all files of the given buckets into one resolved file per bucket
     * (tombstones retained — GC is Maintain.compact's explicit call). Runs on
     * the MOR HOT PATH (every MaxFilesPerBucket batches per crowded bucket),
-    * so it uses the CO-LOCATED per-bucket resolve — no shuffle; shuffle
-    * fallback only for pre-evolution tables. */
+    * so it uses the CO-LOCATED per-bucket resolve — no shuffle. */
   def compactBuckets(spark: SparkSession, table: LakeTable, buckets: Set[Int]): Snapshot = {
     // pin: a concurrent aggressive expiry must not GC our inputs mid-fold
     val (snap, pinLease) = table.pinCurrent()
     try {
       val nBuckets = snap.nBuckets
-      val (sel, keep) = snap.files.partition(f => buckets.contains(f.bucket))
+      val sel = snap.files.filter(f => buckets.contains(f.bucket))
       if (sel.isEmpty) return snap
-      val logical = TableSchemas.forVersion(snap.schemaVersion)
-      val dataCols = logical.fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-      val resolvedRaw =
-        if (snap.schemaVersion == TableSchemas.current)
-          graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId), Some(buckets))
-        else graft.lake.Resolve.lww(
-          table.readFiles(spark, snap, sel).repartition(nBuckets, col("url")), dataCols)
-      val resolved = resolvedRaw
+      val resolved = graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId), Some(buckets))
         .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
         .sortWithinPartitions(col("url"))
       // unique output dir + replacement-rebase commit: compaction may run
@@ -546,8 +529,9 @@ object Merge {
     } finally pinLease.release()
   }
 
-  /** COPY-ON-WRITE apply: see object doc — union of pruned target files and
-    * the raw batch, one bucket-aligned shuffle, touched buckets rewritten. */
+  /** COPY-ON-WRITE apply: see object doc — pruned target files folded in
+    * place against the batch, one batch-sized shuffle, touched buckets
+    * rewritten. */
   private def applyCow(spark: SparkSession, table: LakeTable, batch: DataFrame,
       batchId: Long, lineage: Seq[PartLineage], opts: MergeOptions,
       emptyBase: Boolean = false): Snapshot = {
@@ -630,41 +614,27 @@ object Merge {
       val aligned = (df: DataFrame) => df.select(allCols.map(c => col(c).cast(
         if (c == "_xt") org.apache.spark.sql.types.BooleanType else typeOf.getOrElse(c, org.apache.spark.sql.types.BooleanType)).as(c)): _*)
 
-      // 3. resolve winners. Default: CO-LOCATED bucket merge — table files
-      //    are bucket-partitioned + url-sorted already, so only the BATCH
-      //    is shuffled (one Exchange, O(batch) bytes); each task streams
-      //    its bucket's files against the batch winners (BucketMergeExec).
-      //    Fallback (mixed schema versions among touched files, or the A/B
-      //    flag): union + one bucket-aligned shuffle + max_by.
-      val sameVersion = touched.forall(_.schemaVersion == snap.schemaVersion)
-      if (timing) System.err.println(s"[timing]   cow path=${if (opts.colocatedCow && sameVersion) "colocated" else "shuffle"} touchedFiles=${touched.size} touchedRows=${touched.map(_.rowCount).sum}")
-      val winners = if (opts.colocatedCow && sameVersion) {
-        val bucketFiles = touched.groupBy(_.bucket).map { case (b, fs) =>
-          b -> fs.map(f => (table.root.resolve(f.path).toString, f.bytes))
-        }
-        // LATE MATERIALIZATION (see lateResolved): pre-resolve batch winners
-        // meta-first and feed THOSE to the exec — its required
-        // HashPartitioning(url, nBuckets) is already satisfied (no extra
-        // exchange), LWW over pre-LWW'd input is idempotent, and the
-        // payload shuffle shrinks to O(winners)
-        val batchSide =
-          if (opts.lateMaterialize && batch.columns.contains("offset") && batch.columns.contains("partition"))
-            aligned(lateResolved(withBucket, srcAligned, nBuckets, dataCols, lineage, opts.audit)
-              .withColumn("_xt", lit(true)))
-          else aligned(srcAligned)
-        graft.plans.BucketMergeStrategy.mergedRows(
-          spark, batchSide, bucketFiles, nBuckets, logical)
-      } else {
-        val target = table.readFiles(spark, snap, touched).withColumn("_xt", lit(false))
-        val unioned = aligned(target).unionByName(aligned(srcAligned))
-        val payload = struct((dataCols.filterNot(_ == "url") ++ TableSchemas.internalNames :+ "_xt").map(col): _*)
-        val seq = struct(col("warc_ts"), col("_seq_offset"), col("_seq_part"))
-        unioned
-          .repartition(nBuckets, col("url"))
-          .groupBy(col("url"))
-          .agg(max_by(payload, seq).as("w"))
-          .select(col("url") +: (dataCols.filterNot(_ == "url") ++ TableSchemas.internalNames :+ "_xt").map(c => col(s"w.$c").as(c)): _*)
+      // 3. resolve winners: CO-LOCATED bucket merge — table files are
+      //    bucket-partitioned + url-sorted already, so only the BATCH is
+      //    shuffled (one Exchange, O(batch) bytes); each task folds its
+      //    bucket's files (any schema version) and streams them against the
+      //    batch winners (BucketMergeExec).
+      if (timing) System.err.println(s"[timing]   cow touchedFiles=${touched.size} touchedRows=${touched.map(_.rowCount).sum}")
+      val bucketFiles = touched.groupBy(_.bucket).map { case (b, fs) =>
+        b -> fs.map(f => (table.root.resolve(f.path).toString, f.bytes, f.schemaVersion))
       }
+      // LATE MATERIALIZATION (see lateResolved): pre-resolve batch winners
+      // meta-first and feed THOSE to the exec — its required
+      // HashPartitioning(url, nBuckets) is already satisfied (no extra
+      // exchange), LWW over pre-LWW'd input is idempotent, and the
+      // payload shuffle shrinks to O(winners)
+      val batchSide =
+        if (opts.lateMaterialize && batch.columns.contains("offset") && batch.columns.contains("partition"))
+          aligned(lateResolved(withBucket, srcAligned, nBuckets, dataCols, lineage, opts.audit)
+            .withColumn("_xt", lit(true)))
+        else aligned(srcAligned)
+      val winners = graft.plans.BucketMergeStrategy.mergedRows(
+        spark, batchSide, bucketFiles, nBuckets, logical)
 
       // 4. finish rows: extract text only for batch-side winners; recompute
       //    content_len; bucket == physical partition id by construction.

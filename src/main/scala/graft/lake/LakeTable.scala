@@ -731,34 +731,29 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     commit(next, Some(snap.commitTsMs))
   }
 
-  /** Read the table at a snapshot (default: current) as a DataFrame in the
-    * CURRENT logical schema. Files written under older physical schemas are
-    * read with their own schema, cast (widening) and null-backfilled
-    * (added columns) — Iceberg-style evolution without Iceberg.
-    * User-facing: multi-version rows (merge-on-read delta files) are
-    * LWW-resolved, tombstones filtered, internal columns dropped. */
+  /** Read the table at a snapshot (default: current) as a DataFrame in
+    * that snapshot's logical schema. Files written under older physical
+    * schemas are read with their own schema, cast (widening) and
+    * null-backfilled (added columns) — Iceberg-style evolution without
+    * Iceberg. User-facing: multi-version rows (merge-on-read delta files)
+    * are LWW-resolved, tombstones filtered, internal columns dropped. */
   def read(spark: SparkSession, snapshotId: Option[Long] = None): DataFrame = {
     val snap = snapshotId.map(snapshot).getOrElse(currentSnapshot)
     // resolve only when some bucket holds >1 file (MOR deltas present);
     // compacted/COW tables skip resolution entirely
-    val needsResolve = snap.files.groupBy(_.bucket).exists(_._2.size > 1)
-    if (needsResolve && snap.schemaVersion == TableSchemas.current) {
+    if (snap.files.groupBy(_.bucket).exists(_._2.size > 1)) {
       // CO-LOCATED resolve-on-read: the same per-bucket k-way sorted merge
       // the SQL scan uses — streaming LWW over url-sorted files, no shuffle,
-      // O(filesPerBucket) memory. (Pre-evolution snapshots fall through to
-      // the shuffle resolve below, which aligns to THEIR logical schema.)
-      val tbl = new graft.sql.GraftSqlTable(this, s"lake:${root.getFileName}")
+      // O(filesPerBucket) memory. Pinned to the snapshot, so the table's
+      // schema is that snapshot's era.
+      val tbl = new graft.sql.GraftSqlTable(this, s"lake:${root.getFileName}",
+        pinnedSnapshot = Some(snap.snapshotId))
       val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-        tbl, None, None,
-        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("snapshotId", snap.snapshotId.toString)))
+        tbl, None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
       return org.apache.spark.sql.GraftBridge.ofRows(spark, rel)
     }
-    val raw = readFiles(spark, snap, snap.files)
-    val dataCols = TableSchemas.forVersion(snap.schemaVersion)
-      .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-    val resolved = if (needsResolve) Resolve.lww(raw, dataCols) else raw
-    resolved.filter(!col("_deleted")).drop(TableSchemas.internalNames: _*)
+    readFiles(spark, snap, snap.files)
+      .filter(!col("_deleted")).drop(TableSchemas.internalNames: _*)
   }
 
   /** Incremental read (CDC-out): rows in data files ADDED between
@@ -889,8 +884,8 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * WRITER INVARIANT: every caller must hand in AT MOST ONE version per
     * url (per-batch dedup, LWW-resolved compaction/rebucket output, resolved
     * catch-up increments). The k-way resolve-on-read paths tolerate
-    * violations, but the single-file fast paths (read without resolve,
-    * BucketFilesRDD pass-through) stream files as unique-url sets. */
+    * violations, but the single-file fast path of [[read]] (no resolve
+    * when every bucket holds one file) streams files as unique-url sets. */
   def writeDataFiles(df: DataFrame, newSnapshotId: Long, schemaVersion: Int): Vector[DataFile] =
     writeDataFilesTo(df, s"s$newSnapshotId", schemaVersion)
 

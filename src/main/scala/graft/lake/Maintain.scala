@@ -40,18 +40,10 @@ object Maintain {
     // resolve first: under merge-on-read a url may have several versions
     // across delta files — the compacted file must hold exactly the winner
     // (read()'s single-file-per-bucket fast path depends on it).
-    // Default: CO-LOCATED per-bucket k-way resolve (tombstone winners kept)
-    // — NO shuffle, the largest maintenance cost at scale; fallback to the
-    // shuffle resolve for pre-evolution tables (alignment to their schema).
-    val df =
-      if (snap.schemaVersion == TableSchemas.current)
-        graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId))
-      else {
-        val dataCols = TableSchemas.forVersion(snap.schemaVersion)
-          .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-        Resolve.lww(table.readFiles(spark, snap, snap.files)
-          .repartition(nBuckets, col("url")), dataCols)
-      }
+    // CO-LOCATED per-bucket k-way resolve (tombstone winners kept, files
+    // aligned to the snapshot's schema version) — NO shuffle, the largest
+    // maintenance cost at scale.
+    val df = graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId))
     val kept =
       if (dropTombstonesOlderThanMicros == Long.MinValue) df
       else df.filter(!col("_deleted") ||
@@ -97,18 +89,11 @@ object Maintain {
     try {
     require(newBuckets >= 1)
     if (newBuckets == snap.nBuckets || snap.files.isEmpty) return snap
-    val dataCols = TableSchemas.forVersion(snap.schemaVersion)
-      .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
     // resolve under the OLD layout first (co-located, tombstones retained —
     // replay safety unchanged), then ONE shuffle of the winners into the
-    // new bucket function; pre-evolution tables resolve through the shuffle
-    val resolved =
-      if (snap.schemaVersion == TableSchemas.current)
-        graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId))
-          .repartition(newBuckets, col("url"))
-      else Resolve.lww(table.readFiles(spark, snap, snap.files)
-        .repartition(newBuckets, col("url")), dataCols)
-    val out = resolved
+    // new bucket function
+    val out = graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId))
+      .repartition(newBuckets, col("url"))
       .withColumn("bucket", LakeTable.bucketOf(col("url"), newBuckets))
       .sortWithinPartitions(col("url"))
     val nextId = snap.snapshotId + 1
@@ -166,15 +151,8 @@ object Maintain {
       val tag = s"rb${java.util.UUID.randomUUID().toString.take(8)}"
       // step 2: resolve as of s0 under the old layout, one shuffle into the
       // new function (same formulation as the offline rebucket)
-      val dataCols = TableSchemas.forVersion(s0.schemaVersion)
-        .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-      val resolved =
-        if (s0.schemaVersion == TableSchemas.current)
-          graft.sql.GraftRead.rawResolved(spark, table, Some(s0.snapshotId))
-            .repartition(newBuckets, col("url"))
-        else Resolve.lww(table.readFiles(spark, s0, s0.files)
-          .repartition(newBuckets, col("url")), dataCols)
-      val base = resolved
+      val base = graft.sql.GraftRead.rawResolved(spark, table, Some(s0.snapshotId))
+        .repartition(newBuckets, col("url"))
         .withColumn("bucket", LakeTable.bucketOf(col("url"), newBuckets))
         .sortWithinPartitions(col("url"))
       val baseFiles = table.writeDataFilesTo(base, s"$tag-base", s0.schemaVersion)

@@ -7,8 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descendi
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, HashPartitioning, Partitioning, StatefulOpClusteredDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceRDD
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.lake.Resolve
+import graft.sql.{GraftBucketPartition, GraftBucketReader, GraftBucketReaderFactory}
 
 /** Co-located COW merge: the round-1 engine's one hazard at steady state was
   * that every batch re-SHUFFLED the touched TABLE rows through the
@@ -23,10 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `outputPartitioning = HashPartitioning(url, nBuckets)` and
   *    `outputOrdering = url ASC`. Because the declarations match the
   *    physical layout, EnsureRequirements inserts NO exchange and NO sort
-  *    above it. A bucket holding SEVERAL files (MOR delta history crossed
-  *    into a COW apply, pruning carry-overs) is k-way LWW-FOLDED while
-  *    streaming — one winner row per url, tombstone winners kept — so the
-  *    scan's output has unique, sorted urls whatever the file count.
+  *    above it. Every bucket streams through the raw-mode
+  *    [[graft.sql.GraftBucketReader]] — the same fold every SQL read and
+  *    compaction uses — so its files (MOR delta history crossed into a COW
+  *    apply, pruning carry-overs, several versions of a url in one file,
+  *    files of older schema versions) come out LWW-folded and aligned to
+  *    the table's logical schema: one winner row per url, tombstone
+  *    winners kept, urls unique and sorted whatever the file count.
   *  - [[BucketMergeExec]] — a binary node requiring both sides hash-
   *    clustered by url into exactly nBuckets partitions
   *    (`StatefulOpClusteredDistribution`, which pins the EXACT
@@ -48,15 +55,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`/root/reference/sink/src/main/java/com/spredfast/kafka/connect/s3/S3Writer.java:47-109`).
   *
   * Scale: shuffle bytes per batch drop from O(touched table rows + batch)
-  * to O(batch); per-task memory is O(1) (two live head rows + the sorter's
-  * own spillable pages). Output is url-sorted per bucket, so the writer's
-  * `sortWithinPartitions(url)` above this plan is elided as redundant.
+  * to O(batch); per-task memory is one head row per file in the bucket
+  * plus the sorter's own spillable pages. Output is url-sorted per bucket,
+  * so the writer's `sortWithinPartitions(url)` above this plan is elided
+  * as redundant.
   */
 final case class BucketMergeLogical(
     batch: LogicalPlan, // aligned batch: table columns ++ `_xt = true`
-    bucketFiles: Map[Int, Seq[(String, Long)]], // bucket -> (absolute path, bytes)
+    bucketFiles: Map[Int, Seq[(String, Long, Int)]], // bucket -> (absolute path, bytes, schemaVersion)
     nBuckets: Int,
-    tableSchema: StructType) // physical schema of the table files (no _xt)
+    tableSchema: StructType) // logical schema of the table snapshot (no _xt)
   extends UnaryNode {
   override def child: LogicalPlan = batch
   /** Batch layout, with nullability WIDENED by the table schema: the merge
@@ -107,7 +115,7 @@ object BucketMergeStrategy extends SparkStrategy {
   /** Build the merged-winners DataFrame over a batch already aligned to
     * (table columns ++ _xt). */
   def mergedRows(spark: SparkSession, batchAligned: DataFrame,
-      bucketFiles: Map[Int, Seq[(String, Long)]], nBuckets: Int,
+      bucketFiles: Map[Int, Seq[(String, Long, Int)]], nBuckets: Int,
       tableSchema: StructType): DataFrame = {
     ensureRegistered(spark)
     org.apache.spark.sql.GraftBridge.ofRows(spark,
@@ -117,16 +125,15 @@ object BucketMergeStrategy extends SparkStrategy {
 
 /** Reads the given parquet files with one task per BUCKET, emitting LWW-
   * folded rows (unique urls, url-sorted, tombstone winners kept) in the
-  * physical schema. The partitioning declaration is the load-bearing
+  * table's logical schema. The partitioning declaration is the load-bearing
   * invariant: file bucket ids were assigned by `bucketOf(url) ==
   * HashPartitioning(url, n).partitionIdExpression`, so "partition i holds
   * exactly the rows whose url hashes to i" is TRUE and Catalyst may elide
   * the exchange; likewise files are written url-sorted, so the k-way fold
-  * emits in url order and the ordering declaration is truthful. Uses
-  * Spark's own (vectorized) parquet reader. */
+  * emits in url order and the ordering declaration is truthful. */
 final case class BucketTableScanExec(
     output: Seq[Attribute],
-    bucketFiles: Map[Int, Seq[(String, Long)]],
+    bucketFiles: Map[Int, Seq[(String, Long, Int)]],
     nBuckets: Int,
     tableSchema: StructType)
   extends LeafExecNode {
@@ -139,143 +146,16 @@ final case class BucketTableScanExec(
 
   override def outputOrdering: Seq[SortOrder] = Seq(SortOrder(urlAttr, Ascending))
 
+  /** Partition i folds bucket i's files through a raw-mode
+    * [[GraftBucketReader]]; a bucket with no files is empty. */
   override protected def doExecute(): RDD[InternalRow] = {
-    val spark = SparkSession.active
-    // Spark's parquet reader closure: driver-built, broadcast-safe, handles
-    // schema-by-name matching, predicate-free full reads of our own files.
-    val readFile = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = tableSchema,
-        partitionSchema = new StructType(),
-        requiredSchema = tableSchema,
-        filters = Nil,
-        // rows, not ColumnarBatch: the merge consumes row iterators (the
-        // vectorized reader still runs underneath, yielding its batch rows)
-        options = Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = spark.sessionState.newHadoopConf())
-    val filesByBucket: Array[Array[(String, Long)]] =
-      Array.tabulate(nBuckets)(b => bucketFiles.getOrElse(b, Nil).toArray)
-    def fieldIdx(n: String): Int = tableSchema.fieldNames.indexOf(n)
-    new BucketFilesRDD(sparkContext, filesByBucket, readFile,
-      fieldIdx("url"), fieldIdx("warc_ts"), fieldIdx("_seq_offset"), fieldIdx("_seq_part"))
-  }
-}
-
-/** nBuckets partitions; partition i reads bucket i's files. A single-file
-  * bucket streams through untouched (COW output already has unique sorted
-  * urls); a multi-file bucket (MOR deltas, carry-overs) is k-way LWW-folded
-  * so downstream sees exactly one winner per url — concatenating would
-  * expose duplicate urls with stale versions to the merge. */
-private final class BucketFilesRDD(
-    sc: org.apache.spark.SparkContext,
-    filesByBucket: Array[Array[(String, Long)]],
-    readFile: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow],
-    urlIdx: Int, tsIdx: Int, offIdx: Int, partIdx: Int)
-  extends RDD[InternalRow](sc, Nil) {
-
-  override protected def getPartitions: Array[org.apache.spark.Partition] =
-    Array.tabulate(filesByBucket.length)(i => new org.apache.spark.Partition { def index: Int = i })
-
-  private def readOne(file: (String, Long)): Iterator[InternalRow] = {
-    val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
-      InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPathString(file._1),
-      0L, file._2)
-    // OPTION_RETURNING_BATCH=false → the reader yields rows, never batches
-    readFile(pf)
-  }
-
-  override def compute(split: org.apache.spark.Partition,
-      context: org.apache.spark.TaskContext): Iterator[InternalRow] = {
-    val files = filesByBucket(split.index)
-    if (files.length <= 1) files.iterator.flatMap(readOne)
-    else new KWayLwwIterator(files.map(readOne), urlIdx, tsIdx, offIdx, partIdx)
-  }
-}
-
-/** Streaming k-way LWW fold over url-sorted row iterators: emits the
-  * `(warc_ts, _seq_offset, _seq_part)`-max row per url, in url order,
-  * including tombstone winners. The winner is snapshotted (ONE row copy per
-  * emitted url — reader rows reuse buffers) so every in-group file can be
-  * drained PAST its whole url run before emission: a file may hold several
-  * versions of one url (a multi-batch increment), and a deferred advance
-  * would emit the group winner before those run rows could out-resolve it.
-  * This fold only runs for multi-file buckets (MOR deltas / carry-overs);
-  * the single-file steady-state path streams untouched, copy-free. */
-private final class KWayLwwIterator(
-    its: Array[Iterator[InternalRow]],
-    urlIdx: Int, tsIdx: Int, offIdx: Int, partIdx: Int)
-  extends Iterator[InternalRow] {
-
-  private val heads: Array[InternalRow] = its.map(it => if (it.hasNext) it.next() else null)
-  private var nextRow: InternalRow = _
-  private var computed = false
-
-  // seq(a) > seq(b) by (warc_ts, offset, partition) — S3Offset order
-  private def wins(a: InternalRow, b: InternalRow): Boolean = {
-    val ta = a.getLong(tsIdx); val tb = b.getLong(tsIdx)
-    if (ta != tb) return ta > tb
-    val oa = a.getLong(offIdx); val ob = b.getLong(offIdx)
-    if (oa != ob) return oa > ob
-    a.getInt(partIdx) > b.getInt(partIdx)
-  }
-
-  private def compute(): Unit = {
-    var minI = -1
-    var i = 0
-    while (i < heads.length) {
-      if (heads(i) != null &&
-        (minI < 0 || heads(i).getUTF8String(urlIdx).compareTo(heads(minI).getUTF8String(urlIdx)) < 0))
-        minI = i
-      i += 1
-    }
-    if (minI < 0) { nextRow = null; computed = true; return }
-    // `u` is a view into heads(minI)'s buffer — safe: nothing advances here
-    val u = heads(minI).getUTF8String(urlIdx)
-    val inGroup = new Array[Boolean](heads.length)
-    inGroup(minI) = true
-    var winner = heads(minI)
-    var j = minI + 1
-    while (j < heads.length) {
-      if (heads(j) != null && heads(j).getUTF8String(urlIdx).compareTo(u) == 0) {
-        inGroup(j) = true
-        if (wins(heads(j), winner)) winner = heads(j)
-      }
-      j += 1
-    }
-    // snapshot the winner, then drain each in-group file past its url run,
-    // folding any further same-url rows (the copy also makes the emitted
-    // row stable regardless of later advances — no deferred bookkeeping)
-    var safe = winner.copy()
-    var safeUrl = safe.getUTF8String(urlIdx)
-    var k = 0
-    while (k < heads.length) {
-      if (inGroup(k)) {
-        heads(k) = if (its(k).hasNext) its(k).next() else null
-        while (heads(k) != null && heads(k).getUTF8String(urlIdx).compareTo(safeUrl) == 0) {
-          if (wins(heads(k), safe)) {
-            safe = heads(k).copy()
-            safeUrl = safe.getUTF8String(urlIdx)
-          }
-          heads(k) = if (its(k).hasNext) its(k).next() else null
-        }
-      }
-      k += 1
-    }
-    nextRow = safe
-    computed = true
-  }
-
-  override def hasNext: Boolean = {
-    if (!computed) compute()
-    nextRow != null
-  }
-
-  override def next(): InternalRow = {
-    if (!hasNext) throw new NoSuchElementException("KWayLwwIterator exhausted")
-    computed = false
-    nextRow
+    val parts = Seq.tabulate(nBuckets)(b =>
+      Seq(GraftBucketPartition(b, bucketFiles.getOrElse(b, Nil), raw = true)))
+    val readers = GraftBucketReader.parquetReaders(SparkSession.active, tableSchema,
+      bucketFiles.values.flatten.map(_._3).toSeq, filters = Nil)
+    new DataSourceRDD(sparkContext, parts,
+      new GraftBucketReaderFactory(readers, tableSchema, tableSchema),
+      columnarReads = false, customMetrics = Map.empty)
   }
 }
 
@@ -316,10 +196,8 @@ final case class BucketMergeExec(tableScan: SparkPlan, batch: SparkPlan, nBucket
     * declared ordering (no sort inserted). */
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     Seq(SortOrder(urlOf(tableScan), Ascending)),
-    Seq(SortOrder(urlOf(batch), Ascending),
-      SortOrder(battr("warc_ts"), Descending),
-      SortOrder(battr("_seq_offset"), Descending),
-      SortOrder(battr("_seq_part"), Descending)))
+    SortOrder(urlOf(batch), Ascending) +:
+      Resolve.OrderCols.map(c => SortOrder(battr(c), Descending)))
 
   override def outputPartitioning: Partitioning =
     HashPartitioning(Seq(urlOf(batch)), nBuckets)
@@ -354,13 +232,6 @@ final case class BucketMergeExec(tableScan: SparkPlan, batch: SparkPlan, nBucket
       // resolve, O(1) state. All head advances are DEFERRED to the start of
       // the following call so an emitted row stays valid until the caller's
       // next next() (reader/sorter rows reuse buffers).
-      def wins(a: InternalRow, b: InternalRow): Boolean = {
-        val ta = a.getLong(tsIdx); val tb = b.getLong(tsIdx)
-        if (ta != tb) return ta > tb
-        val oa = a.getLong(offIdx); val ob = b.getLong(offIdx)
-        if (oa != ob) return oa > ob
-        a.getInt(partIdx) > b.getInt(partIdx)
-      }
       new Iterator[InternalRow] {
         private val falseRow = new GenericInternalRow(Array[Any](false))
         private val joined = new JoinedRow
@@ -406,7 +277,7 @@ final case class BucketMergeExec(tableScan: SparkPlan, batch: SparkPlan, nBucket
             // same url: batch winner is bb; ties keep the stored row
             skipUrl = bb.getUTF8String(urlIdx).clone()
             tbConsumed = true
-            if (wins(bb, tb)) bb else joined(tb, falseRow)
+            if (Resolve.newerRow(bb, tb, tsIdx, offIdx, partIdx)) bb else joined(tb, falseRow)
           }
         }
       }

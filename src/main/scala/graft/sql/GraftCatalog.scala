@@ -397,12 +397,15 @@ final class GraftSqlTable(val lake: LakeTable, ident: String,
 
 /** Internal maintenance read: the co-located per-bucket LWW resolve with
   * the FULL schema (internal columns, tombstone winners kept) — what
-  * compaction consumes. No shuffle, O(filesPerBucket) memory per task. */
+  * compaction consumes. No shuffle, O(filesPerBucket) memory per task.
+  * The schema follows the snapshot's logical version, so a pre-evolution
+  * snapshot reads (and rewrites) in its own era's columns. */
 private[graft] final class GraftRawTable(lake: LakeTable,
     snapshotId: Option[Long], buckets: Option[Set[Int]])
   extends Table with SupportsRead {
   override def name(): String = s"graft-raw(${lake.root})"
-  override def schema(): StructType = TableSchemas.forVersion(TableSchemas.current)
+  override def schema(): StructType = TableSchemas.forVersion(
+    snapshotId.map(lake.snapshot).getOrElse(lake.currentSnapshot).schemaVersion)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -410,10 +413,8 @@ private[graft] final class GraftRawTable(lake: LakeTable,
 }
 
 object GraftRead {
-  /** Raw-resolved rows of a snapshot (default current), optionally
-    * restricted to a bucket subset. Requires the snapshot to be at the
-    * current schema version (callers fall back to the shuffle resolve
-    * otherwise). */
+  /** Raw-resolved rows of a snapshot (default current) in that snapshot's
+    * logical schema, optionally restricted to a bucket subset. */
   def rawResolved(spark: SparkSession, lake: LakeTable,
       snapshotId: Option[Long] = None,
       buckets: Option[Set[Int]] = None): org.apache.spark.sql.DataFrame =
@@ -426,7 +427,6 @@ object GraftRead {
 final case class GraftBucketPartition(
     bucket: Int,
     files: Seq[(String, Long, Int)], // (absolute path, bytes, schemaVersion)
-    currentVersion: Int,
     raw: Boolean = false,
     limit: Option[Int] = None)
   extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
@@ -667,7 +667,7 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
     selectedByBucket.toSeq.sortBy(_._1).map { case (b, fs) =>
       GraftBucketPartition(b,
         fs.map(f => (lake.root.resolve(f.path).toString, f.bytes, f.schemaVersion)),
-        snap.schemaVersion, raw, pushedLimit)
+        raw, pushedLimit)
     }.toArray
   }
 
@@ -715,7 +715,6 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
     val out = readSchema()
     // the merge reader's WORKING schema: the projected columns plus the
     // always-needed resolution internals, in the logical layout's order
@@ -723,32 +722,16 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
     val scanSchema = StructType(logical.fields.filter(f =>
       out.fieldNames.contains(f.name) ||
         GraftBucketReader.MergeInternals.contains(f.name)))
-    // one driver-built parquet reader closure per physical schema version
-    // (same snapshot object as planInputPartitions — see `snap`); each
-    // requests only the working columns it physically holds
-    val versions = snap.files.map(_.schemaVersion).distinct.sorted
-    val readers = versions.map { v =>
-      val phys = TableSchemas.forVersion(v)
-      val physRequired = StructType(
-        scanSchema.fields.filter(f => phys.fieldNames.contains(f.name))
-          .map(f => phys.fields(phys.fieldNames.indexOf(f.name))))
-      v -> new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        .buildReaderWithPartitionValues(
-          sparkSession = spark,
-          dataSchema = phys,
-          partitionSchema = new StructType(),
-          requiredSchema = physRequired,
-          // row-group/page-level skipping INSIDE admitted files, built from
-          // the same sound-for-LWW set the file prune uses: url equality/IN
-          // (other urls' rows never affect a looked-up url's winner) and
-          // the warc_ts LOWER bound (losers it drops lose anyway; winners
-          // it drops are residual-filtered). Parquet quietly skips the
-          // predicate on files whose physical type can't evaluate it
-          // (legacy INT96) — both columns exist in every schema version.
-          filters = urlRowFilters ++ tsRowFilters,
-          options = Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          hadoopConf = spark.sessionState.newHadoopConf())
-    }.toMap
+    // same snapshot object as planInputPartitions (see `snap`). Row-group/
+    // page-level skipping INSIDE admitted files uses the same sound-for-LWW
+    // set the file prune uses: url equality/IN (other urls' rows never
+    // affect a looked-up url's winner) and the warc_ts LOWER bound (losers
+    // it drops lose anyway; winners it drops are residual-filtered).
+    // Parquet quietly skips the predicate on files whose physical type
+    // can't evaluate it (legacy INT96) — both columns exist in every
+    // schema version.
+    val readers = GraftBucketReader.parquetReaders(SparkSession.active, scanSchema,
+      snap.files.map(_.schemaVersion), urlRowFilters ++ tsRowFilters)
     new GraftBucketReaderFactory(readers, scanSchema, out)
   }
 }
@@ -765,7 +748,7 @@ object GraftLakeScan {
 }
 
 final class GraftBucketReaderFactory(
-    readers: Map[Int, org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]],
+    readers: Map[Int, GraftBucketReader.FileReader],
     scanSchema: StructType, outSchema: StructType)
   extends PartitionReaderFactory {
 
@@ -780,13 +763,42 @@ object GraftBucketReader {
     * the projection: the group key, the winner total order, and the
     * tombstone flag. */
   val MergeInternals: Set[String] =
-    Set("url", "warc_ts", "_seq_part", "_seq_offset", "_deleted")
+    Set("url", "_deleted") ++ graft.lake.Resolve.OrderCols
+
+  /** A driver-built parquet reader closure: one file in, rows out. */
+  type FileReader = org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]
+
+  /** One parquet reader per physical schema version among `versions`, each
+    * requesting only the columns of `scanSchema` (the reader's working
+    * layout) that its version physically holds, with `filters` pushed into
+    * parquet. Spark's own (vectorized) reader, asked for rows. */
+  def parquetReaders(spark: SparkSession, scanSchema: StructType,
+      versions: Seq[Int], filters: Seq[org.apache.spark.sql.sources.Filter])
+      : Map[Int, FileReader] =
+    versions.distinct.map { v =>
+      val phys = TableSchemas.forVersion(v)
+      val physRequired = StructType(
+        scanSchema.fields.filter(f => phys.fieldNames.contains(f.name))
+          .map(f => phys.fields(phys.fieldNames.indexOf(f.name))))
+      v -> new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .buildReaderWithPartitionValues(
+          sparkSession = spark,
+          dataSchema = phys,
+          partitionSchema = new StructType(),
+          requiredSchema = physRequired,
+          filters = filters,
+          // rows, not ColumnarBatch: the fold consumes row iterators
+          options = Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          hadoopConf = spark.sessionState.newHadoopConf())
+    }.toMap
 }
 
-/** Streaming k-way LWW merge over one bucket's url-sorted files. */
+/** Streaming k-way LWW merge over one bucket's url-sorted files: the one
+  * fold of stored files, behind every SQL read, compaction and the COW
+  * merge's table side ([[graft.plans.BucketTableScanExec]]). */
 final class GraftBucketReader(
     p: GraftBucketPartition,
-    readers: Map[Int, org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]],
+    readers: Map[Int, GraftBucketReader.FileReader],
     scanSchema: StructType, outSchema: StructType)
   extends PartitionReader[InternalRow] {
 
@@ -843,14 +855,6 @@ final class GraftBucketReader(
       BoundReference(srcIdx, full.fields(srcIdx).dataType, full.fields(srcIdx).nullable): Expression
     })
 
-  private def wins(a: InternalRow, b: InternalRow): Boolean = {
-    val ta = a.getLong(tsIdx); val tb = b.getLong(tsIdx)
-    if (ta != tb) return ta > tb
-    val oa = a.getLong(offIdx); val ob = b.getLong(offIdx)
-    if (oa != ob) return oa > ob
-    a.getInt(partIdx) > b.getInt(partIdx)
-  }
-
   private var current: InternalRow = _
   // pushed LIMIT: stop draining once this partition has emitted its quota
   // (every already-emitted row is a complete, true winner — see pushLimit)
@@ -879,7 +883,7 @@ final class GraftBucketReader(
       while (j < heads.length) {
         if (heads(j) != null && heads(j).getUTF8String(urlIdx).compareTo(u) == 0) {
           inGroup(j) = true
-          if (wins(heads(j), winner)) winner = heads(j)
+          if (graft.lake.Resolve.newerRow(heads(j), winner, tsIdx, offIdx, partIdx)) winner = heads(j)
         }
         j += 1
       }
@@ -907,7 +911,7 @@ final class GraftBucketReader(
           while (heads(k) != null && heads(k).getUTF8String(urlIdx).compareTo(curUrl) == 0) {
             val h = heads(k)
             val ts = h.getLong(tsIdx); val off = h.getLong(offIdx); val pt = h.getInt(partIdx)
-            if (ts > bTs || (ts == bTs && (off > bOff || (off == bOff && pt > bPart)))) {
+            if (graft.lake.Resolve.newer(ts, off, pt, bTs, bOff, bPart)) {
               current = outProj(h)
               bTs = ts; bOff = off; bPart = pt
               deleted = h.getBoolean(delIdx)

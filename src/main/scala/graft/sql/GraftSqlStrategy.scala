@@ -10,7 +10,6 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 
 import graft.cdc.{Merge, MergeMode}
-import graft.lake.{Resolve, TableSchemas}
 
 /** Plans `MERGE INTO graft.<table> … ` onto the engine's Merge operator.
   *
@@ -232,19 +231,10 @@ private[sql] object GraftRowLevel {
     })
 
   /** The table's LWW-resolved rows WITH internal envelope columns
-    * (`_seq_part`, `_seq_offset`, `_deleted`): the co-located raw scan at
-    * the current schema version, shuffle resolve for pre-evolution
-    * snapshots (the compactBuckets fallback). */
-  def resolvedWithEnvelope(spark: SparkSession, lake: graft.lake.LakeTable): DataFrame = {
-    val snap = lake.currentSnapshot
-    if (snap.schemaVersion == TableSchemas.current)
-      GraftRead.rawResolved(spark, lake)
-    else {
-      val dataCols = TableSchemas.forVersion(snap.schemaVersion)
-        .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-      Resolve.lww(lake.readRaw(spark).repartition(snap.nBuckets, col("url")), dataCols)
-    }
-  }
+    * (`_seq_part`, `_seq_offset`, `_deleted`), in the current snapshot's
+    * logical schema: the co-located raw scan. */
+  def resolvedWithEnvelope(spark: SparkSession, lake: graft.lake.LakeTable): DataFrame =
+    GraftRead.rawResolved(spark, lake, Some(lake.currentSnapshotId))
 
   /** Debug hook (the [[graft.cdc.Merge.explainNext]] discipline): when set,
     * the next row-level command stashes its matched-row read here so specs

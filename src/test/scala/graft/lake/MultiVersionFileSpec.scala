@@ -15,12 +15,33 @@ import graft.cdc.Ingest
   * this spec hand-crafts a delta file holding TWO versions of each probed
   * url — winner first in one run, winner last in the other — and drives it
   * through every resolve path: the co-located catalog read
-  * (GraftBucketReader), the co-located COW merge fold (KWayLwwIterator via
-  * BucketMergeExec), and compaction (raw-mode resolve). Each must fold the
-  * whole url run, not just the head row per file. */
+  * (GraftBucketReader), the co-located COW merge (BucketMergeExec, whose
+  * table side is the same reader in raw mode), and compaction (raw-mode
+  * resolve). Each must fold the whole url run, not just the head row per
+  * file — also when the crafted file is its bucket's only file. */
 class MultiVersionFileSpec extends SparkSpec {
 
   private val usPerSec = 1000000L
+
+  /** A table row (v2 schema + bucket) for crafted files. */
+  private def row(u: String, ts: Timestamp, html: Array[Byte], text: String,
+      off: Long, del: Boolean, nBuckets: Int): Row =
+    Row(u, ts, html, if (del) null else text,
+      if (del || html == null) null else html.length.toLong,
+      "en", 9, off, del, LakeTable.bucketIdOf(u, nBuckets))
+
+  private val craftedSchema =
+    StructType(TableSchemas.v2.fields :+ StructField("bucket", IntegerType))
+
+  /** The raw change-event layout a merge batch carries. */
+  private val batchSchema = StructType(Seq(
+    StructField("partition", IntegerType, nullable = false),
+    StructField("offset", LongType, nullable = false),
+    StructField("op", StringType, nullable = false),
+    StructField("url", StringType, nullable = false),
+    StructField("warc_ts", TimestampType, nullable = false),
+    StructField("html", BinaryType, nullable = true),
+    StructField("lang", StringType, nullable = true)))
 
   test("readers LWW-resolve multiple versions of a url inside ONE file") {
     val p = GenProfile.uniformSmall().copy(partitions = 2, eventsPerPartition = 1500)
@@ -47,19 +68,14 @@ class MultiVersionFileSpec extends SparkSpec {
     //        file order (offset sort below) — expect urlA to disappear;
     //  urlB: tombstone at +1s, live update at +2s (winner), winner LAST —
     //        expect urlB to carry the new text.
-    val schema = StructType(TableSchemas.v2.fields :+ StructField("bucket", IntegerType))
-    def row(u: String, ts: Timestamp, html: Array[Byte], text: String,
-        off: Long, del: Boolean): Row =
-      Row(u, ts, html, if (del) null else text,
-        if (del || html == null) null else html.length.toLong,
-        "en", 9, off, del, LakeTable.bucketIdOf(u, snap0.nBuckets))
+    val n = snap0.nBuckets
     val rows = Seq(
-      row(urlA, bumped(urlA, 2), null, null, off = 10L, del = true), // winner
-      row(urlA, bumped(urlA, 1), "<p>stale A</p>".getBytes, "stale A", off = 20L, del = false),
-      row(urlB, bumped(urlB, 1), null, null, off = 10L, del = true),
-      row(urlB, bumped(urlB, 2), "<p>new B</p>".getBytes, "new B", off = 20L, del = false)) // winner
+      row(urlA, bumped(urlA, 2), null, null, off = 10L, del = true, n), // winner
+      row(urlA, bumped(urlA, 1), "<p>stale A</p>".getBytes, "stale A", off = 20L, del = false, n),
+      row(urlB, bumped(urlB, 1), null, null, off = 10L, del = true, n),
+      row(urlB, bumped(urlB, 2), "<p>new B</p>".getBytes, "new B", off = 20L, del = false, n)) // winner
     val crafted = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
+        spark.sparkContext.parallelize(rows, 1), craftedSchema)
       .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
     val files = table.writeDataFilesTo(crafted, "mvf-delta", TableSchemas.current)
     table.commitAppend(files.map(_.copy(tier = DataFile.TierDelta)), None)
@@ -73,17 +89,10 @@ class MultiVersionFileSpec extends SparkSpec {
     assert(s1.size == before.size - 1)
     (urls.drop(2)).foreach(u => assert(s1(u) == before(u)._2))
 
-    // path 2: co-located COW merge (KWayLwwIterator run-drain) — the batch
-    // touches urlB's bucket, so its base + crafted delta k-way fold feeds
-    // the merge; urlA's bucket stays multi-file and unread by the merge
-    val batchSchema = StructType(Seq(
-      StructField("partition", IntegerType, nullable = false),
-      StructField("offset", LongType, nullable = false),
-      StructField("op", StringType, nullable = false),
-      StructField("url", StringType, nullable = false),
-      StructField("warc_ts", TimestampType, nullable = false),
-      StructField("html", BinaryType, nullable = true),
-      StructField("lang", StringType, nullable = true)))
+    // path 2: co-located COW merge (GraftBucketReader run-drain under
+    // BucketMergeExec) — the batch touches urlB's bucket, so its base +
+    // crafted delta k-way fold feeds the merge; urlA's bucket stays
+    // multi-file and unread by the merge
     val batch = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
       Row(0, 0L, "upsert", urlB, bumped(urlB, 3), "<p>cow B</p>".getBytes, "en")), 1), batchSchema)
     graft.cdc.Merge(spark, table, batch, batchId = 9999L,
@@ -101,5 +110,42 @@ class MultiVersionFileSpec extends SparkSpec {
     assert(perUrl == 1L, s"compaction must emit one version per url, saw $perUrl")
     val s3 = state()
     assert(s3 == s2)
+  }
+
+  test("COW merge folds a multi-version run in its bucket's ONLY file") {
+    val table = LakeTable.create(tmpDir("mvf-single"), nBuckets = 4)
+    // two urls of one bucket, each with a two-version run in one file:
+    // urlU's winner LAST (the COW batch below overwrites it anyway), urlW's
+    // winner FIRST (untouched by the batch — the merge streams it through)
+    val urls = Iterator.from(0).map(i => s"https://mvf.example/p$i")
+    val urlU = urls.next()
+    val b = LakeTable.bucketIdOf(urlU, 4)
+    val urlW = urls.find(u => LakeTable.bucketIdOf(u, 4) == b).get
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+    def at(s: Long) = new Timestamp(t0.getTime + s * 1000)
+    val rows = Seq(
+      row(urlU, at(1), "<p>old U</p>".getBytes, "old U", off = 10L, del = false, 4),
+      row(urlU, at(2), "<p>new U</p>".getBytes, "new U", off = 20L, del = false, 4), // winner
+      row(urlW, at(2), "<p>new W</p>".getBytes, "new W", off = 10L, del = false, 4), // winner
+      row(urlW, at(1), "<p>old W</p>".getBytes, "old W", off = 20L, del = false, 4))
+    val crafted = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), craftedSchema)
+      .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
+    val files = table.writeDataFilesTo(crafted, "mvf-single", TableSchemas.current)
+    table.commitAppend(files, None)
+    assert(table.currentSnapshot.files.map(_.bucket) == Seq(b),
+      "the crafted file must be its bucket's only file")
+
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(0, 0L, "upsert", urlU, at(3), "<p>cow U</p>".getBytes, "en")), 1), batchSchema)
+    graft.cdc.Merge(spark, table, batch, batchId = 1L,
+      lineage = Seq(PartLineage(0, 0L, 1L, 1L)), mode = graft.cdc.Cow)
+
+    val perUrl = table.readRaw(spark).groupBy(col("url")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perUrl == Map(urlU -> 1L, urlW -> 1L),
+      s"the COW rewrite must keep one version per url, saw $perUrl")
+    val state = table.read(spark).collect()
+      .map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
+    assert(state == Map(urlU -> "cow U", urlW -> "new W"))
   }
 }

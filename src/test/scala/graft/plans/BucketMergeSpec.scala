@@ -1,27 +1,49 @@
 package graft.plans
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Oracle, SparkSpec}
 import graft.binlog.{BinlogRead, ChangeEventGen, GenProfile}
 import graft.cdc.{Cow, Ingest, Merge, Mor}
 import graft.lake.LakeTable
+import graft.model.{ChangeEvent, TextExtract}
 
 /** The co-located COW merge's structural guarantees:
   *  - the TABLE side is read in-place (no Exchange above BucketTableScan) —
   *    only the batch is shuffled, so per-batch shuffle bytes are O(batch)
   *    regardless of table size;
-  *  - results are identical to the shuffle (union+max_by) formulation.
+  *  - the stored state equals the single-threaded oracle LWW fold of the
+  *    same events, tombstone winners included.
   */
 class BucketMergeSpec extends SparkSpec {
+
+  private def profile(n: Int) = GenProfile.uniformSmall().copy(partitions = 2, eventsPerPartition = n)
 
   private def mkBinlog(n: Int) = {
     val work = tmpDir("bmspec")
     val binlog = work.resolve("binlog")
-    ChangeEventGen.writeSegments(
-      GenProfile.uniformSmall().copy(partitions = 2, eventsPerPartition = n), binlog)
+    ChangeEventGen.writeSegments(profile(n), binlog)
     (work, binlog)
   }
+
+  /** A table's stored rows, tombstones included, in the columns the oracle
+    * reproduces. */
+  private def rawState(t: LakeTable): Array[String] = t.readRaw(spark)
+    .select(col("url"), unix_micros(col("warc_ts")).as("ts"), col("text"),
+      col("content_len"), col("_seq_part"), col("_seq_offset"), col("_deleted"))
+    .collect().map(_.toString).sorted
+
+  /** [[rawState]] as the oracle LWW fold of every event of `profile(n)`
+    * predicts it: one row per url, a winning delete kept as a tombstone
+    * (null text and content_len). */
+  private def oracleState(n: Int): Array[String] =
+    Oracle.fold(ChangeEventGen.allEvents(profile(n))).values.map { w =>
+      val live = w.op == ChangeEvent.OpUpsert
+      Row(w.url, w.warcMicros, if (live) TextExtract.extract(w.html) else null,
+        if (w.html == null) null else w.html.length.toLong,
+        w.partition, w.offset, !live).toString
+    }.toArray.sorted
 
   test("table side reads without an Exchange; exactly one Exchange in the merge plan") {
     val (work, binlog) = mkBinlog(1500) // per-partition offsets 0..1499
@@ -46,59 +68,40 @@ class BucketMergeSpec extends SparkSpec {
     assert(exchanges >= 1)
   }
 
-  test("co-located merge state == shuffle-merge state, including tombstones and seq columns") {
+  test("co-located merge state == oracle LWW fold, including tombstones and seq columns") {
     val (work, binlog) = mkBinlog(2000)
-
-    def replay(root: java.nio.file.Path, colocated: Boolean) = {
-      Merge.useColocatedCow = colocated
-      try {
-        val t = LakeTable.create(root, nBuckets = 8)
-        var b = 0L
-        (0L until 2000L by 500L).foreach { from =>
-          Ingest.applyBatch(spark, t)(
-            BinlogRead.range(spark, binlog.toString, from, from + 500), b)
-          b += 1
-        }
-        t.readRaw(spark)
-          .select(col("url"), unix_micros(col("warc_ts")).as("ts"), col("text"),
-            col("content_len"), col("_seq_part"), col("_seq_offset"), col("_deleted"))
-          .collect().map(_.toString).sorted
-      } finally Merge.useColocatedCow = true
+    val t = LakeTable.create(work.resolve("co"), nBuckets = 8)
+    var b = 0L
+    (0L until 2000L by 500L).foreach { from =>
+      Ingest.applyBatch(spark, t)(
+        BinlogRead.range(spark, binlog.toString, from, from + 500), b)
+      b += 1
     }
-
-    val co = replay(work.resolve("co"), colocated = true)
-    val sh = replay(work.resolve("sh"), colocated = false)
-    assert(co.length == sh.length)
-    assert(co.sameElements(sh))
+    val co = rawState(t)
+    val want = oracleState(2000)
+    assert(co.length == want.length)
+    assert(co.sameElements(want),
+      s"table-only=${co.diff(want).take(3).mkString(";")} oracle-only=${want.diff(co).take(3).mkString(";")}")
   }
 
   test("COW apply over MOR delta history k-way folds cross-file LWW (no duplicates)") {
     val (work, binlog) = mkBinlog(1500)
 
-    def replay(root: java.nio.file.Path, colocated: Boolean) = {
-      Merge.useColocatedCow = colocated
-      try {
-        val t = LakeTable.create(root, nBuckets = 4)
-        // two MOR batches leave multi-file buckets (delta history) …
-        Ingest.applyBatch(spark, t, mode = Mor)(BinlogRead.range(spark, binlog.toString, 0, 500), 0L)
-        Ingest.applyBatch(spark, t, mode = Mor)(BinlogRead.range(spark, binlog.toString, 500, 1000), 1L)
-        // … then a COW batch on overlapping urls must LWW-fold those files,
-        // not concatenate them (concat wrote duplicate urls with stale
-        // versions into the rewritten single-file bucket, which then skips
-        // resolve-on-read and exposes them to every reader)
-        Ingest.applyBatch(spark, t, mode = Cow)(BinlogRead.range(spark, binlog.toString, 1000, 1500), 2L)
-        t.readRaw(spark)
-          .select(col("url"), unix_micros(col("warc_ts")).as("ts"), col("text"),
-            col("content_len"), col("_seq_part"), col("_seq_offset"), col("_deleted"))
-          .collect().map(_.toString).sorted
-      } finally Merge.useColocatedCow = true
-    }
-
-    val co = replay(work.resolve("co"), colocated = true)
+    val t = LakeTable.create(work.resolve("co"), nBuckets = 4)
+    // two MOR batches leave multi-file buckets (delta history) …
+    Ingest.applyBatch(spark, t, mode = Mor)(BinlogRead.range(spark, binlog.toString, 0, 500), 0L)
+    Ingest.applyBatch(spark, t, mode = Mor)(BinlogRead.range(spark, binlog.toString, 500, 1000), 1L)
+    // … then a COW batch on overlapping urls must LWW-fold those files,
+    // not concatenate them (concat wrote duplicate urls with stale
+    // versions into the rewritten single-file bucket, which then skips
+    // resolve-on-read and exposes them to every reader)
+    Ingest.applyBatch(spark, t, mode = Cow)(BinlogRead.range(spark, binlog.toString, 1000, 1500), 2L)
+    val co = rawState(t)
     val urls = co.map(_.takeWhile(_ != ','))
     assert(urls.length == urls.distinct.length, "duplicate urls after COW over MOR history")
-    val sh = replay(work.resolve("sh"), colocated = false)
-    assert(co.sameElements(sh))
+    val want = oracleState(1500)
+    assert(co.sameElements(want),
+      s"table-only=${co.diff(want).take(3).mkString(";")} oracle-only=${want.diff(co).take(3).mkString(";")}")
   }
 
   test("single hot bucket with many distinct urls completes (no per-bucket memory ceiling)") {

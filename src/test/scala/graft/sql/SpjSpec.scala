@@ -51,6 +51,19 @@ class SpjSpec extends SparkSpec {
       |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
   }
 
+  /** Idempotent per-suite fixture: a test seeds the tables it reads on
+    * first use, so every test passes alone (`-z`) or in any order. Tests
+    * that write seed their own tables; `spj_a`/`spj_b` stay as seeded. */
+  private val seededTables = scala.collection.mutable.Set.empty[String]
+  private def seeded(table: String, n: Int, buckets: Int, langExpr: String): Unit = {
+    enable()
+    if (seededTables.add(table)) seed(table, n, buckets, langExpr)
+  }
+  private def fixture(): Unit = {
+    seeded("spj_a", 300, 4, "'en'")
+    seeded("spj_b", 200, 4, "'de'")
+  }
+
   /** Post-AQE plan with query stages flattened (stages are leaf wrappers —
     * a plain collect never descends into the materialized subtrees). */
   private def finalPlan(df: DataFrame): Seq[SparkPlan] = {
@@ -81,9 +94,7 @@ class SpjSpec extends SparkSpec {
   }
 
   test("storage-partitioned join: zero Exchange, zero Sort, exact rows") {
-    enable()
-    seed("spj_a", 300, 4, "'en'")
-    seed("spj_b", 200, 4, "'de'")
+    fixture()
     withConf(SpjConfs: _*) {
       val df = spark.sql(
         """SELECT a.url, a.lang AS la, b.lang AS lb
@@ -100,14 +111,15 @@ class SpjSpec extends SparkSpec {
   }
 
   test("SPJ composes with LWW semantics: updates and tombstones join correctly") {
-    enable()
+    seeded("spj_lww_a", 300, 4, "'en'")
+    seeded("spj_lww_b", 200, 4, "'de'")
     // rewrite half the urls in a, delete some from b — the join must see
     // the RESOLVED final states of both sides, co-partitioned
-    spark.sql("UPDATE graft.spj_a SET lang = 'fr' WHERE url IN ('u3', 'u7')")
-    spark.sql("DELETE FROM graft.spj_b WHERE url IN ('u5', 'u7')")
+    spark.sql("UPDATE graft.spj_lww_a SET lang = 'fr' WHERE url IN ('u3', 'u7')")
+    spark.sql("DELETE FROM graft.spj_lww_b WHERE url IN ('u5', 'u7')")
     withConf(SpjConfs: _*) {
       val df = spark.sql(
-        """SELECT a.url, a.lang FROM graft.spj_a a JOIN graft.spj_b b ON a.url = b.url
+        """SELECT a.url, a.lang FROM graft.spj_lww_a a JOIN graft.spj_lww_b b ON a.url = b.url
           |WHERE a.url IN ('u3', 'u5', 'u7', 'u9')""".stripMargin)
       val got = df.collect().map(r => (r.getString(0), r.getString(1))).toMap
       // u5, u7 deleted from b → gone; u3 carries its rewritten lang
@@ -117,7 +129,7 @@ class SpjSpec extends SparkSpec {
   }
 
   test("groupBy(url) over a graft table plans without a shuffle") {
-    enable()
+    fixture()
     withConf(SpjConfs: _*) {
       val df = spark.sql(
         "SELECT url, count(*) AS c, max(content_len) AS m FROM graft.spj_a GROUP BY url")
@@ -130,7 +142,7 @@ class SpjSpec extends SparkSpec {
   }
 
   test("graft ⋈ non-graft: only the non-graft side shuffles into the bucket layout") {
-    enable()
+    fixture()
     // the other side is a plain in-memory relation: with
     // v2.bucketing.shuffle.enabled Spark shuffles IT into the graft table's
     // KeyGroupedPartitioning by EVALUATING the catalog bucket function
@@ -149,19 +161,19 @@ class SpjSpec extends SparkSpec {
   }
 
   test("SPJ across time travel: current vs earlier snapshot diffs with zero exchanges") {
-    enable()
+    seeded("spj_tt", 300, 4, "'en'")
     // the "what changed since the release" audit: both sides are the SAME
     // table (identical bucket layout by construction), one pinned at an
     // earlier snapshot — the version diff must plan exchange-free
     val lake = graft.lake.LakeTable.load(
-      java.nio.file.Paths.get(wh).resolve("spj_a"))
+      java.nio.file.Paths.get(wh).resolve("spj_tt"))
     val before = lake.currentSnapshotId
-    spark.sql("UPDATE graft.spj_a SET lang = 'it' WHERE url IN ('u11', 'u13')")
+    spark.sql("UPDATE graft.spj_tt SET lang = 'it' WHERE url IN ('u11', 'u13')")
     withConf(SpjConfs: _*) {
       val df = spark.sql(
         s"""SELECT cur.url, cur.lang AS now, old.lang AS was
-           |FROM graft.spj_a cur
-           |JOIN graft.spj_a VERSION AS OF $before old ON cur.url = old.url
+           |FROM graft.spj_tt cur
+           |JOIN graft.spj_tt VERSION AS OF $before old ON cur.url = old.url
            |WHERE cur.lang <> old.lang""".stripMargin)
       val got = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       assert(got == Set(("u11", "it", "en"), ("u13", "it", "en")), s"got $got")
@@ -171,8 +183,8 @@ class SpjSpec extends SparkSpec {
   }
 
   test("mismatched bucket counts fall back to a correct (shuffled) join") {
-    enable()
-    seed("spj_c", 120, 2, "'pt'")
+    fixture()
+    seeded("spj_c", 120, 2, "'pt'")
     withConf(SpjConfs: _*) {
       val df = spark.sql(
         "SELECT a.url FROM graft.spj_a a JOIN graft.spj_c c ON a.url = c.url")
@@ -182,7 +194,7 @@ class SpjSpec extends SparkSpec {
   }
 
   test("LIMIT pushes into the scan and stops the drain early") {
-    enable()
+    fixture()
     val df = spark.sql("SELECT url, text FROM graft.spj_a LIMIT 7")
     assert(df.collect().length == 7)
     val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
@@ -212,7 +224,7 @@ class SpjSpec extends SparkSpec {
   }
 
   test("declared partitioning renders in SHOW CREATE TABLE / DESCRIBE") {
-    enable()
+    fixture()
     val show = spark.sql("SHOW CREATE TABLE graft.spj_a").collect().head.getString(0)
     assert(show.contains("bucket(4, url)"), s"got:\n$show")
     val desc = spark.sql("DESCRIBE TABLE EXTENDED graft.spj_a").collect()
@@ -227,7 +239,7 @@ class SpjSpec extends SparkSpec {
   }
 
   test("ORDER BY url LIMIT k pushes as TopN; DESC declines but stays correct") {
-    enable()
+    fixture()
     val allSorted = spark.sql("SELECT url FROM graft.spj_a")
       .collect().map(_.getString(0)).sorted
     val top = spark.sql("SELECT url FROM graft.spj_a ORDER BY url LIMIT 5")
