@@ -93,7 +93,7 @@ memory bandwidth is shared across cores; pure-CPU scaling measured at 0.86,
 memcpy 0.86, Spark shuffle lower). On a real multi-node cluster (per-node
 memory buses, the north rule's actual setup) the raw number tracks the
 normalized one: the per-batch plan is ONE Exchange of O(batch) bytes
-regardless of table size (see `sbt "runMain graft.app.PlanCheck"`),
+regardless of table size (asserted by `graft.plans.BucketMergeSpec`),
 partitions are uniform after bucket hashing, and no driver-side work is
 proportional to data volume.
 

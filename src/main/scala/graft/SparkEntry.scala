@@ -585,7 +585,11 @@ object SparkEntry {
         "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
         // manifest-exact stats would otherwise broadcast the small side
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = spjConfs.map { case (k, _) => k -> s.conf.getOption(k) }
+      // restore what was EXPLICITLY set: getOption would return a built-in
+      // default for an unset key, and restoring it would pin that default
+      // as an explicit session value
+      val explicit = s.conf.getAll
+      val prev = spjConfs.map { case (k, _) => k -> explicit.get(k) }
       spjConfs.foreach { case (k, v) => s.conf.set(k, v) }
       try {
         val df = s.sql(

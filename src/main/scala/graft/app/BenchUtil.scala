@@ -53,57 +53,18 @@ object BenchUtil {
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
       .config("spark.local.dir", s"$scratch/spark-local")
-      // lz4 shuffle compression wins even on tmpfs (fewer bytes through the
-      // memory bus beats the codec cost — measured 40.6s vs 58.6s at 4M/16c)
-      .config("spark.shuffle.compress", sys.env.getOrElse("GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.shuffle.spill.compress", sys.env.getOrElse("GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.memory.offHeap.enabled", sys.env.getOrElse("GRAFT_OFFHEAP", "false"))
-      .config("spark.memory.offHeap.size", "16g")
-      // parquet writer A/B knobs (html/url/text are unique-ish — dictionary
-      // encoding is mostly overhead on this table; snappy is the default)
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("GRAFT_PARQUET_CODEC", "snappy"))
-      .config("spark.hadoop.parquet.enable.dictionary",
-        sys.env.getOrElse("GRAFT_PARQUET_DICT", "true"))
+      // shuffle compression, on-heap memory and snappy parquet stay at
+      // Spark's defaults: lz4 shuffle compression wins even on tmpfs (fewer
+      // bytes through the memory bus beats the codec cost — measured 40.6s
+      // vs 58.6s at 4M/16c)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  /** Merge mode under test: GRAFT_MERGE_MODE=cow|mor (default mor — the
-    * 10^10-scale strategy is what the north-star metric grades). */
-  def mergeMode: graft.cdc.MergeMode =
-    sys.env.getOrElse("GRAFT_MERGE_MODE", "mor").toLowerCase match {
-      case "cow" => graft.cdc.Cow
-      case _ => graft.cdc.Mor
-    }
-
-  /** One timed CDC ingest of the binlog into a fresh LakeTable via the
-    * streaming pipeline. Returns (events, seconds, events/sec). */
-  /** `n` deterministically-perturbed copies of an embeddings frame — the
-    * corpus-scaling fixture for storage A/Bs. The perturbation is
-    * PER-DIMENSION: SQ8 codes are invariant under affine maps `x → a·x + b`
-    * (vmin/vmax rescale with the data), so pure-scale copies would emit
-    * identical code words that dictionary-collapse and fake the ratio. One
-    * definition serves IvfBytesAB and the specs — a future change to the
-    * perturbation cannot leave one copy measuring a faked ratio. */
-  def perturbedCopies(embs: org.apache.spark.sql.DataFrame, n: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    embs.sparkSession.range(n).crossJoin(embs).select(
-      (col(idCol) + col("id") * 1000000L).as(idCol),
-      transform(col(vecCol), (x, i) =>
-        (x * (lit(1.0f) + col("id").cast("float") * (i.cast("float") + lit(1.0f))
-          / lit(2048.0f))).cast("float")).as(vecCol))
-  }
-
-  /** Total bytes of regular files under `p` (on-disk footprint A/Bs). */
-  def dirBytes(p: Path): Long = {
-    val w = Files.walk(p)
-    try w.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
-    finally w.close()
-  }
-
+  /** One timed CDC ingest of the binlog into a fresh MOR LakeTable via the
+    * streaming pipeline (MOR: the 10^10-scale strategy is what the
+    * north-star metric grades). Returns (events, seconds, events/sec). */
   def timedIngest(spark: SparkSession, binlog: Path, maxEventsPerBatch: Long,
       nBuckets: Int): (Long, Double, Double) = {
     Files.createDirectories(Paths.get(scratch))
@@ -112,7 +73,7 @@ object BenchUtil {
     val t0 = System.nanoTime()
     val q = Ingest.startStream(spark, binlog.toString, work.resolve("table"),
       work.resolve("ckpt").toString, maxEventsPerBatch = maxEventsPerBatch,
-      nBuckets = nBuckets, mode = mergeMode)
+      nBuckets = nBuckets, mode = graft.cdc.Mor)
     q.awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
     // clean up the table (bench tables are large)

@@ -38,10 +38,7 @@ object Ingest {
           .planInputPartitions(s.startOffset.get, s.endOffset.get).toSeq
       case b: DataSourceV2ScanRelation if b.scan.isInstanceOf[BinlogScan] =>
         b.scan.asInstanceOf[BinlogScan].toBatch.planInputPartitions().toSeq
-      case other =>
-        if (sys.env.contains("GRAFT_TIMING"))
-          System.err.println(s"[timing] lineage fallback: leaf ${other.getClass.getName}")
-        return None // a non-binlog leaf: fall back to data-pass lineage
+      case _ => return None // a non-binlog leaf: fall back to data-pass lineage
     }
     val bl = parts.collect { case p: graft.binlog.BinlogInputPartition => p }
     if (bl.size != parts.size || bl.isEmpty) return None
@@ -62,7 +59,6 @@ object Ingest {
       opts: MergeOptions = MergeOptions())(df: DataFrame, batchId: Long): Unit = {
     val snap = table.currentSnapshot
     if (snap.committedBatchIds.contains(batchId)) return // replayed batch: already durable
-    val t0 = System.nanoTime()
     // Fast path: lineage from the registry or the scan's planned offset
     // ranges — no extra data pass. Fallback (non-binlog input): aggregate
     // it, caching the batch since it is then read twice.
@@ -70,8 +66,6 @@ object Ingest {
       case Some(lineage) =>
         if (lineage.isEmpty) return
         Merge(spark, table, df, batchId, lineage, mode, opts)
-        if (sys.env.contains("GRAFT_TIMING")) System.err.println(
-          f"[timing] batch $batchId: merge ${(System.nanoTime() - t0) / 1e9}%.1f s, rows ${lineage.map(_.count).sum} (plan lineage)")
       case None =>
         val events = df.persist(StorageLevel.MEMORY_AND_DISK)
         try {
@@ -98,8 +92,6 @@ object Ingest {
             .toSeq.sortBy(l => (l.partition, l.startOffset))
           if (lineage.isEmpty) return
           Merge(spark, table, events, batchId, lineage, mode, opts)
-          if (sys.env.contains("GRAFT_TIMING")) System.err.println(
-            f"[timing] batch $batchId: merge ${(System.nanoTime() - t0) / 1e9}%.1f s, rows ${lineage.map(_.count).sum} (agg lineage)")
         } finally events.unpersist()
     }
   }

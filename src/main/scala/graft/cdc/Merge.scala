@@ -59,39 +59,27 @@ sealed trait MergeMode
 case object Cow extends MergeMode
 case object Mor extends MergeMode
 
-/** Per-call merge strategy knobs. The defaults snapshot the process-global
-  * escape hatch ([[Merge.lateMaterialize]]) AT CALL TIME, so existing
-  * callers and the A/B apps that flip the global keep working — while
-  * callers running CONCURRENT merges in one JVM (or wanting a mode for
-  * exactly one pipeline) pass their own options instead of racing on the
-  * global. */
+/** Per-call merge strategy options — the only way to choose a merge's
+  * strategy: each call (and each pipeline passing its own options) gets
+  * exactly the mode it asked for, whatever other merges in the JVM run.
+  * `lateMaterialize` selects the late-materialized dedup (default off; see
+  * the LATE MATERIALIZATION notes in [[Merge]]). */
 final case class MergeOptions(
-    lateMaterialize: Boolean = Merge.lateMaterialize,
+    lateMaterialize: Boolean = false,
     audit: Option[MergeAudit] = None)
 
 /** Per-call audit sink for merge internals: written only by the merge that
   * received it, so CONCURRENT pipelines in one JVM each read their own
-  * values — the process-global [[Merge.lastAdmitBitmapBytes]] mirror races
-  * in exactly that scenario and stays only as a single-pipeline convenience. */
+  * values. */
 final class MergeAudit {
+  @volatile private[cdc] var bitmapBytes: Long = 0L
+
   /** Bytes of the late-mat admission bitmap this merge broadcast
     * (−1 = key-set fallback; 0 = late materialization never ran). */
-  @volatile var admitBitmapBytes: Long = 0L
+  def admitBitmapBytes: Long = bitmapBytes
 }
 
 object Merge {
-
-  /** Debug hook: print the next merge's physical plan (used by PlanCheck). */
-  @volatile var explainNext: Boolean = false
-
-  /** The last explained plan, for spec assertions on plan shape. */
-  @volatile var lastPlan: String = ""
-
-  private[cdc] def explain(df: DataFrame): Unit = {
-    lastPlan = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    println(lastPlan)
-  }
 
   /** MOR: fold a bucket's DELTA tier once it accumulates this many delta
     * files. With tiering the worst-case resolve width is ~(1 base +
@@ -99,9 +87,8 @@ object Merge {
     * MaxFilesPerBucket — tiering trades bounded extra read fan-out for a
     * 1/MidFilesPerBucket-rarer base rewrite (A/B in BENCH_LOCAL.md). The
     * delta-count default comes from the read-latency sweep in
-    * BENCH_LOCAL.md (resolve cost vs file count); lower it (and/or
-    * MidFilesPerBucket) for read-heavy deployments. */
-  @volatile var MaxFilesPerBucket = 8
+    * BENCH_LOCAL.md (resolve cost vs file count). */
+  final val MaxFilesPerBucket = 8
 
   /** LATE MATERIALIZATION for the dedup shuffle (network-cluster mode,
     * default off): resolve LWW winners over the batch's META projection
@@ -116,33 +103,10 @@ object Merge {
     * Common-Crawl-size html), at the cost of re-reading the batch's binlog
     * range (sequential, partition-aligned — object-store bandwidth, not
     * network shuffle). Off by default because local[32] shuffles through
-    * tmpfs at memory speed, where re-decode ≈ the bytes saved (A/B:
-    * `graft.app.LateMatAB`, BENCH_LOCAL.md); on a real cluster shuffle
-    * crosses the network and the trade is decisive. Winner admission is a
-    * dense OFFSET BITMAP over the batch's planned lineage runs — events/8
-    * bytes regardless of winner count (12.5 MB at a 10⁸-event mega-batch,
-    * where an exact key set would be ~1.6 GB); callers without lineage
-    * fall back to an exact (partition, offset) key-set broadcast bounded
-    * by admission control (maxEventsPerBatch × 16 B keys). Enable via
-    * `-Dgraft.merge.lateMaterialize=true`, this var (process-wide default,
-    * snapshotted per call), or per pipeline via [[MergeOptions]]. */
-  @volatile var lateMaterialize: Boolean =
-    sys.props.get("graft.merge.lateMaterialize").contains("true")
-
-  /** Bytes of the last late-mat admission bitmap (−1 = last merge used the
-    * key-set broadcast fallback) — a process-global convenience MIRROR for
-    * single-pipeline plan audits (LateMatPlan, LateMatAB). Concurrent
-    * pipelines must read their own [[MergeAudit]] via
-    * [[MergeOptions.audit]] instead: this mirror is written by every
-    * late-mat merge in the JVM. */
-  @volatile var lastAdmitBitmapBytes: Long = -1L
-
-  private def recordAdmitBytes(audit: Option[MergeAudit], bytes: Long): Unit = {
-    audit.foreach(_.admitBitmapBytes = bytes)
-    lastAdmitBitmapBytes = bytes
-  }
-
-  /** Resolve winners late-materialized (see [[lateMaterialize]]).
+    * tmpfs at memory speed, where re-decode ≈ the bytes saved (A/B in
+    * BENCH_LOCAL.md); on a real cluster shuffle crosses the network and
+    * the trade is decisive. Enabled per call via
+    * [[MergeOptions]]`(lateMaterialize = true)`.
     *
     * Winner-payload ADMISSION has two forms:
     *  - `lineage` present (the binlog ingest path): a dense PER-RUN OFFSET
@@ -161,7 +125,7 @@ object Merge {
       audit: Option[MergeAudit]): DataFrame = {
     if (lineage.nonEmpty)
       return lateResolvedBitmap(batch, srcAligned, nBuckets, dataCols, lineage, audit)
-    recordAdmitBytes(audit, -1L)
+    audit.foreach(_.bitmapBytes = -1L)
     val metaCols = dataCols.filterNot(_ == "html")
     // phase A: winners over the meta projection — projection collapse drops
     // html BEFORE the exchange, so the dedup shuffle never carries payloads.
@@ -282,7 +246,7 @@ object Merge {
           else if (y.isEmpty) x
           else { var i = 0; while (i < nWords) { x(i) |= y(i); i += 1 }; x })
     val bitmapFull = alloc(bitmap) // all-empty batch (every winner deleted)
-    recordAdmitBytes(audit, bitmapFull.length * 8L)
+    audit.foreach(_.bitmapBytes = bitmapFull.length * 8L)
     val bmB = spark.sparkContext.broadcast(bitmapFull)
     val admit = udf((p: Int, o: Long) => {
       val pos = posOf(p, o)
@@ -358,14 +322,6 @@ object Merge {
       batchId: Long, lineage: Seq[PartLineage], opts: MergeOptions): Snapshot = {
     val snap = table.currentSnapshot
     if (snap.committedBatchIds.contains(batchId)) return snap
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[timing]   mor/$what ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
-
     val nBuckets = snap.nBuckets
     val logical = TableSchemas.forVersion(snap.schemaVersion)
     val typeOf = logical.fields.map(f => f.name -> f.dataType).toMap
@@ -394,11 +350,8 @@ object Merge {
       .observe(obs, count(lit(1)).as("n"),
         sum(when(col("_deleted"), 1L).otherwise(0L)).as("dels"))
 
-    if (explainNext) { explainNext = false; explain(merged) }
-    mark("plan")
     val nextId = snap.snapshotId + 1
     val newFiles = table.writeDataFiles(merged, nextId, snap.schemaVersion)
-    mark("write-job")
     val row = obs.get
     val dels = row("dels").asInstanceOf[Long]
     val n = row("n").asInstanceOf[Long]
@@ -410,7 +363,6 @@ object Merge {
     val next = table.commitAppend(newFiles.map(_.copy(tier = DataFile.TierDelta)),
       Some(BatchMarker(batchId, lineage, n - dels, dels)),
       expectedBuckets = Some(nBuckets))
-    mark("commit")
 
     // TIERED incremental compaction (LSM-style size tiering): when a
     // bucket's DELTA count crosses MaxFilesPerBucket, fold just the deltas
@@ -419,10 +371,10 @@ object Merge {
     // the base — so the expensive base rewrite runs 1/MidFilesPerBucket as
     // often (write amplification O(base/(8·Mids)) per batch instead of
     // O(base/8)). A legacy/untier-stamped bucket falls back to the full
-    // fold once its total file count crosses the combined bound. One
-    // batched pass per kind is cheaper than spreading (measured: capping
-    // traded the spike for +20% sustained wall via per-call overhead);
-    // `-Dgraft.compact.maxBucketsPerBatch` bounds p99 when needed.
+    // fold once its total file count crosses the combined bound. Every due
+    // bucket folds in this batch: one batched pass per kind is cheaper than
+    // spreading (measured: capping the folds per batch traded the spike for
+    // +20% sustained wall via per-call overhead).
     val byBucket = next.files.groupBy(_.bucket)
     def deltaDue(fs: Seq[DataFile]): Boolean = {
       val ds = fs.filter(_.tier == DataFile.TierDelta)
@@ -436,38 +388,31 @@ object Merge {
     }
     val fullFold = byBucket.filter { case (_, fs) =>
       // legacy (pre-tier) manifests parse every file as tier 0, so >1 base
-      // file identifies them precisely — a TIERED bucket whose deltas piled
-      // up while deferred by the batch cap must NOT escalate to the full
-      // fold (only the cheap delta fold is due until its mids fill up)
+      // file identifies them precisely — a TIERED bucket must NOT escalate
+      // to the full fold on its base count alone (only the cheap delta fold
+      // is due until its mids fill up)
       (deltaDue(fs) && midsFull(fs)) || fs.count(_.tier == DataFile.TierBase) > 1
     }.keySet
     val deltaFold = byBucket.filter { case (b, fs) =>
       !fullFold(b) && deltaDue(fs)
     }.keySet
-    // ONE cap across both kinds: the knob bounds total compaction work in a
-    // batch, so the delta folds only get the budget the full folds left
-    val cap = sys.props.get("graft.compact.maxBucketsPerBatch").map(_.toInt)
-      .getOrElse(Int.MaxValue)
-    def capped(s: Set[Int], n: Int): Set[Int] =
-      if (n >= s.size) s else s.toSeq.sortBy(b => -byBucket(b).size).take(n).toSet
-    val fullSel = capped(fullFold, cap)
-    val deltaSel = capped(deltaFold, cap - fullSel.size)
-    val afterFull = if (fullSel.nonEmpty) compactBuckets(spark, table, fullSel) else next
-    if (deltaSel.nonEmpty) compactDeltaTier(spark, table, deltaSel) else afterFull
+    val afterFull = if (fullFold.nonEmpty) compactBuckets(spark, table, fullFold) else next
+    if (deltaFold.nonEmpty) compactDeltaTier(spark, table, deltaFold) else afterFull
   }
 
   /** Mid files per bucket before the full fold runs (the tiering fan-out). */
-  @volatile var MidFilesPerBucket = 4
+  final val MidFilesPerBucket = 4
 
   /** SIZE-based fold triggers, complementing the count triggers: a SKEWED
     * hot bucket can accumulate few-but-huge delta files (count trigger
     * never fires while read cost balloons), so the delta fold also fires
     * once a bucket's delta BYTES cross this; the full fold likewise fires
     * once its mid bytes cross `MaxMidBytesPerBucket` even below the mid
-    * count quota. Defaults are sized to stay inert at test scale and to
-    * bound a bucket's unfolded tail at cluster scale; `0` disables. */
-  @volatile var MaxDeltaBytesPerBucket: Long = 512L * 1024 * 1024
-  @volatile var MaxMidBytesPerBucket: Long = 2048L * 1024 * 1024
+    * count quota. Sized to stay inert at test scale and to bound a bucket's
+    * unfolded tail at cluster scale; `0` disables. Settable only by specs,
+    * which cannot reach the size triggers at these sizes. */
+  @volatile private[graft] var MaxDeltaBytesPerBucket: Long = 512L * 1024 * 1024
+  @volatile private[graft] var MaxMidBytesPerBucket: Long = 2048L * 1024 * 1024
 
   /** Fold ONLY the delta-tier files of the given buckets into one MID file
     * per bucket (tombstones retained, envelopes kept — LWW-sound next to
@@ -547,13 +492,6 @@ object Merge {
     else head
 
     val nBuckets = snap.nBuckets
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[timing]   merge/$what ${(now - tMark) / 1e9}%.1f s")
-      tMark = now
-    }
 
     // the batch is read twice (stats pass + merge); cache it — unless the
     // CALLER already cached these rows (applyBatch's non-binlog fallback),
@@ -570,7 +508,6 @@ object Merge {
         min(col("url")).as("umin"), max(col("url")).as("umax"),
         sum(when(col("op") === "upsert", 1L).otherwise(0L)).as("ups"))
         .collect()
-      mark("batch-stats")
       // empty batch: no-op on the REAL head (the synthetic empty base must
       // never escape; an empty INSERT OVERWRITE is routed to truncate() by
       // the write layer before reaching here)
@@ -619,7 +556,6 @@ object Merge {
       //    shuffled (one Exchange, O(batch) bytes); each task folds its
       //    bucket's files (any schema version) and streams them against the
       //    batch winners (BucketMergeExec).
-      if (timing) System.err.println(s"[timing]   cow touchedFiles=${touched.size} touchedRows=${touched.map(_.rowCount).sum}")
       val bucketFiles = touched.groupBy(_.bucket).map { case (b, fs) =>
         b -> fs.map(f => (table.root.resolve(f.path).toString, f.bytes, f.schemaVersion))
       }
@@ -647,12 +583,9 @@ object Merge {
         .drop("_xt")
         .sortWithinPartitions(col("url"))
 
-      if (Merge.explainNext) { Merge.explainNext = false; Merge.explain(merged) }
-
       // 5. write + manifest from footers + commit
       val nextId = snap.snapshotId + 1
       val newFiles = table.writeDataFiles(merged, nextId, snap.schemaVersion)
-      mark("merge-write")
 
       val newTotal = untouched.map(_.rowCount).sum + newFiles.map(_.rowCount).sum
       val next = snap.copy(
@@ -661,9 +594,7 @@ object Merge {
         files = untouched ++ newFiles,
         batches = snap.batches :+ BatchMarker(batchId, lineage, upserts, deletes),
         totalRows = newTotal)
-      val committed = table.commit(next, Some(snap.commitTsMs))
-      mark("commit")
-      committed
+      table.commit(next, Some(snap.commitTsMs))
     } finally { if (!callerCached) withBucket.unpersist(): Unit }
   }
 }

@@ -897,28 +897,16 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
   def writeDataFilesTo(df: DataFrame, dirName: String, schemaVersion: Int): Vector[DataFile] = {
     val relDir = s"data/$dataDirPrefix$dirName"
     val outDir = root.resolve(relDir)
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[timing]     write/$what ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
     // Dictionary encoding is pure overhead on the unique-heavy columns
     // (url/html/text never repeat within a file: per-url LWW winners), and
     // building + overflowing the dictionaries costs ~12% of ingest wall
-    // (A/B via IngestBench: 151k -> 170k ev/s at local[8]). Keep it for the
-    // low-cardinality columns (lang, op) where RLE-dict genuinely shrinks
-    // pages. Options land in the write job's hadoop conf (scoped to THIS
-    // write, not the session); `-Dgraft.parquet.dictionary=true` (or env
-    // GRAFT_PARQUET_DICTIONARY=true) restores the parquet default everywhere.
-    val w = df.write.mode("overwrite").partitionBy("bucket")
-    val dictDefault = sys.env.get("GRAFT_PARQUET_DICTIONARY")
-      .orElse(sys.props.get("graft.parquet.dictionary")).contains("true")
-    val dictOff =
-      if (dictDefault) w
-      else Seq("url", "html", "text").foldLeft(w)(
-        (b, c) => b.option(s"parquet.enable.dictionary#$c", "false"))
+    // (measured at local[8]: 151k -> 170k ev/s without them). Keep it for
+    // the low-cardinality columns (lang, op) where RLE-dict genuinely
+    // shrinks pages. Options land in the write job's hadoop conf (scoped to
+    // THIS write, not the session).
+    val dictOff = Seq("url", "html", "text").foldLeft(
+      df.write.mode("overwrite").partitionBy("bucket"))(
+      (b, c) => b.option(s"parquet.enable.dictionary#$c", "false"))
     // Timestamps as TIMESTAMP_MICROS, not Spark's legacy INT96 default:
     // INT96 footers carry no usable min/max, which would silently kill the
     // manifest's warc_ts bounds (the time-range file prune). Parquet writers
@@ -926,16 +914,17 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     // prepareWrite overwrites any hadoop-conf value), so set-and-restore
     // around the job. A concurrent graft write racing the restore can only
     // leave MICROS set — a standards-compliant encoding every reader
-    // handles per-file; correctness is unaffected either way.
+    // handles per-file; correctness is unaffected either way. The restore
+    // reads the EXPLICIT setting: getOption would return the built-in
+    // default for an unset key and pin it as a session value.
     val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = df.sparkSession.conf.getOption(tsKey)
+    val prevTsType = df.sparkSession.conf.getAll.get(tsKey)
     df.sparkSession.conf.set(tsKey, "TIMESTAMP_MICROS")
     try dictOff.parquet(outDir.toString)
     finally prevTsType match {
       case Some(v) => df.sparkSession.conf.set(tsKey, v)
       case None => df.sparkSession.conf.unset(tsKey)
     }
-    mark("spark-job")
     // enumerate written files
     val found = Vector.newBuilder[(Path, Int)]
     if (Files.isDirectory(outDir)) {
@@ -951,14 +940,12 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
         }
       } finally ds.close()
     }
-    val out = found.result().par.map { case (p, b) =>
+    found.result().par.map { case (p, b) =>
       val (rows, uMin, uMax, tsMin, tsMax) =
         LakeTable.parquetStatsWithTs(p, "url", "warc_ts")
       DataFile(root.relativize(p).toString, b, rows, uMin, uMax, schemaVersion,
         Files.size(p), tsMinMicros = tsMin, tsMaxMicros = tsMax)
     }.toVector.seq.sortBy(f => (f.bucket, f.path))
-    mark("footer-stats")
-    out
   }
 }
 

@@ -91,12 +91,6 @@ object Curate {
     val scored = scoredIncrement(spark, table, fromSnapshotId, Some(to))
     val kept = scored.filter(col("quality") >= minQuality && col("tokens") >= minTokens)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (sys.env.contains("GRAFT_TIMING")) { // attribution only
-      val t0 = System.nanoTime()
-      val n = kept.count()
-      System.err.println(
-        f"[timing]   curate/feed+score(rows=$n) ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
     try {
       val (dups, n) = LshIndex.probeAndAppendCounted(spark, kept, "text", "url", lshDir,
         minMatchFrac = minMatchFrac, span = Some(s"$fromSnapshotId-$to"))

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   *    portable SQL (the DuckDB oracle grades the whole pipeline).
   *  - storage: `sig` is `array<long>` of md5-LOW-64 truncations — 8 bytes
   *    per minhash instead of a 32-char hex string (≈8k vs ≈32k+ bytes per
-  *    (doc, band) row uncompressed; see the LshBytesAB A/B in
+  *    (doc, band) row uncompressed; see the LSH signature storage A/B in
   *    BENCH_LOCAL.md). Position equality — hence `match_frac` — is
   *    preserved: equal md5 ⇒ equal low-64, and a spurious equality needs a
   *    2⁻⁶⁴ cross-md5 collision. Buckets stay full-hex-md5-derived.
@@ -506,13 +506,6 @@ object LshIndex {
   def probeAndAppendCounted(spark: SparkSession, batch: DataFrame,
       textCol: String, idCol: String, dir: Path, minMatchFrac: Double = 0.5,
       maxBucketSize: Int = 1000, span: Option[String] = None): (DataFrame, Long) = {
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[timing]   lsh/$what ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
     val p = loadChecked(dir)
     // Compute the signature pipeline ONCE per batch: probe + append drive
     // FOUR actions over the band rows (shard-list collect, two broadcast
@@ -524,16 +517,9 @@ object LshIndex {
     val rows = probeRows(batch, textCol, idCol, p)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (timing) { // attribution only: materialize the kernel separately
-        val n = rows.count()
-        mark(s"sig(rows=$n,parts=${rows.rdd.getNumPartitions})")
-      }
       val out = nearDupsOfProbes(spark, rows, p, dir, minMatchFrac, maxBucketSize)
         .localCheckpoint(true)
-      mark("probe")
-      val n = appendRows(rows, p, dir, span)
-      mark("append")
-      (out, n)
+      (out, appendRows(rows, p, dir, span))
     } finally rows.unpersist(): Unit
   }
 }

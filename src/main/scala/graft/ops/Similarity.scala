@@ -235,7 +235,8 @@ object Similarity {
 
   /** SQ8 code columns for an assigned batch: per-vector affine 8-bit codes
     * (`code` byte-per-dim + `vmin`/`vmax` floats) replacing the raw float
-    * array — the per-row index payload shrinks ~4× (see IvfBytesAB). */
+    * array — the per-row index payload shrinks ~4× (IVF SQ8 A/B in
+    * BENCH_LOCAL.md). */
   private def sq8Columns(assigned: DataFrame, idCol: String, vecCol: String): DataFrame =
     assigned
       .withColumn("vmin", array_min(col(vecCol)))

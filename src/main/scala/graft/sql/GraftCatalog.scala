@@ -602,12 +602,18 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
         vs.toSeq.collect { case s: String => s }
     }.filter(ks => ks.nonEmpty && ks.size <= GraftLakeScan.MaxRuntimeFilterKeys)
     keys.foreach { ks =>
-      urlKeys = if (urlKeys.isEmpty) ks else urlKeys.intersect(ks)
+      val static = urlKeys
+      urlKeys = if (static.isEmpty) ks else static.intersect(ks)
       // a runtime intersection that empties a static key set means the join
       // can match nothing — but an EMPTY urlKeys set here would read as "no
-      // pushdown" and scan everything, so keep one impossible sentinel
-      // bucket probe instead of widening back to a full scan
-      if (urlKeys.isEmpty) urlKeys = ks.take(1)
+      // pushdown" and scan everything, so probe ONE STATIC key's bucket
+      // instead of widening back to a full scan. A static key, not a runtime
+      // one: its bucket is among the partitions already planned, and a
+      // key-grouped scan may only drop partitions at runtime (a runtime
+      // key's bucket can lie outside them, which Spark rejects). Reading it
+      // is safe: the scan's rows still meet the join, whose runtime keys
+      // are disjoint from every static key, so none of them match
+      if (urlKeys.isEmpty) urlKeys = static.take(1)
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.sql
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeIntoTable, UpdateAction, UpdateTable}
@@ -30,8 +30,7 @@ import graft.cdc.{Merge, MergeMode}
   * allocated in the reserved SQL domain ([[GraftRowLevel.SqlBatchIdBit]]) so
   * they can never collide with a stream's checkpoint-epoch ids.
   *
-  * Registered either at runtime ([[GraftSql.enable]]) or declaratively via
-  * `spark.sql.extensions=graft.sql.GraftExtensions`.
+  * Registered on a session by [[GraftSql.enable]] (idempotent).
   */
 object GraftSqlStrategy extends SparkStrategy {
 
@@ -236,16 +235,6 @@ private[sql] object GraftRowLevel {
   def resolvedWithEnvelope(spark: SparkSession, lake: graft.lake.LakeTable): DataFrame =
     GraftRead.rawResolved(spark, lake, Some(lake.currentSnapshotId))
 
-  /** Debug hook (the [[graft.cdc.Merge.explainNext]] discipline): when set,
-    * the next row-level command stashes its matched-row read here so specs
-    * can assert the PRUNED plan — a point `DELETE FROM t WHERE url = 'x'`
-    * must read the key's single hash bucket (bounds- and bloom-admitted
-    * files only), not the table. */
-  @volatile var captureMatchedNext: Boolean = false
-  @volatile var lastMatched: DataFrame = _
-  private[sql] def maybeCapture(df: DataFrame): Unit =
-    if (captureMatchedNext) { captureMatchedNext = false; lastMatched = df }
-
   /** RESERVED batch-id domain for SQL-committed batches. Batch ids are the
     * table's exactly-once replay key (`Snapshot.committedBatchIds`), and the
     * two streaming writers allocate theirs from Spark's per-checkpoint epoch
@@ -312,7 +301,6 @@ final case class GraftDeleteExec(
     val lake = table.writeLake
     val rows = GraftRowLevel.resolvedWithEnvelope(spark, lake)
     val matched = rows.filter(!col("_deleted")).filter(GraftRowLevel.byName(cond))
-    GraftRowLevel.maybeCapture(matched)
     val hasLang = matched.columns.contains("lang")
     val changelog = matched.select(
       col("_seq_part").cast("int").as("partition"),
@@ -375,7 +363,6 @@ final case class GraftUpdateExec(
     val rows = GraftRowLevel.resolvedWithEnvelope(spark, lake)
     val live = rows.filter(!col("_deleted"))
     val matched = cond.map(c => live.filter(GraftRowLevel.byName(c))).getOrElse(live)
-    GraftRowLevel.maybeCapture(matched)
     def valueOf(name: String, default: Column): Column = overrides.getOrElse(name, default)
     val hasLang = matched.columns.contains("lang")
     val changelog = matched.select(
@@ -396,14 +383,9 @@ final case class GraftUpdateExec(
 /** Runtime enablement: everything here is registerable on an EXISTING
   * session (no extensions required) — catalog conf + planner strategies. */
 object GraftSql {
-  /** Merge mode used by SQL MERGE/INSERT/DELETE/UPDATE (COW default: SQL
-    * merges are interactive, read-optimized). PROCESS-WIDE FALLBACK only —
-    * resolution is per statement via the SESSION conf
-    * `spark.graft.sql.mergeMode` (`cow` | `mor`), so concurrent sessions in
-    * one JVM each pin their own mode ([[mergeModeFor]]). */
-  @volatile var sqlMergeMode: MergeMode = graft.cdc.Cow
-
-  /** Session conf key selecting the SQL surface's merge mode. */
+  /** Session conf key selecting the merge mode of SQL MERGE/INSERT/DELETE/
+    * UPDATE (`cow` | `mor`), resolved per statement ([[mergeModeFor]]), so
+    * concurrent sessions in one JVM each pin their own mode. */
   val MergeModeConf = "spark.graft.sql.mergeMode"
 
   /** Session conf binding the WHOLE SQL surface to a staging branch —
@@ -425,14 +407,15 @@ object GraftSql {
   def wapBranchFor(spark: SparkSession): Option[String] =
     spark.conf.getOption(WapBranchConf).map(_.trim).filter(_.nonEmpty)
 
-  /** The merge mode for THIS session: conf when set, global default else. */
+  /** The merge mode for THIS session: the conf when set, else COW (SQL
+    * merges are interactive, read-optimized). */
   def mergeModeFor(spark: SparkSession): MergeMode =
     spark.conf.getOption(MergeModeConf).map(_.trim.toLowerCase) match {
       case Some("mor") => graft.cdc.Mor
       case Some("cow") => graft.cdc.Cow
       case Some(other) => throw new IllegalArgumentException(
         s"$MergeModeConf must be cow|mor, got '$other'")
-      case None => sqlMergeMode
+      case None => graft.cdc.Cow
     }
 
   def enable(spark: SparkSession, warehouse: String): Unit = {
@@ -447,15 +430,5 @@ object GraftSql {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ GraftSqlStrategy
     graft.plans.BucketMergeStrategy.ensureRegistered(spark)
-  }
-}
-
-/** `spark.sql.extensions=graft.sql.GraftExtensions` — declarative injection
-  * of the MERGE strategy (+ the co-located COW merge strategy) at session
-  * build time; the catalog is configured via `spark.sql.catalog.graft`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => GraftSqlStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.BucketMergeStrategy)
   }
 }

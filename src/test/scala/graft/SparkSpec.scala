@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites (one per suite, lazy). */
@@ -12,6 +16,23 @@ trait SparkSpec extends AnyFunSuite {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     p.toFile.deleteOnExit()
     p
+  }
+
+  /** The executions of every named query `body` runs on this session
+    * (actions, commands, the writes inside engine calls), in completion
+    * order, read from Spark's own `QueryExecutionListener` channel. */
+  def captureQueries(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    GraftBridge.waitListenerBusEmpty(spark) // earlier queries' events stay out
+    spark.listenerManager.register(listener)
+    try { body; GraftBridge.waitListenerBusEmpty(spark) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
   }
 }
 

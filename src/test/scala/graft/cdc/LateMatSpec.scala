@@ -108,31 +108,25 @@ class LateMatSpec extends SparkSpec {
     }
   }
 
-  test("per-call MergeOptions pins the mode regardless of the process global") {
-    // two pipelines in one JVM with OPPOSITE modes: each call's options win
-    // over the global default — the race the @volatile toggles had
+  test("per-call MergeOptions pins each pipeline's mode; audits stay per call") {
+    // two pipelines in one JVM with OPPOSITE modes: each call runs exactly
+    // the mode its own options ask for and writes only its own audit
     val p = GenProfile.uniformSmall()
     val binlog = gen(p, "lmopts")
-    val prev = Merge.lateMaterialize
-    Merge.lateMaterialize = true // adversarial global
-    try {
-      val offAudit = new MergeAudit
-      val off = state(replay(binlog, "lmoptsoff", Cow, 700,
-        opts = MergeOptions(lateMaterialize = false, audit = Some(offAudit))))
-      assert(offAudit.admitBitmapBytes == 0L,
-        "explicit lateMaterialize=false must beat the global true")
-      val onAudit = new MergeAudit
-      val on = state(replay(binlog, "lmoptson", Cow, 700,
-        opts = MergeOptions(lateMaterialize = true, audit = Some(onAudit))))
-      assert(onAudit.admitBitmapBytes > 0)
-      // per-call isolation: the late-mat pipeline's merges never wrote the
-      // OTHER pipeline's audit — the race the global mirror still has
-      assert(offAudit.admitBitmapBytes == 0L,
-        "a concurrent pipeline's audit must not be written by this merge")
-      assert(on == off)
-      // and the no-args default SNAPSHOTS the global at call time
-      assert(MergeOptions().lateMaterialize)
-    } finally Merge.lateMaterialize = prev
+    val offAudit = new MergeAudit
+    val off = state(replay(binlog, "lmoptsoff", Cow, 700,
+      opts = MergeOptions(lateMaterialize = false, audit = Some(offAudit))))
+    assert(offAudit.admitBitmapBytes == 0L,
+      "lateMaterialize=false must not run the late-materialized dedup")
+    val onAudit = new MergeAudit
+    val on = state(replay(binlog, "lmoptson", Cow, 700,
+      opts = MergeOptions(lateMaterialize = true, audit = Some(onAudit))))
+    assert(onAudit.admitBitmapBytes > 0)
+    // per-call isolation: the late-mat pipeline's merges never wrote the
+    // OTHER pipeline's audit
+    assert(offAudit.admitBitmapBytes == 0L,
+      "a concurrent pipeline's audit must not be written by this merge")
+    assert(on == off)
   }
 
   test("late-mat without lineage falls back to the exact key-set broadcast") {

@@ -63,50 +63,6 @@ class TieredCompactionSpec extends SparkSpec {
     }
   }
 
-  test("maxBucketsPerBatch caps TOTAL folds per batch; deferred buckets never escalate to a base rewrite") {
-    val p = GenProfile.uniformSmall().copy(partitions = 2, eventsPerPartition = 3000)
-    val binlog = tmpDir("cap-binlog")
-    ChangeEventGen.writeSegments(p, binlog, segmentEvents = 1000, chunkThreshold = 64 * 1024)
-    val tblDir = tmpDir("cap-tbl").resolve("t")
-    System.setProperty("graft.compact.maxBucketsPerBatch", "1")
-    val table =
-      try Ingest.replayBatch(spark, binlog.toString, tblDir,
-        eventsPerBatch = 100, nBuckets = 4, mode = Mor)
-      finally System.clearProperty("graft.compact.maxBucketsPerBatch")
-
-    val snaps = table.snapshotIds.map(table.snapshot)
-    // a deferred bucket piles deltas past MaxFilesPerBucket while waiting
-    // its turn — it must get the cheap delta fold when scheduled, NOT the
-    // full fold: no bucket with <MidFilesPerBucket mids may ever transition
-    // straight from (1 base + deltas + mids) to a lone fresh base unless its
-    // mid quota was full. Equivalent observable: every snapshot keeps ≤1
-    // base per bucket AND mids appear before the first re-base.
-    assert(snaps.exists(_.files.exists(_.tier == DataFile.TierMid)),
-      "delta folds never ran under the cap")
-    snaps.foreach { s =>
-      s.files.groupBy(_.bucket).foreach { case (b, fs) =>
-        assert(fs.count(_.tier == DataFile.TierBase) <= 1, s"bucket $b multi-base")
-      }
-    }
-    // the cap bounds per-batch fold work: consecutive snapshots can differ
-    // (beyond the appended deltas) in at most ONE bucket's folded layout
-    snaps.sliding(2).foreach {
-      case Seq(a, b) =>
-        val repl = b.files.filterNot(f => a.files.map(_.path).toSet.contains(f.path))
-          .filterNot(_.tier == DataFile.TierDelta) // fold outputs only
-        assert(repl.map(_.bucket).distinct.size <= 1,
-          s"snapshot ${b.snapshotId} folded ${repl.map(_.bucket).distinct.size} buckets under cap=1")
-      case _ =>
-    }
-    // correctness unaffected by deferral
-    val oracle = Oracle.finalState(p)
-    val got = table.read(spark).collect().map { r =>
-      r.getAs[String]("url") -> Oracle.micros(r.getAs[java.sql.Timestamp]("warc_ts"))
-    }.toMap
-    assert(got.size == oracle.size)
-    oracle.foreach { case (url, (ts, _, _, _)) => assert(got(url) == ts) }
-  }
-
   test("size-based triggers: delta BYTES fold a skewed bucket long before the count trigger") {
     val p = GenProfile.uniformSmall().copy(partitions = 2, eventsPerPartition = 2000)
     val binlog = tmpDir("sz-binlog")

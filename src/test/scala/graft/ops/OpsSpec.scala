@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -12,6 +14,26 @@ class OpsSpec extends SparkSpec {
   private val dir = sfDir("0.01")
   private lazy val docs = spark.read.parquet(s"$dir/documents.parquet")
   private lazy val embs = spark.read.parquet(s"$dir/embeddings.parquet")
+
+  /** `n` deterministically-perturbed copies of an embeddings frame — the
+    * corpus-scaling fixture for storage ratios. The perturbation is
+    * PER-DIMENSION: SQ8 codes are invariant under affine maps `x → a·x + b`
+    * (vmin/vmax rescale with the data), so pure-scale copies would emit
+    * identical code words that dictionary-collapse and fake the ratio. */
+  private def perturbedCopies(embs: org.apache.spark.sql.DataFrame, n: Int,
+      idCol: String = "vec_id", vecCol: String = "embedding"): org.apache.spark.sql.DataFrame =
+    embs.sparkSession.range(n).crossJoin(embs).select(
+      (col(idCol) + col("id") * 1000000L).as(idCol),
+      transform(col(vecCol), (x, i) =>
+        (x * (lit(1.0f) + col("id").cast("float") * (i.cast("float") + lit(1.0f))
+          / lit(2048.0f))).cast("float")).as(vecCol))
+
+  /** Total bytes of regular files under `p` (on-disk footprint). */
+  private def dirBytes(p: Path): Long = {
+    val w = Files.walk(p)
+    try w.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+    finally w.close()
+  }
 
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -140,7 +162,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("SQ8 IVF index: exact re-rank matches the raw index; ~4x smaller probe payload") {
-    import graft.app.BenchUtil.dirBytes
     val rawDir = tmpDir("ivf-raw").resolve("index").toString
     val sq8Dir = tmpDir("ivf-sq8").resolve("index").toString
     Similarity.writeIvfIndex(embs, rawDir, nLists = 16)
@@ -163,9 +184,9 @@ class OpsSpec extends SparkSpec {
     // codes are byte-per-dim vs 4-byte floats (snappy + per-vector min/max
     // eat the rest of the naive 4x). 500 rows over 16 list files is all
     // parquet framing, so measure on a 20x deterministically-perturbed
-    // corpus (BenchUtil.perturbedCopies — per-dimension, or SQ8's affine
+    // corpus (perturbedCopies — per-dimension, or SQ8's affine
     // invariance would dictionary-collapse the codes and fake the ratio)
-    val big = graft.app.BenchUtil.perturbedCopies(embs, 20)
+    val big = perturbedCopies(embs, 20)
     val bigRaw = tmpDir("ivf-raw-big").resolve("index").toString
     val bigSq8 = tmpDir("ivf-sq8-big").resolve("index").toString
     Similarity.writeIvfIndex(big, bigRaw, nLists = 16)

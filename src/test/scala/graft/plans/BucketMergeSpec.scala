@@ -1,11 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{CommandResultExec, ExplainUtils, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.{Oracle, SparkSpec}
 import graft.binlog.{BinlogRead, ChangeEventGen, GenProfile}
-import graft.cdc.{Cow, Ingest, Merge, Mor}
+import graft.cdc.{Cow, Ingest, Mor}
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TextExtract}
 
@@ -45,15 +47,33 @@ class BucketMergeSpec extends SparkSpec {
         w.partition, w.offset, !live).toString
     }.toArray.sorted
 
+  /** Spark's formatted explain of the query under `p`: the initial physical
+    * plan of its adaptive plan (before query stages split it), else `p`. */
+  private def formatted(p: SparkPlan): String = {
+    def initial(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+      case c: CommandResultExec => initial(c.commandPhysicalPlan)
+      case other => other.children.flatMap(initial)
+    }
+    val out = new StringBuilder
+    ExplainUtils.processPlan(initial(p).headOption.getOrElse(p),
+      (s: String) => out.append(s): Unit)
+    out.toString
+  }
+
   test("table side reads without an Exchange; exactly one Exchange in the merge plan") {
     val (work, binlog) = mkBinlog(1500) // per-partition offsets 0..1499
     val table = LakeTable.create(work.resolve("t1"), nBuckets = 8)
     Ingest.applyBatch(spark, table)(BinlogRead.range(spark, binlog.toString, 0, 750), 0L)
 
-    // capture the second batch's physical plan via the explain hook
-    Merge.explainNext = true
-    Ingest.applyBatch(spark, table)(BinlogRead.range(spark, binlog.toString, 750, 1500), 1L)
-    val plan = Merge.lastPlan
+    // capture the second batch's write job through Spark's listener channel
+    // and render the plan it was planned with (the adaptive plan's initial
+    // physical plan, before query stages split it)
+    val writes = captureQueries {
+      Ingest.applyBatch(spark, table)(BinlogRead.range(spark, binlog.toString, 750, 1500), 1L)
+    }.map(qe => formatted(qe.executedPlan)).filter(_.contains("BucketMerge"))
+    assert(writes.size == 1, s"expected ONE merge write job, got ${writes.size}")
+    val plan = writes.head
     assert(plan.contains("BucketMerge"), plan.take(2000))
     assert(plan.contains("BucketTableScan"))
     // one Exchange total (the batch side), none between scan and merge

@@ -1,5 +1,9 @@
 package graft.sql
 
+import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceRDDPartition}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -11,6 +15,17 @@ class GraftSqlSpec extends SparkSpec {
   private lazy val wh = tmpDir("graft-wh").toString
 
   private def enable(): Unit = GraftSql.enable(spark, wh)
+
+  /** Every graft BatchScan under `p`. AQE query stages, adaptive plans,
+    * cached relations and command results are LEAF nodes wrapping their
+    * subtree — a plain collect never descends into them. */
+  private def graftScans(p: SparkPlan): Seq[BatchScanExec] = p.collect {
+    case q: QueryStageExec => graftScans(q.plan)
+    case a: AdaptiveSparkPlanExec => graftScans(a.executedPlan)
+    case m: InMemoryTableScanExec => graftScans(m.relation.cachedPlan)
+    case c: CommandResultExec => graftScans(c.commandPhysicalPlan)
+    case b: BatchScanExec if b.scan.isInstanceOf[GraftLakeScan] => Seq(b)
+  }.flatten
 
   test("CALL graft.system procedures: rollback_to_snapshot, compact, expire_snapshots") {
     enable()
@@ -542,39 +557,37 @@ class GraftSqlSpec extends SparkSpec {
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
 
-    def capturedParts(): (String, Int) = {
-      val leaves = GraftRowLevel.lastMatched.queryExecution.executedPlan.collectLeaves()
-      val desc = leaves.map(_.toString).mkString("\n")
-      val parts = leaves.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum
-      (desc, parts)
+    // the statement's matched-row reads: every graft BatchScan in the
+    // queries it ran (read from Spark's listener channel), with its pushdown
+    // description and planned input partitions
+    def matchedScans(stmt: String): Seq[(String, Int)] = {
+      val scans = captureQueries(spark.sql(stmt): Unit)
+        .flatMap(qe => graftScans(qe.executedPlan))
+      assert(scans.nonEmpty, s"no graft BatchScan ran for: $stmt")
+      scans.map(b => (b.toString, b.inputPartitions.size))
     }
 
     // point DELETE: the matched-row read must push the key and scan at most
     // the key's single hash bucket, not all 4
-    GraftRowLevel.captureMatchedNext = true
-    spark.sql("DELETE FROM graft.pdel WHERE url = 'u5'")
-    val (dDesc, dParts) = capturedParts()
-    assert(dDesc.contains("urlKeys=u5"), dDesc.take(800))
-    assert(dParts <= 1, s"point DELETE read $dParts partitions, want <=1")
+    matchedScans("DELETE FROM graft.pdel WHERE url = 'u5'").foreach { case (dDesc, dParts) =>
+      assert(dDesc.contains("urlKeys=u5"), dDesc.take(800))
+      assert(dParts <= 1, s"point DELETE read $dParts partitions, want <=1")
+    }
     assert(spark.sql("SELECT * FROM graft.pdel WHERE url = 'u5'").count() == 0)
     assert(spark.sql("SELECT * FROM graft.pdel").count() == 39)
 
     // IN-list UPDATE: at most one bucket per key
-    GraftRowLevel.captureMatchedNext = true
-    spark.sql("UPDATE graft.pdel SET lang = 'de' WHERE url IN ('u1', 'u2', 'u7')")
-    val (uDesc, uParts) = capturedParts()
-    assert(uDesc.contains("urlKeys="), uDesc.take(800))
-    assert(uParts <= 3, s"3-key UPDATE read $uParts partitions, want <=3")
+    matchedScans("UPDATE graft.pdel SET lang = 'de' WHERE url IN ('u1', 'u2', 'u7')")
+      .foreach { case (uDesc, uParts) =>
+        assert(uDesc.contains("urlKeys="), uDesc.take(800))
+        assert(uParts <= 3, s"3-key UPDATE read $uParts partitions, want <=3")
+      }
     assert(spark.sql("SELECT * FROM graft.pdel WHERE lang = 'de'").count() == 3)
 
     // non-key predicates still work (full scan is the correct plan there)
-    GraftRowLevel.captureMatchedNext = true
-    spark.sql("DELETE FROM graft.pdel WHERE content_len >= 8")
-    val (nDesc, _) = capturedParts()
-    assert(!nDesc.contains("urlKeys="), "non-url predicate must not fake a key prune")
+    matchedScans("DELETE FROM graft.pdel WHERE content_len >= 8").foreach { case (nDesc, _) =>
+      assert(!nDesc.contains("urlKeys="), "non-url predicate must not fake a key prune")
+    }
   }
 
   test("SQL row-level envelopes live in a reserved offset domain: no binlog tie possible") {
@@ -1059,14 +1072,6 @@ class GraftSqlSpec extends SparkSpec {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    // AQE query stages are LEAF nodes wrapping their materialized subtree —
-    // a plain collect never descends into them
-    def graftScans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = p.collect {
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => graftScans(q.plan)
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-        if b.scan.isInstanceOf[GraftLakeScan] => Seq(b)
-    }.flatten
     val scanNode = graftScans(finalPlan)
       .headOption.getOrElse(fail(s"no graft BatchScanExec in:\n$finalPlan"))
     assert(scanNode.runtimeFilters.nonEmpty,
@@ -1074,6 +1079,60 @@ class GraftSqlSpec extends SparkSpec {
     val scanned = scanNode.metrics("numOutputRows").value
     assert(scanned >= 2 && scanned < total,
       s"runtime filter should prune the scan below the full $total rows; read $scanned")
+  }
+
+  test("runtime filtering: runtime keys disjoint from the static url IN-list read one bucket, match nothing") {
+    enable()
+    spark.sql("""CREATE TABLE graft.rfs (url STRING, warc_ts TIMESTAMP,
+                |  html BINARY, text STRING, content_len BIGINT, lang STRING)
+                |USING graft TBLPROPERTIES('buckets'='8')""".stripMargin)
+    spark.range(400).createOrReplaceTempView("rfs_seed")
+    spark.sql(
+      """MERGE INTO graft.rfs t USING (
+        |  SELECT concat('u', id) AS url, timestamp_micros(1700000000000000 + id) AS warc_ts,
+        |    cast(concat('<p>', id, '</p>') AS BINARY) AS html,
+        |    CAST(NULL AS STRING) AS text, CAST(NULL AS BIGINT) AS content_len,
+        |    'en' AS lang, CAST(id AS LONG) AS offset, CAST(0 AS INT) AS partition,
+        |    'upsert' AS op FROM rfs_seed) s
+        |ON t.url = s.url
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    spark.range(500).selectExpr("concat('u', id) AS url", "id AS k")
+      .where("k IN (7, 8)")
+      .createOrReplaceTempView("rfs_dim")
+    val bucketOf = (u: String) => graft.lake.LakeTable.bucketIdOf(u, 8)
+    assert(!Set("u1", "u2").map(bucketOf).contains(bucketOf("u7")))
+    // the static IN-list pushes urlKeys=u1,u2; the dim's runtime keys are
+    // u7,u8, so the runtime intersection is EMPTY — and u7's bucket lies
+    // outside the statically planned ones. Constraint propagation
+    // would copy the static IN-list onto the dim and empty it before any
+    // runtime filter is built, so it is off for this query only.
+    val cp = "spark.sql.constraintPropagation.enabled"
+    val prev = spark.conf.getOption(cp)
+    spark.conf.set(cp, "false")
+    val (rows, scanNode) =
+      try {
+        val joined = spark.sql(
+          """SELECT /*+ BROADCAST(d) */ b.url, d.k FROM graft.rfs b JOIN rfs_dim d
+            |ON b.url = d.url WHERE b.url IN ('u1', 'u2')""".stripMargin)
+        val rows = joined.collect()
+        (rows, graftScans(joined.queryExecution.executedPlan)
+          .headOption.getOrElse(fail(s"no graft BatchScanExec in:\n${joined.queryExecution.executedPlan}")))
+      } finally prev match {
+        case Some(v) => spark.conf.set(cp, v)
+        case None => spark.conf.unset(cp)
+      }
+    assert(rows.isEmpty, s"disjoint runtime and static keys must match nothing, got ${rows.toSeq}")
+    assert(scanNode.runtimeFilters.nonEmpty,
+      s"expected a dynamic-pruning runtime filter on the graft scan:\n$scanNode")
+    // input partitions the scan actually ran after the runtime filter (key-
+    // grouped planning pads the rest with empty partitions)
+    val read = scanNode.inputRDD.partitions.collect {
+      case p: DataSourceRDDPartition => p.inputPartitions.size
+    }.sum
+    assert(read <= 1, s"an empty runtime intersection must probe at most one bucket, read $read")
+    val scanned = scanNode.metrics("numOutputRows").value
+    assert(scanned < 400, s"an empty runtime intersection must not widen to a full scan; read $scanned rows")
   }
 
   test("SQL commands between stream batches use a reserved batch-id domain") {
