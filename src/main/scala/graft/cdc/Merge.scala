@@ -409,10 +409,10 @@ object Merge {
     * once a bucket's delta BYTES cross this; the full fold likewise fires
     * once its mid bytes cross `MaxMidBytesPerBucket` even below the mid
     * count quota. Sized to stay inert at test scale and to bound a bucket's
-    * unfolded tail at cluster scale; `0` disables. Settable only by specs,
-    * which cannot reach the size triggers at these sizes. */
+    * unfolded tail at cluster scale; `0` disables. The delta threshold is
+    * settable only by specs, which cannot reach it at these sizes. */
   @volatile private[graft] var MaxDeltaBytesPerBucket: Long = 512L * 1024 * 1024
-  @volatile private[graft] var MaxMidBytesPerBucket: Long = 2048L * 1024 * 1024
+  final val MaxMidBytesPerBucket: Long = 2048L * 1024 * 1024
 
   /** Fold ONLY the delta-tier files of the given buckets into one MID file
     * per bucket (tombstones retained, envelopes kept — LWW-sound next to

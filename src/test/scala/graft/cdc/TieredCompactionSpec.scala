@@ -71,12 +71,12 @@ class TieredCompactionSpec extends SparkSpec {
     // 1-byte threshold: every appended delta immediately exceeds it, so the
     // delta tier folds each batch — delta counts never approach the count
     // trigger (MaxFilesPerBucket=8) between folds
-    val (savedD, savedM) = (Merge.MaxDeltaBytesPerBucket, Merge.MaxMidBytesPerBucket)
+    val savedD = Merge.MaxDeltaBytesPerBucket
     Merge.MaxDeltaBytesPerBucket = 1L
     val table =
       try Ingest.replayBatch(spark, binlog.toString, tblDir,
         eventsPerBatch = 200, nBuckets = 4, mode = Mor)
-      finally { Merge.MaxDeltaBytesPerBucket = savedD; Merge.MaxMidBytesPerBucket = savedM }
+      finally Merge.MaxDeltaBytesPerBucket = savedD
 
     val snaps = table.snapshotIds.map(table.snapshot)
     // folds fired on bytes: no snapshot ever holds more than ONE delta file

@@ -101,4 +101,26 @@ class LakeTableSpec extends SparkSpec {
       100)
     assert(Snapshot.fromJson(s.toJson) == s)
   }
+
+  test("writeDataFilesTo writes MICROS timestamps and leaves the session conf as it found it") {
+    val t = LakeTable.create(tmpDir("lakeconf"), nBuckets = 4)
+    val schema = StructType(TableSchemas.v2.fields :+ StructField("bucket", IntegerType))
+    val u = "https://a.org/1"
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(u, new java.sql.Timestamp(1000L), "<p>a</p>".getBytes, "a", 8L, "en", 9, 1L,
+        false, LakeTable.bucketIdOf(u, 4))), 1), schema)
+    val key = "spark.sql.parquet.outputTimestampType"
+    def writeKeepsConf(dir: String): Unit = {
+      val before = spark.conf.getAll
+      val files = t.writeDataFilesTo(df, dir, TableSchemas.current)
+      assert(spark.conf.getAll == before)
+      // the write itself ran under MICROS: INT96 footers carry no ts bounds
+      assert(files.nonEmpty && files.forall(_.tsMinMicros != DataFile.NoTsMin))
+    }
+    spark.conf.unset(key)
+    writeKeepsConf("conf-unset") // an unset key stays unset, not pinned to INT96
+    spark.conf.set(key, "TIMESTAMP_MILLIS")
+    try writeKeepsConf("conf-set") // an explicit value comes back
+    finally spark.conf.unset(key)
+  }
 }
