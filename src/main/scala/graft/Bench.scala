@@ -14,8 +14,8 @@ import graft.app.BenchUtil
   * value, e.g. doc_exact_dedup 2.82 s recorded vs 0.5 s on a warm probe):
   *  - a small warmup ingest JITs the whole pipeline before anything is timed;
   *  - EVERY headline query gets one untimed warm pass (whole list first),
-  *    then best-of-2 timed runs — the reproducible number, not the
-  *    GC/page-cache-noise envelope;
+  *    then best-of-2 timed runs, materialized through the `noop` sink — the
+  *    reproducible number, not the GC/page-cache-noise envelope;
   *  - the ingest headline is full-size-warmed then best-of-2;
   *  - steady-state multi-batch COW, MOR and CURATED ingests (16 batches
   *    into a growing table) are reported so the per-batch O(batch) merge cost is visible in
@@ -55,21 +55,31 @@ object Bench {
     val warmDir = BenchUtil.ensureBinlog(BenchUtil.skewedProfile(40000L))
     BenchUtil.timedIngest(spark, warmDir, 20000L, 16)
 
-    def runOnce(name: String): Double = {
+    // a query is timed to full materialization through the `noop` sink:
+    // under `count()` column pruning lets a query skip the work its rows
+    // need. Rounds r01–r05 timed `count()`; its number is printed beside
+    // (`queries_count`) so the two can be compared across one round.
+    def runOnce(name: String, viaCount: Boolean = false): Double = {
       val fn = SparkEntry.queries(name)
-      try time(fn(spark, sfDir).count())
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1.0 }
+      try time {
+        val df = fn(spark, sfDir)
+        if (viaCount) df.count(): Unit
+        else df.write.format("noop").mode("overwrite").save()
+      } catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1.0 }
     }
     // one untimed warm pass over the WHOLE headline list first: the cold
     // window is longer than any single query, so warming query-by-query
     // right before its own timed run would still land inside it
-    headline.foreach(runOnce)
+    headline.foreach(runOnce(_))
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val countResults = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // min over SUCCESSFUL runs only: a transient failure (-1) must not
+    // discard the other run's valid measurement
+    def best(runs: Seq[Double]): Double = runs.filter(_ >= 0).minOption.getOrElse(-1.0)
     headline.foreach { name =>
-      // min over SUCCESSFUL runs only: a transient failure (-1) must not
-      // discard the other run's valid measurement
-      results(name) = Seq(runOnce(name), runOnce(name)).filter(_ >= 0)
-        .minOption.getOrElse(-1.0)
+      val runs = (1 to 2).map(_ => (runOnce(name), runOnce(name, viaCount = true)))
+      results(name) = best(runs.map(_._1))
+      countResults(name) = best(runs.map(_._2))
     }
 
     // CDC ingest throughput (the north-star metric, at this parallelism).
@@ -135,9 +145,10 @@ object Bench {
     results("cdc_mirror_1m") = mrSec
     graft.lake.SinkIO.rmDir(mirrorSrc.getParent)
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    def json(m: collection.Map[String, Double]) =
+      m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"cdc_events":$ev,"cdc_eps":${f"$eps%.0f"},"steady_events":$sev,"steady_eps":${f"$seps%.0f"},"steady_mor_events":$mev,"steady_mor_eps":${f"$meps%.0f"},"curated_events":$cev,"curated_eps":${f"$ceps%.0f"},"mirror_rows":$mrRows,"mirror_rps":${f"$mrEps%.0f"}}""")
+    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${json(results)},"queries_count":${json(countResults)},"sf":"$sfDir","cpus":$cpus,"cdc_events":$ev,"cdc_eps":${f"$eps%.0f"},"steady_events":$sev,"steady_eps":${f"$seps%.0f"},"steady_mor_events":$mev,"steady_mor_eps":${f"$meps%.0f"},"curated_events":$cev,"curated_eps":${f"$ceps%.0f"},"mirror_rows":$mrRows,"mirror_rps":${f"$mrEps%.0f"}}""")
     spark.stop()
   }
 

@@ -416,63 +416,19 @@ object Merge {
 
   /** Fold ONLY the delta-tier files of the given buckets into one MID file
     * per bucket (tombstones retained, envelopes kept — LWW-sound next to
-    * the untouched base). Deltas are small (≤ MaxFilesPerBucket batches'
-    * winners), so a plain shuffle fold is proportionate; the co-located
-    * machinery stays reserved for the base-rewriting full fold. */
-  def compactDeltaTier(spark: SparkSession, table: LakeTable, buckets: Set[Int]): Snapshot = {
-    // pin: a concurrent aggressive expiry must not GC our inputs mid-fold
-    val (snap, pinLease) = table.pinCurrent()
-    try {
-      val nBuckets = snap.nBuckets
-      val sel = snap.files.filter(f => buckets.contains(f.bucket) && f.tier == DataFile.TierDelta)
-      if (sel.isEmpty) return snap
-      val dataCols = TableSchemas.forVersion(snap.schemaVersion)
-        .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-      val resolved = graft.lake.Resolve.lww(
-          table.readFiles(spark, snap, sel).repartition(nBuckets, col("url")), dataCols)
-        .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
-        .sortWithinPartitions(col("url"))
-      replaceResolved(spark, table, snap, sel, resolved, "d", DataFile.TierMid)
-    } finally pinLease.release()
-  }
+    * the untouched base): the co-located fold of [[Maintain.foldReplace]]
+    * over the tier's files, one task per bucket. */
+  def compactDeltaTier(spark: SparkSession, table: LakeTable, buckets: Set[Int]): Snapshot =
+    Maintain.foldReplace(spark, table, DataFile.TierMid, "d")(
+      _.files.filter(f => buckets.contains(f.bucket) && f.tier == DataFile.TierDelta))
 
-  /** Shared tail of the fold paths: write the resolved rows to a unique
-    * replacement dir, replacement-rebase commit (safe next to concurrent
-    * ingest — see [[graft.lake.LakeTable.commitReplace]]), and inherit
-    * point-lookup bloom sidecars when any replaced file carried one (so
-    * lookups stay pruned without waiting for the maintenance pass). */
-  private def replaceResolved(spark: SparkSession, table: LakeTable, snap: Snapshot,
-      sel: Seq[DataFile], resolved: DataFrame, dirTag: String, outTier: Int): Snapshot = {
-    val outDir = s"s${snap.snapshotId + 1}$dirTag${java.util.UUID.randomUUID().toString.take(8)}"
-    val newFiles = table.writeDataFilesTo(resolved, outDir, snap.schemaVersion)
-      .map(_.copy(tier = outTier))
-    val next = table.commitReplace(sel, newFiles)
-    if (sel.exists(f => java.nio.file.Files.exists(Bloom.sidecar(table.root.resolve(f.path)))))
-      Bloom.inherit(spark, table, next, newFiles): Unit
-    next
-  }
-
-  /** Fold all files of the given buckets into one resolved file per bucket
-    * (tombstones retained — GC is Maintain.compact's explicit call). Runs on
-    * the MOR HOT PATH (every MaxFilesPerBucket batches per crowded bucket),
-    * so it uses the CO-LOCATED per-bucket resolve — no shuffle. */
-  def compactBuckets(spark: SparkSession, table: LakeTable, buckets: Set[Int]): Snapshot = {
-    // pin: a concurrent aggressive expiry must not GC our inputs mid-fold
-    val (snap, pinLease) = table.pinCurrent()
-    try {
-      val nBuckets = snap.nBuckets
-      val sel = snap.files.filter(f => buckets.contains(f.bucket))
-      if (sel.isEmpty) return snap
-      val resolved = graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId), Some(buckets))
-        .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
-        .sortWithinPartitions(col("url"))
-      // unique output dir + replacement-rebase commit: compaction may run
-      // CONCURRENTLY with an ingest stream — concurrent ADDs survive the
-      // rebase; if a competing maintenance already replaced our inputs, the
-      // output is deleted and this is a no-op (LakeTable.commitReplace)
-      replaceResolved(spark, table, snap, sel, resolved, "c", DataFile.TierBase)
-    } finally pinLease.release()
-  }
+  /** Fold all files of the given buckets into one resolved BASE file per
+    * bucket (tombstones retained — GC is Maintain.compact's explicit call).
+    * Runs on the MOR HOT PATH (every MaxFilesPerBucket batches per crowded
+    * bucket) through the same co-located fold — no shuffle. */
+  def compactBuckets(spark: SparkSession, table: LakeTable, buckets: Set[Int]): Snapshot =
+    Maintain.foldReplace(spark, table, DataFile.TierBase, "c")(
+      _.files.filter(f => buckets.contains(f.bucket)))
 
   /** COPY-ON-WRITE apply: see object doc — pruned target files folded in
     * place against the batch, one batch-sized shuffle, touched buckets
@@ -522,8 +478,8 @@ object Merge {
       //    Spark's min/max(url) and the parquet stats actually use; Java
       //    String order would silently mis-prune supplementary-plane urls).
       //    NoStatsMax means "unbounded": never skip such a file. SAFETY NET:
-      //    even a wrong prune miss stays read-correct, because a multi-file
-      //    bucket is LWW-resolved at read time (LakeTable.read) — but we
+      //    even a wrong prune miss stays read-correct, because every read
+      //    LWW-resolves each bucket's files (GraftBucketReader) — but we
       //    keep bounds conservative so that net is never load-bearing.
       val (touched, untouched) = snap.files.partition { f =>
         srcBuckets.contains(f.bucket) && {

@@ -732,28 +732,20 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
   }
 
   /** Read the table at a snapshot (default: current) as a DataFrame in
-    * that snapshot's logical schema. Files written under older physical
-    * schemas are read with their own schema, cast (widening) and
-    * null-backfilled (added columns) — Iceberg-style evolution without
-    * Iceberg. User-facing: multi-version rows (merge-on-read delta files)
-    * are LWW-resolved, tombstones filtered, internal columns dropped. */
+    * that snapshot's logical schema: the pinned SQL table's relation, so
+    * every bucket goes through the same co-located LWW fold as `SELECT …
+    * FROM graft.t` (streaming k-way merge over url-sorted files, no
+    * shuffle, O(filesPerBucket) memory). Files written under older physical
+    * schemas are cast (widening) and null-backfilled (added columns) —
+    * Iceberg-style evolution without Iceberg. User-facing: versions are
+    * LWW-resolved, tombstones filtered, internal columns dropped. */
   def read(spark: SparkSession, snapshotId: Option[Long] = None): DataFrame = {
     val snap = snapshotId.map(snapshot).getOrElse(currentSnapshot)
-    // resolve only when some bucket holds >1 file (MOR deltas present);
-    // compacted/COW tables skip resolution entirely
-    if (snap.files.groupBy(_.bucket).exists(_._2.size > 1)) {
-      // CO-LOCATED resolve-on-read: the same per-bucket k-way sorted merge
-      // the SQL scan uses — streaming LWW over url-sorted files, no shuffle,
-      // O(filesPerBucket) memory. Pinned to the snapshot, so the table's
-      // schema is that snapshot's era.
-      val tbl = new graft.sql.GraftSqlTable(this, s"lake:${root.getFileName}",
-        pinnedSnapshot = Some(snap.snapshotId))
-      val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-        tbl, None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
-      return org.apache.spark.sql.GraftBridge.ofRows(spark, rel)
-    }
-    readFiles(spark, snap, snap.files)
-      .filter(!col("_deleted")).drop(TableSchemas.internalNames: _*)
+    val tbl = new graft.sql.GraftSqlTable(this, s"lake:${root.getFileName}",
+      pinnedSnapshot = Some(snap.snapshotId))
+    org.apache.spark.sql.GraftBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        tbl, None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
   }
 
   /** Incremental read (CDC-out): rows in data files ADDED between
@@ -881,11 +873,12 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * url bounds, both read from the parquet footers (metadata-only, parallel)
     * — no extra stats pass over the data.
     *
-    * WRITER INVARIANT: every caller must hand in AT MOST ONE version per
-    * url (per-batch dedup, LWW-resolved compaction/rebucket output, resolved
-    * catch-up increments). The k-way resolve-on-read paths tolerate
-    * violations, but the single-file fast path of [[read]] (no resolve
-    * when every bucket holds one file) streams files as unique-url sets. */
+    * WRITER INVARIANT: every caller hands in AT MOST ONE version per url
+    * (per-batch dedup, LWW-resolved compaction/rebucket output, resolved
+    * catch-up increments), so stored files stay as small as the winners.
+    * No reader depends on it: every resolved read and every fold runs the
+    * k-way LWW fold, which also folds several versions of a url inside
+    * one file (a foreign writer's file, or a writer bug). */
   def writeDataFiles(df: DataFrame, newSnapshotId: Long, schemaVersion: Int): Vector[DataFile] =
     writeDataFilesTo(df, s"s$newSnapshotId", schemaVersion)
 

@@ -29,41 +29,49 @@ object Maintain {
     *
     * Produces a maintenance snapshot: same batches/lineage, new files. */
   def compact(spark: SparkSession, table: LakeTable,
-      dropTombstonesOlderThanMicros: Long = Long.MinValue,
-      withBlooms: Boolean = false): Snapshot = {
-    // pin the read snapshot: a concurrent aggressive expiry must not GC our
-    // input files mid-job (see LakeTable.pinCurrent)
+      dropTombstonesOlderThanMicros: Long = Long.MinValue): Snapshot =
+    foldReplace(spark, table, DataFile.TierBase, "c", dropTombstonesOlderThanMicros)(_.files)
+
+  /** The one fold-and-replace of stored files, behind [[compact]] and the
+    * MOR tier folds ([[graft.cdc.Merge.compactDeltaTier]],
+    * [[graft.cdc.Merge.compactBuckets]]); callers only choose the files.
+    *
+    * Pins the current snapshot (a concurrent aggressive expiry must not GC
+    * the inputs mid-job), folds the files `select` picks with the raw
+    * CO-LOCATED per-bucket k-way resolve (tombstone winners kept unless
+    * older than the watermark, files aligned to the snapshot's schema
+    * version — no shuffle, one task per bucket), writes one url-sorted
+    * `outTier` file per bucket to a unique `s<id+1><dirTag><rand>` dir and
+    * replaces exactly the files it read ([[LakeTable.commitReplace]]: deltas
+    * a concurrent ingest appended since the pin survive the rebase; a
+    * competing maintenance that already replaced the inputs turns this into
+    * a clean no-op). Bloom sidecars are inherited when any replaced file had
+    * one, so point lookups stay pruned without waiting for the maintenance
+    * pass. */
+  private[graft] def foldReplace(spark: SparkSession, table: LakeTable,
+      outTier: Int, dirTag: String, dropTombstonesOlderThanMicros: Long = Long.MinValue)(
+      select: Snapshot => Seq[DataFile]): Snapshot = {
     val (snap, pin) = table.pinCurrent()
     try {
-    if (snap.files.isEmpty) return snap
-    val nBuckets = snap.nBuckets
-    // resolve first: under merge-on-read a url may have several versions
-    // across delta files — the compacted file must hold exactly the winner
-    // (read()'s single-file-per-bucket fast path depends on it).
-    // CO-LOCATED per-bucket k-way resolve (tombstone winners kept, files
-    // aligned to the snapshot's schema version) — NO shuffle, the largest
-    // maintenance cost at scale.
-    val df = graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId))
-    val kept =
-      if (dropTombstonesOlderThanMicros == Long.MinValue) df
-      else df.filter(!col("_deleted") ||
-        unix_micros(col("warc_ts")) > dropTombstonesOlderThanMicros)
-    // rows arrive per-bucket (scan partitioning / resolve partitioning) —
-    // filter/withColumn preserve it, so no further shuffle
-    val out = kept
-      .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
-      .sortWithinPartitions(col("url"))
-    // unique output dir + replacement-rebase commit: compaction is safe to
-    // run CONCURRENTLY with a MOR ingest stream — deltas a batch appended
-    // since our read survive the rebase (resolve-on-read LWW commutes); a
-    // competing maintenance that already replaced our inputs turns this
-    // into a clean no-op (see LakeTable.commitReplace)
-    val outDir = s"s${snap.snapshotId + 1}c${java.util.UUID.randomUUID().toString.take(8)}"
-    val newFiles = table.writeDataFilesTo(out, outDir, snap.schemaVersion)
-    val next = table.commitReplace(snap.files, newFiles)
-    // optionally keep point-lookup blooms current through maintenance
-    if (withBlooms) Bloom.inherit(spark, table, next, newFiles): Unit
-    next
+      val sel = select(snap)
+      if (sel.isEmpty) return snap
+      val resolved = graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId), Some(sel))
+      val kept =
+        if (dropTombstonesOlderThanMicros == Long.MinValue) resolved
+        else resolved.filter(!col("_deleted") ||
+          unix_micros(col("warc_ts")) > dropTombstonesOlderThanMicros)
+      // rows arrive per bucket, url-sorted (the scan's reported partitioning
+      // and ordering) — filter/withColumn preserve both, so no shuffle
+      val out = kept
+        .withColumn("bucket", LakeTable.bucketOf(col("url"), snap.nBuckets))
+        .sortWithinPartitions(col("url"))
+      val outDir = s"s${snap.snapshotId + 1}$dirTag${java.util.UUID.randomUUID().toString.take(8)}"
+      val newFiles = table.writeDataFilesTo(out, outDir, snap.schemaVersion)
+        .map(_.copy(tier = outTier))
+      val next = table.commitReplace(sel, newFiles)
+      if (sel.exists(f => Files.exists(Bloom.sidecar(table.root.resolve(f.path)))))
+        Bloom.inherit(spark, table, next, newFiles): Unit
+      next
     } finally pin.release()
   }
 
@@ -188,12 +196,12 @@ object Maintain {
     * tombstones, envelope columns kept) into `newBuckets`-layout delta
     * files. The multi-batch increment is LWW-RESOLVED before writing: a
     * url that changed in several chased batches must not write several
-    * versions into ONE delta file — every data file keeps the one-version-
-    * per-url invariant the single-file fast paths assume (resolving within
-    * the increment is exact: any dropped row is beaten by a kept row of
-    * the same url, so the global LWW winner next to the new base is
-    * unchanged; tombstone winners are kept). The groupBy(url) rides the
-    * repartition's hash partitioning — no extra exchange. */
+    * versions into ONE delta file — writers keep one version per url per
+    * file (see [[LakeTable.writeDataFiles]]; resolving within the increment
+    * is exact: any dropped row is beaten by a kept row of the same url, so
+    * the global LWW winner next to the new base is unchanged; tombstone
+    * winners are kept). The groupBy(url) rides the repartition's hash
+    * partitioning — no extra exchange. */
   private def rebucketCatchup(spark: SparkSession, table: LakeTable,
       from: Long, to: Long, newBuckets: Int, dirName: String): Vector[DataFile] = {
     val version = table.snapshot(to).schemaVersion

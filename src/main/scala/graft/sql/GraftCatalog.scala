@@ -399,9 +399,11 @@ final class GraftSqlTable(val lake: LakeTable, ident: String,
   * the FULL schema (internal columns, tombstone winners kept) — what
   * compaction consumes. No shuffle, O(filesPerBucket) memory per task.
   * The schema follows the snapshot's logical version, so a pre-evolution
-  * snapshot reads (and rewrites) in its own era's columns. */
+  * snapshot reads (and rewrites) in its own era's columns. `files` (default:
+  * every file of the snapshot) is the caller's selection — a fold reads
+  * exactly the files it then replaces. */
 private[graft] final class GraftRawTable(lake: LakeTable,
-    snapshotId: Option[Long], buckets: Option[Set[Int]])
+    snapshotId: Option[Long], files: Option[Seq[graft.lake.DataFile]])
   extends Table with SupportsRead {
   override def name(): String = s"graft-raw(${lake.root})"
   override def schema(): StructType = TableSchemas.forVersion(
@@ -409,18 +411,18 @@ private[graft] final class GraftRawTable(lake: LakeTable,
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftLakeScan(lake, snapshotId, raw = true, bucketFilter = buckets)
+    new GraftLakeScan(lake, snapshotId, raw = true, files = files)
 }
 
 object GraftRead {
   /** Raw-resolved rows of a snapshot (default current) in that snapshot's
-    * logical schema, optionally restricted to a bucket subset. */
+    * logical schema, optionally restricted to a subset of its files. */
   def rawResolved(spark: SparkSession, lake: LakeTable,
       snapshotId: Option[Long] = None,
-      buckets: Option[Set[Int]] = None): org.apache.spark.sql.DataFrame =
+      files: Option[Seq[graft.lake.DataFile]] = None): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.GraftBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-        new GraftRawTable(lake, snapshotId, buckets), None, None,
+        new GraftRawTable(lake, snapshotId, files), None, None,
         org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
 }
 
@@ -439,7 +441,7 @@ final case class GraftBucketPartition(
 }
 
 final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
-    raw: Boolean = false, bucketFilter: Option[Set[Int]] = None)
+    raw: Boolean = false, files: Option[Seq[graft.lake.DataFile]] = None)
     extends ScanBuilder with Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
@@ -455,6 +457,9 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
     * otherwise leave the reader map missing a schema version a planned
     * partition uses, failing on executors. */
   private lazy val snap = snapshotId.map(lake.snapshot).getOrElse(lake.currentSnapshot)
+  /** The files this scan may read before pruning: the caller's selection
+    * (a fold's inputs) or the whole snapshot. */
+  private lazy val scanFiles = files.getOrElse(snap.files)
   override def build(): Scan = this
 
   // --- column pruning: the k-way LWW merge always reads its resolution
@@ -642,11 +647,10 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
     // whose manifest tsMax lies strictly below the bound cannot hold the
     // emitted winner of any url that survives the residual filter
     val timeAdmitted =
-      if (tsLower.isEmpty) snap.files
-      else snap.files.filter(f =>
+      if (tsLower.isEmpty) scanFiles
+      else scanFiles.filter(f =>
         graft.lake.FeedSource.fileAdmitsTime(f, tsLower, hi = None))
     val byBucket = timeAdmitted.groupBy(_.bucket)
-      .filter { case (b, _) => bucketFilter.forall(_.contains(b)) }
     val selected =
       if (urlKeys.isEmpty) byBucket
       else {
@@ -737,7 +741,7 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
     // can't evaluate it (legacy INT96) — both columns exist in every
     // schema version.
     val readers = GraftBucketReader.parquetReaders(SparkSession.active, scanSchema,
-      snap.files.map(_.schemaVersion), urlRowFilters ++ tsRowFilters)
+      scanFiles.map(_.schemaVersion), urlRowFilters ++ tsRowFilters)
     new GraftBucketReaderFactory(readers, scanSchema, out)
   }
 }
@@ -800,8 +804,9 @@ object GraftBucketReader {
 }
 
 /** Streaming k-way LWW merge over one bucket's url-sorted files: the one
-  * fold of stored files, behind every SQL read, compaction and the COW
-  * merge's table side ([[graft.plans.BucketTableScanExec]]). */
+  * fold of stored files, behind every SQL read (`LakeTable.read` included),
+  * every compaction and tier fold, and the COW merge's table side
+  * ([[graft.plans.BucketTableScanExec]]). */
 final class GraftBucketReader(
     p: GraftBucketPartition,
     readers: Map[Int, GraftBucketReader.FileReader],

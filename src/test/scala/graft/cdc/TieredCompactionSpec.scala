@@ -1,8 +1,11 @@
 package graft.cdc
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.{Oracle, SparkSpec}
 import graft.binlog.{ChangeEventGen, GenProfile}
-import graft.lake.DataFile
+import graft.lake.{DataFile, Resolve, TableSchemas}
 
 /** LSM-style tiered compaction: per-batch MOR deltas fold into MID files
   * often (cost O(deltas)); mids fold into the base rarely — write
@@ -61,6 +64,41 @@ class TieredCompactionSpec extends SparkSpec {
       assert(got(url)._1 == ts, s"warc_ts mismatch at $url")
       assert(got(url)._2 == text, s"text not byte-identical at $url")
     }
+  }
+
+  test("delta fold: one write job without an Exchange; mids hold the deltas' LWW winners") {
+    val p = GenProfile.uniformSmall().copy(partitions = 2, eventsPerPartition = 1500)
+    val binlog = tmpDir("dfold-binlog")
+    ChangeEventGen.writeSegments(p, binlog, segmentEvents = 500, chunkThreshold = 64 * 1024)
+    // 5 batches: every bucket gathers deltas, below the count trigger
+    val table = Ingest.replayBatch(spark, binlog.toString, tmpDir("dfold-tbl").resolve("t"),
+      eventsPerBatch = 300, nBuckets = 4, mode = Mor)
+    val snap = table.currentSnapshot
+    val deltas = snap.files.filter(_.tier == DataFile.TierDelta)
+    assert(deltas.groupBy(_.bucket).values.forall(_.size > 1), "every bucket needs several deltas")
+
+    def rows(df: DataFrame): Seq[(String, Long, String, Int, Long, Boolean)] =
+      df.select(col("url"), unix_micros(col("warc_ts")), col("text"),
+          col("_seq_part"), col("_seq_offset"), col("_deleted"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2),
+          r.getInt(3), r.getLong(4), r.getBoolean(5))).toSeq.sortBy(_._1)
+    val dataCols = TableSchemas.forVersion(snap.schemaVersion)
+      .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
+    val want = rows(Resolve.lww(table.readFiles(spark, snap, deltas), dataCols))
+    assert(want.exists(_._6), "the deltas must hold tombstone winners")
+
+    val buckets = deltas.map(_.bucket).toSet
+    val writes = captureQueries { Merge.compactDeltaTier(spark, table, buckets): Unit }
+      .map(_.executedPlan.treeString).filter(_.contains("InsertIntoHadoopFsRelation"))
+    assert(writes.size == 1, s"expected ONE fold write job, got ${writes.size}")
+    assert(writes.head.contains("GraftLakeScan"), writes.head)
+    assert(!writes.head.contains("Exchange"), writes.head)
+
+    val after = table.currentSnapshot
+    assert(!after.files.exists(_.tier == DataFile.TierDelta))
+    val mids = after.files.filter(_.tier == DataFile.TierMid)
+    assert(mids.map(_.bucket).sorted == buckets.toSeq.sorted, "one mid per folded bucket")
+    assert(rows(table.readFiles(spark, after, mids)) == want)
   }
 
   test("size-based triggers: delta BYTES fold a skewed bucket long before the count trigger") {

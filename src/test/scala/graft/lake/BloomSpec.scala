@@ -65,24 +65,27 @@ class BloomSpec extends SparkSpec {
       java.nio.file.Files.exists(Bloom.sidecar(lake.root.resolve(f.path)))))
     assert(spark.sql("SELECT count(*) FROM graft.bl").head().getLong(0) == 600)
 
-    // compaction with inline blooms: the fresh files come out covered
-    Maintain.compact(spark, lake, withBlooms = true)
+    // maintenance compaction follows the same rule: the replaced files had
+    // sidecars, so the fresh files come out covered
+    Maintain.compact(spark, lake)
     assert(lake.currentSnapshot.files.forall(f =>
       java.nio.file.Files.exists(Bloom.sidecar(lake.root.resolve(f.path)))))
-    // another compaction WITHOUT blooms + expiry: orphaned data files take
-    // their sidecars with them, fresh files are bloom-less
+    // another compaction + expiry: orphaned data files take their sidecars
+    // with them, and every current file keeps one
     Maintain.compact(spark, lake)
     val (_, deleted) = Maintain.expireSnapshots(lake, keepLast = 1)
     assert(deleted > 0)
-    val leftover = {
+    val blooms = {
       val s = java.nio.file.Files.walk(lake.root)
       try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.count(_.getFileName.toString.endsWith(".bloom"))
+        .asScala.filter(_.getFileName.toString.endsWith(".bloom")).map(_.normalize).toSet
       finally s.close()
     }
-    // only blooms of still-referenced files may remain (compact output has
-    // none until the next buildBlooms)
-    assert(leftover == 0)
+    val current = lake.currentSnapshot.files
+      .map(f => Bloom.sidecar(lake.root.resolve(f.path)).normalize).toSet
+    assert(blooms == current,
+      s"orphan sidecars: ${blooms -- current}; uncovered files: ${current -- blooms}")
+    assert(spark.sql("SELECT count(*) FROM graft.bl").head().getLong(0) == 600)
   }
 
   implicit class IterOps[A](it: java.util.Iterator[A]) {

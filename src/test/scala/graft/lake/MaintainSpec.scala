@@ -258,6 +258,21 @@ class MaintainSpec extends SparkSpec {
     assert(df.filter(col("_deleted")).count() > 0)
   }
 
+  test("compacting a table without bloom sidecars writes none") {
+    val (table, _, _) = build()
+    def sidecars(): Seq[java.nio.file.Path] = {
+      val s = java.nio.file.Files.walk(table.root)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
+        .filter(_.getFileName.toString.endsWith(".bloom")).toList
+      finally s.close()
+    }
+    assert(sidecars().isEmpty)
+    val before = table.currentSnapshotId
+    Maintain.compact(spark, table)
+    assert(table.currentSnapshotId > before, "compaction must commit new files")
+    assert(sidecars().isEmpty, s"compaction wrote sidecars: ${sidecars()}")
+  }
+
   test("maybeGrowBuckets doubles only past the byte target") {
     val (table, _, _) = build()
     val before = table.currentSnapshot.nBuckets

@@ -15,8 +15,9 @@ import graft.cdc.Ingest
   * this spec hand-crafts a delta file holding TWO versions of each probed
   * url — winner first in one run, winner last in the other — and drives it
   * through every resolve path: the co-located catalog read
-  * (GraftBucketReader), the co-located COW merge (BucketMergeExec, whose
-  * table side is the same reader in raw mode), and compaction (raw-mode
+  * (GraftBucketReader, behind both `LakeTable.read` and SQL), the
+  * co-located COW merge (BucketMergeExec, whose table side is the same
+  * reader in raw mode), compaction and the delta-tier fold (raw-mode
   * resolve). Each must fold the whole url run, not just the head row per
   * file — also when the crafted file is its bucket's only file. */
 class MultiVersionFileSpec extends SparkSpec {
@@ -110,6 +111,63 @@ class MultiVersionFileSpec extends SparkSpec {
     assert(perUrl == 1L, s"compaction must emit one version per url, saw $perUrl")
     val s3 = state()
     assert(s3 == s2)
+
+    // path 4: the delta-tier fold (raw-mode resolve over the tier's files
+    // only) — a fresh crafted delta of the same shape, newer than the base
+    val rows4 = Seq(
+      row(urlA, bumped(urlA, 5), null, null, off = 10L, del = true, n), // winner
+      row(urlA, bumped(urlA, 4), "<p>stale A4</p>".getBytes, "stale A4", off = 20L, del = false, n),
+      row(urlB, bumped(urlB, 4), null, null, off = 10L, del = true, n),
+      row(urlB, bumped(urlB, 5), "<p>new B5</p>".getBytes, "new B5", off = 20L, del = false, n)) // winner
+    val crafted4 = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows4, 1), craftedSchema)
+      .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
+    val files4 = table.writeDataFilesTo(crafted4, "mvf-delta4", TableSchemas.current)
+    table.commitAppend(files4.map(_.copy(tier = DataFile.TierDelta)), None)
+    val foldBuckets = Set(urlA, urlB).map(LakeTable.bucketIdOf(_, n))
+    graft.cdc.Merge.compactDeltaTier(spark, table, foldBuckets)
+    val snap4 = table.currentSnapshot
+    assert(!snap4.files.exists(_.tier == DataFile.TierDelta), "the delta tier must be folded away")
+    assert(snap4.files.filter(_.tier == DataFile.TierMid).map(_.bucket).toSet == foldBuckets)
+    // stored rows newer than the base: one version per url, the run's
+    // winner — urlA's tombstone kept, urlB's live row
+    val fresh = table.readRaw(spark).filter(col("url").isin(urlA, urlB)).collect()
+      .filter(r => r.getAs[Timestamp]("warc_ts").after(bumped(r.getAs[String]("url"), 3)))
+      .map(r => (r.getAs[String]("url"), r.getAs[Timestamp]("warc_ts"),
+        r.getAs[Boolean]("_deleted"), r.getAs[String]("text")))
+      .sortBy(_._1).toSeq
+    assert(fresh == Seq(
+      (urlA, bumped(urlA, 5), true, null),
+      (urlB, bumped(urlB, 5), false, "new B5")).sortBy(_._1),
+      s"the delta fold must keep one version per url: $fresh")
+    val s4 = state()
+    assert(!s4.contains(urlA))
+    assert(s4(urlB) == "new B5")
+    assert(s4 - urlB == s3 - urlB)
+  }
+
+  test("LakeTable.read and SQL fold a two-version run in a bucket's ONLY file") {
+    val wh = tmpDir("mvf-read-wh").toString
+    graft.sql.GraftSql.enable(spark, wh)
+    spark.sql("DROP TABLE IF EXISTS graft.mvf_read")
+    spark.sql("CREATE TABLE graft.mvf_read (url STRING, warc_ts TIMESTAMP, html BINARY, " +
+      "text STRING, content_len BIGINT, lang STRING) USING graft TBLPROPERTIES('buckets'='4')")
+    val table = LakeTable.load(java.nio.file.Paths.get(wh, "mvf_read"))
+    val u = "https://mvf.example/read"
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+    def at(s: Long) = new Timestamp(t0.getTime + s * 1000)
+    val rows = Seq(
+      row(u, at(1), "<p>a</p>".getBytes, "a", off = 10L, del = false, 4),
+      row(u, at(2), "<p>b</p>".getBytes, "b", off = 20L, del = false, 4)) // winner
+    val crafted = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), craftedSchema)
+      .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
+    table.commitAppend(table.writeDataFilesTo(crafted, "mvf-read", TableSchemas.current), None)
+    assert(table.currentSnapshot.files.size == 1, "the crafted file must be the table's only file")
+
+    val viaRead = table.read(spark).collect().map(_.getAs[String]("text")).toSeq
+    assert(viaRead == Seq("b"), s"LakeTable.read must fold the run: got $viaRead")
+    val viaSql = spark.sql("SELECT text FROM graft.mvf_read").collect().map(_.getString(0)).toSeq
+    assert(viaSql == Seq("b"), s"SQL must fold the run: got $viaSql")
   }
 
   test("COW merge folds a multi-version run in its bucket's ONLY file") {
