@@ -18,8 +18,8 @@ import graft.functions.NativeFns
   * MERGE resolves by url under the `S3Offset`-style total order
   * `(warc_ts, offset, partition)` (`S3Offset.java:46-49`):
   *
-  *  1. prune — only target files whose `bucket` (and url bounds, from
-  *     parquet footers, unsigned-UTF-8 compared) intersect the batch are
+  *  1. prune — only target files whose `bucket` (and manifest url bounds,
+  *     unsigned-UTF-8 compared) intersect the batch are
   *     rewritten; everything else is carried forward untouched (manifest
   *     skip-scan ≙ chunk-index skip-scan);
   *  2. resolve winners CO-LOCATED ([[graft.plans.BucketMergeExec]]): the
@@ -40,9 +40,9 @@ import graft.functions.NativeFns
   *  4. text extraction runs POST-aggregation, only on batch-side winners
   *     (target winners carry their stored text) — the extractor cost is
   *     O(surviving rows), never O(events);
-  *  5. write per-bucket sorted by url (deterministic replay), manifest
-  *     stats from parquet footers, commit with the `(batchId, lineage)`
-  *     marker.
+  *  5. write per-bucket sorted by url (deterministic replay); the writing
+  *     tasks return each file's manifest stats, computed while writing;
+  *     commit with the `(batchId, lineage)` marker.
   *
   * Scale: shuffle bounded by batch rows; `nBuckets` sizes rewrite
   * granularity, write parallelism AND per-task merge state (grow via
@@ -351,7 +351,7 @@ object Merge {
         sum(when(col("_deleted"), 1L).otherwise(0L)).as("dels"))
 
     val nextId = snap.snapshotId + 1
-    val newFiles = table.writeDataFiles(merged, nextId, snap.schemaVersion)
+    val newFiles = table.writeDataFilesTo(merged, s"s$nextId", snap.schemaVersion)
     val row = obs.get
     val dels = row("dels").asInstanceOf[Long]
     val n = row("n").asInstanceOf[Long]
@@ -539,9 +539,9 @@ object Merge {
         .drop("_xt")
         .sortWithinPartitions(col("url"))
 
-      // 5. write + manifest from footers + commit
+      // 5. write (the tasks return each file's manifest entry) + commit
       val nextId = snap.snapshotId + 1
-      val newFiles = table.writeDataFiles(merged, nextId, snap.schemaVersion)
+      val newFiles = table.writeDataFilesTo(merged, s"s$nextId", snap.schemaVersion)
 
       val newTotal = untouched.map(_.rowCount).sum + newFiles.map(_.rowCount).sum
       val next = snap.copy(

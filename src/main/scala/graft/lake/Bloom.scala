@@ -16,10 +16,14 @@ import org.apache.spark.sql.SparkSession
   *  - blooms are SIDECARS, not manifest payload: snapshot JSON stays small,
   *    no format migration; presence is probed per candidate file (≤
   *    MaxFilesPerBucket of ONE bucket per lookup);
-  *  - built by [[Maintain.buildBlooms]] as a MAINTENANCE pass (one task per
-  *    file lacking a sidecar: column-pruned url read, per-file-sized bitset
-  *    written executor-side) — the ingest hot path is untouched, lookups use
-  *    blooms opportunistically and fall back to bounds where absent;
+  *  - two producers, one routine ([[writeSidecar]]): [[Maintain.buildBlooms]]
+  *    backfills files lacking a sidecar (one task per file: column-pruned
+  *    url read, per-file-sized bitset written executor-side), and a fold
+  *    whose replaced files had sidecars ([[Maintain.foldReplace]]) has the
+  *    writing task build each new file's sidecar from the url hashes it
+  *    already sees — so the sidecar exists before the commit publishes the
+  *    file. Other writes (per-batch deltas) get none: lookups use blooms
+  *    opportunistically and fall back to bounds where absent;
   *  - a bloom can only SKIP (membership "no"); false positives just read a
   *    file the bounds would have read anyway — correctness never depends
   *    on the sidecar;
@@ -42,8 +46,10 @@ object Bloom {
   }
 
   def hashOf(url: String): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-      org.apache.spark.unsafe.types.UTF8String.fromString(url), 42L)
+    hashOf(org.apache.spark.unsafe.types.UTF8String.fromString(url))
+
+  def hashOf(url: org.apache.spark.unsafe.types.UTF8String): Long =
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(url, 42L)
 
   private def set(bits: Array[Byte], h: Long): Unit = {
     val m = bits.length * 8
@@ -70,17 +76,27 @@ object Bloom {
     true
   }
 
-  /** Build sidecars for the given data files (absolute path → expected
+  /** The one sidecar routine: fold `n` url hashes into a bitset sized for
+    * THIS file's own key count (`bitsFor(n)`) and rename it into place next
+    * to the data file. The tmp name is attempt-unique, so retried or
+    * speculative tasks never tear each other's sidecar. */
+  private[lake] def writeSidecar(dataFile: Path, n: Long, hashes: Iterator[Long]): Unit = {
+    val bits = new Array[Byte](bitsFor(n) / 8)
+    hashes.foreach(set(bits, _))
+    val tmp = dataFile.resolveSibling(dataFile.getFileName.toString +
+      s".bloom.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    Files.write(tmp, bits)
+    Files.move(tmp, sidecar(dataFile),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Backfill sidecars for the given data files (absolute path → expected
     * rows); skips files that already have one. Returns #built.
     *
-    * Fully distributed: one task per missing file — each task reads ITS
-    * file's url column (column-pruned vectorized parquet read), folds the
-    * hashes into a bitset sized for THAT file's own row count
-    * (`bitsFor(rows)`, not one global maximum), and renames the sidecar
-    * into place next to the file it describes. Nothing but the built-count
-    * crosses to the driver — at 10^5 files the old groupBy+collect design
-    * funneled every bitset (up to 2^27 bytes each) through driver memory
-    * and paired them back to paths by URI-suffix heuristics. */
+    * Fully distributed: one task per missing file reads ITS file's url
+    * column (column-pruned vectorized parquet read) into [[writeSidecar]].
+    * Nothing but the built-count crosses to the driver. */
   def build(spark: SparkSession, files: Seq[(Path, Long)]): Int = {
     val missing = files.filterNot(f => Files.exists(sidecar(f._1)))
       .map { case (p, rows) => (p.toString, rows) }
@@ -103,37 +119,13 @@ object Bloom {
       val p = java.nio.file.Paths.get(pathStr)
       if (Files.exists(sidecar(p))) 0
       else {
-        val bits = new Array[Byte](bitsFor(rows) / 8)
         val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
           org.apache.spark.sql.catalyst.InternalRow.empty,
           org.apache.spark.paths.SparkPath.fromPathString(pathStr), 0L, Files.size(p))
-        val it = readFile(pf)
-        while (it.hasNext) set(bits,
-          org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-            it.next().getUTF8String(0), 42L))
-        // attempt-unique tmp + atomic rename: retried/speculative tasks
-        // never tear each other's sidecar
-        val tmp = p.resolveSibling(
-          p.getFileName.toString + s".bloom.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        Files.write(tmp, bits)
-        Files.move(tmp, sidecar(p),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        writeSidecar(p, rows, readFile(pf).map(r => hashOf(r.getUTF8String(0))))
         1
       }
     }.sum().toInt
-  }
-
-  /** Build blooms for the subset of `newFiles` a (possibly rebased or
-    * no-op'd) commit actually kept — shared by automatic (MOR hot-path) and
-    * maintenance compaction so "rebuild coverage for replacement files"
-    * stays one code path. */
-  def inherit(spark: SparkSession, table: LakeTable, committed: Snapshot,
-      newFiles: Seq[DataFile]): Int = {
-    val kept = committed.files.map(_.path).toSet
-    val keep = newFiles.filter(f => kept.contains(f.path))
-    if (keep.isEmpty) 0
-    else build(spark, keep.map(f => (table.root.resolve(f.path), f.rowCount)))
   }
 
   /** Driver-side sidecar cache, bounded LRU (access-ordered): point lookups

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -139,12 +139,12 @@ object FeedSource {
       (0 until node.size()).map(node.get(_).asText())
     }.getOrElse(Nil)
 
-  /** Conservative per-file url-key admission (the SELECT path's manifest
-    * bounds + bloom sidecar discipline applied to the feed): a file is
-    * skipped only when NO key fits its [urlMin, urlMax] or the bloom
-    * proves absence. Pruning can only skip, never lie — the query's
-    * filter is still applied above the scan. */
-  private[lake] def fileAdmits(root: Path, f: DataFile, keys: Seq[String]): Boolean =
+  /** Conservative per-file url-key admission, shared by the feed and the
+    * resolved lake scan (`GraftLakeScan`): a file is skipped only when NO
+    * key fits its manifest [urlMin, urlMax] or its bloom sidecar (when
+    * present) proves absence. Pruning can only skip, never lie — the
+    * query's filter is still applied above the scan. */
+  private[graft] def fileAdmits(root: Path, f: DataFile, keys: Seq[String]): Boolean =
     keys.isEmpty || {
       val admitted = keys.filter(u =>
         f.urlMax == LakeTable.NoStatsMax ||
@@ -173,38 +173,20 @@ object FeedSource {
     loOk && hiOk
   }
 
-  /** Driver-built parquet reader closures, one per known schema version ≤
-    * the pin (same discipline as GraftLakeScan.createReaderFactory).
-    * `required` is the PRUNED output schema (column-pruning pushdown —
+  /** Driver-built parquet reader closures, one per schema version among
+    * the span's files — the bucket scan's own readers
+    * ([[graft.sql.GraftBucketReader.parquetReaders]]). `required` is the
+    * PRUNED output schema (column-pruning pushdown —
     * [[FeedScan.pruneColumns]]): each version's parquet reader requests only
     * the required columns it physically holds, so a projection that skips
     * `html` never decodes the payload pages — at web scale the payload IS
-    * the scan cost. */
-  private[lake] def readerFactory(pinnedVersion: Int, required: StructType,
-      rowFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil): FeedReaderFactory = {
-    val spark = SparkSession.active
-    val readers = (1 to pinnedVersion).map { v =>
-      val phys = TableSchemas.forVersion(v)
-      val physRequired = StructType(
-        required.fields.filter(f => phys.fieldNames.contains(f.name))
-          .map(f => phys.fields(phys.fieldNames.indexOf(f.name))))
-      // row-group/page skipping inside admitted files: the feed emits raw
-      // rows with the query's filter re-applied above, so any pushed
-      // url/warc_ts predicate is sound here; parquet quietly skips
-      // predicates a file's physical types can't evaluate (legacy INT96)
-      v -> new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        .buildReaderWithPartitionValues(
-          sparkSession = spark,
-          dataSchema = phys,
-          partitionSchema = new StructType(),
-          requiredSchema = physRequired,
-          filters = rowFilters.filter(f =>
-            f.references.forall(phys.fieldNames.contains(_))),
-          options = Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          hadoopConf = spark.sessionState.newHadoopConf())
-    }.toMap
-    new FeedReaderFactory(readers, pinnedVersion, required)
-  }
+    * the scan cost. Row-group/page skipping inside admitted files: the feed
+    * emits raw rows with the query's filter re-applied above, so any pushed
+    * url/warc_ts predicate is sound here. */
+  private[lake] def readerFactory(versions: Seq[Int], required: StructType,
+      rowFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil): FeedReaderFactory =
+    new FeedReaderFactory(graft.sql.GraftBucketReader.parquetReaders(
+      SparkSession.active, required, versions, rowFilters), required)
 }
 
 final class FeedTable(rootPath: String) extends Table with SupportsRead {
@@ -360,7 +342,7 @@ final class FeedScan(root: Path, pinnedVersion: Int, options: CaseInsensitiveStr
     new FeedBatch(batchFiles()
       .map { case (id, f) =>
         FeedInputPartition(root.resolve(f.path).toString, f.bytes, f.schemaVersion, id)
-      }.toArray, pinnedVersion, required, pushedFilters().toSeq)
+      }.toArray, required, pushedFilters().toSeq)
 
   /** Manifest-exact statistics over the pruned span (see
     * [[GraftLakeScan.estimateStatistics]] for the rationale). Defensive:
@@ -430,12 +412,14 @@ final case class FeedInputPartition(
 /** One-shot batch plan over a pre-resolved snapshot span (see
   * [[FeedScan.toBatch]] — the span is resolved at planning time, so the
   * DataFrame is stable even while the table keeps committing). */
-final class FeedBatch(partitions: Array[InputPartition], pinnedVersion: Int,
+final class FeedBatch(partitions: Array[InputPartition],
     required: StructType,
     rowFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = partitions
   override def createReaderFactory(): PartitionReaderFactory =
-    FeedSource.readerFactory(pinnedVersion, required, rowFilters)
+    FeedSource.readerFactory(
+      partitions.map(_.asInstanceOf[FeedInputPartition].schemaVersion).toSeq,
+      required, rowFilters)
 }
 
 final class FeedMicroBatchStream(root: Path, pinnedVersion: Int,
@@ -463,6 +447,11 @@ final class FeedMicroBatchStream(root: Path, pinnedVersion: Int,
       .take(8).map(b => f"$b%02x").mkString)
 
   private var pin: Option[SnapshotPin] = None
+
+  // schema versions of the span planned last: a micro-batch's scan plans
+  // its partitions before it asks for the reader factory, so the factory
+  // builds readers for exactly the versions the batch reads
+  @volatile private var plannedVersions: Seq[Int] = 1 to pinnedVersion
 
   /** First pin of the stream's life (fresh start OR restart): lease the
     * span base, then drop crashed predecessors' orphaned leases — they
@@ -553,14 +542,16 @@ final class FeedMicroBatchStream(root: Path, pinnedVersion: Int,
     // skips every file whose bounds/bloom exclude its keys); the span's
     // lineage above is recorded UNPRUNED: the batch still covers its
     // snapshots even when every file is skipped
-    files.filter { case (_, f) => FeedSource.fileAdmits(root, f, urlKeys) }
+    val parts = files.filter { case (_, f) => FeedSource.fileAdmits(root, f, urlKeys) }
       .map { case (id, f) =>
         FeedInputPartition(root.resolve(f.path).toString, f.bytes, f.schemaVersion, id)
-      }.toArray
+      }
+    plannedVersions = parts.map(_.schemaVersion).distinct
+    parts.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    FeedSource.readerFactory(pinnedVersion, outSchema,
+    FeedSource.readerFactory(plannedVersions, outSchema,
       // the urlKeys point predicate also skips row groups INSIDE admitted
       // files (the batch path gets this from pushed filters; streaming
       // scans receive no filter pushdown, so derive it from the option)
@@ -583,42 +574,23 @@ final class FeedMicroBatchStream(root: Path, pinnedVersion: Int,
 
 final class FeedReaderFactory(
     readers: Map[Int, org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]],
-    pinnedVersion: Int, required: StructType) extends PartitionReaderFactory {
+    required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new FeedPartitionReader(partition.asInstanceOf[FeedInputPartition], readers, required)
 }
 
-/** Flat file reader: physical rows aligned to the PRUNED output schema
-  * (widen-cast present columns, null-fill added ones, `_feed_snapshot`
-  * synthesized when requested). The parquet reader already returns only the
-  * required physical columns (in required order — see
-  * [[FeedSource.readerFactory]]), so this projection binds against that
-  * pruned row. No resolve — the feed emits the raw multi-version rows and
-  * downstream LWW picks winners by envelope, which is what makes COW
-  * re-emission and duplicate replay harmless. */
+/** Flat file reader: physical rows aligned to the PRUNED output schema by
+  * the bucket scan's alignment (widen-cast present columns, null-fill added
+  * ones), with `_feed_snapshot` synthesized when requested. No resolve —
+  * the feed emits the raw multi-version rows and downstream LWW picks
+  * winners by envelope, which is what makes COW re-emission and duplicate
+  * replay harmless. */
 final class FeedPartitionReader(p: FeedInputPartition,
     readers: Map[Int, org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]],
     required: StructType) extends PartitionReader[InternalRow] {
 
-  private val proj: UnsafeProjection = {
-    val phys = TableSchemas.forVersion(p.schemaVersion)
-    // the parquet reader's output columns: required ∩ phys, in required order
-    val physRequired = required.fields.filter(f => phys.fieldNames.contains(f.name))
-      .map(f => phys.fields(phys.fieldNames.indexOf(f.name)))
-    val exprs: Seq[Expression] = required.fields.toSeq.map { f =>
-      if (f.name == "_feed_snapshot") Literal(p.snapshotId, LongType)
-      else {
-        val i = physRequired.indexWhere(_.name == f.name)
-        if (i < 0) Literal.create(null, f.dataType)
-        else {
-          val br = BoundReference(i, physRequired(i).dataType, physRequired(i).nullable)
-          if (physRequired(i).dataType == f.dataType) br
-          else Cast(br, f.dataType, Some("UTC"))
-        }
-      }
-    }
-    UnsafeProjection.create(exprs.toArray)
-  }
+  private val proj: UnsafeProjection = graft.sql.GraftBucketReader.alignProj(
+    required, p.schemaVersion, Map("_feed_snapshot" -> Literal(p.snapshotId, LongType)))
 
   private val it: Iterator[InternalRow] = {
     val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(

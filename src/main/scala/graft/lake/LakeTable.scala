@@ -1,9 +1,7 @@
 package graft.lake
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.collection.parallel.CollectionConverters._
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +20,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout:
   * {{{
-  *   <root>/data/s<snapshotId>/bucket=<n>/part-*.parquet
+  *   <root>/data/s<snapshotId>/bucket=<n>/part-<task>-<uuid>.parquet
   *   <root>/meta/snap-<snapshotId>.json
   *   <root>/meta/VERSION            — contains the current snapshotId
   * }}}
@@ -49,17 +47,13 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
   private def refDir = if (isMain) metaDir else metaDir.resolve("refs").resolve(ref)
   private def versionFile = refDir.resolve("VERSION")
   private def snapFile(id: Long) = refDir.resolve(s"snap-$id.json")
-  /** Branch data dirs are prefixed so a branch commit can never collide
-    * with (and `mode(overwrite)`-clobber) main's `data/s<id>` dir for the
-    * same id — the two chains allocate ids independently past the fork.
-    * The FORK id is part of the prefix because the NAME alone does not
-    * identify an incarnation: publish grafts `ref-<name>-…` dirs into
-    * main's live file set, and a later re-fork of the same name reuses
-    * snapshot ids ≤ the old head — without the fork id its overwrite
-    * writes would clobber main's published files before any commit.
-    * Distinct incarnations can share a fork id only when the earlier one
-    * was DROPPED (publish advances main), whose leftover dirs are dead by
-    * definition — safe to overwrite. */
+  /** Branch data dirs are prefixed so a branch's files stay apart from
+    * main's `data/s<id>` dir for the same id — the two chains allocate ids
+    * independently past the fork (file names are unique anyway, so no write
+    * can clobber another's). The FORK id is part of the prefix so each
+    * incarnation of a re-forked name has its own dirs: publish grafts
+    * `ref-<name>-…` files into main's live file set, and a later re-fork of
+    * the same name reuses snapshot ids ≤ the old head. */
   private lazy val dataDirPrefix =
     if (isMain) "" else s"ref-$ref-f${forkSnapshotId}-"
 
@@ -298,10 +292,10 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
         // exactly-once: a concurrent path already landed this batch — our
         // just-written files are referenced by no snapshot; delete them
         // (expireSnapshots only GCs files referenced by EXPIRED snapshots)
-        added.foreach(f => Files.deleteIfExists(root.resolve(f.path)))
+        discard(added)
         cur
       } else if (expectedBuckets.exists(_ != cur.nBuckets)) {
-        added.foreach(f => Files.deleteIfExists(root.resolve(f.path)))
+        discard(added)
         throw new BucketLayoutChanged(
           s"table rebucketed to ${cur.nBuckets} buckets while this batch was " +
             s"shuffled under ${expectedBuckets.get} — recompute under the new layout")
@@ -329,7 +323,7 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
       val cur = currentSnapshot
       val curPaths = cur.files.map(_.path).toSet // set lookups: replaced may be the WHOLE table
       if (!replacedPaths.forall(curPaths.contains)) {
-        added.foreach(f => Files.deleteIfExists(root.resolve(f.path)))
+        discard(added)
         cur
       } else {
         val keep = cur.files.filterNot(f => replacedPaths.contains(f.path))
@@ -866,79 +860,35 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     df.select(cols: _*)
   }
 
-  /** Write `df` (current-schema columns + an int `bucket` column) as one
-    * parquet file per bucket under `data/s<newSnapshotId>/`, rows sorted by
-    * `url` within each file (deterministic content for replay-idempotence —
-    * SURVEY.md §7.4.3). Manifest entries carry exact per-file row counts and
-    * url bounds, both read from the parquet footers (metadata-only, parallel)
-    * — no extra stats pass over the data.
+  /** Write `df` (current-schema columns + an int `bucket` column, each
+    * partition holding url-sorted runs of whole buckets) as one parquet
+    * file per bucket run under `data/<branch prefix><dirName>/bucket=<n>/`,
+    * file names unique per task attempt, so concurrent writers may share a
+    * `dirName` (ingest uses `s<newSnapshotId>`; maintenance adds a random
+    * tag). One Spark job, one SQL execution of `df`'s plan: each task
+    * returns its files' complete manifest entries — row count, url and
+    * `warc_ts` bounds, bytes — computed while writing ([[DataFileWriter]]).
+    * Nothing is published until the caller commits a snapshot listing the
+    * files; unreferenced files are orphans for [[Maintain.removeOrphanFiles]].
+    * `blooms` also writes each file's url bloom sidecar ([[Bloom]]).
     *
-    * WRITER INVARIANT: every caller hands in AT MOST ONE version per url
-    * (per-batch dedup, LWW-resolved compaction/rebucket output, resolved
-    * catch-up increments), so stored files stay as small as the winners.
-    * No reader depends on it: every resolved read and every fold runs the
-    * k-way LWW fold, which also folds several versions of a url inside
-    * one file (a foreign writer's file, or a writer bug). */
-  def writeDataFiles(df: DataFrame, newSnapshotId: Long, schemaVersion: Int): Vector[DataFile] =
-    writeDataFilesTo(df, s"s$newSnapshotId", schemaVersion)
+    * WRITER INVARIANT, asserted by the writer: urls are non-null and
+    * strictly increasing within a file — every caller hands in AT MOST ONE
+    * version per url (per-batch dedup, LWW-resolved fold/rebucket output,
+    * resolved catch-up increments), url-sorted, so stored files stay as
+    * small as the winners. A violating write fails and commits nothing. No
+    * reader depends on it: every resolved read and every fold runs the
+    * k-way LWW fold, which also folds several versions of a url inside one
+    * file (a foreign writer's file). */
+  def writeDataFilesTo(df: DataFrame, dirName: String, schemaVersion: Int,
+      blooms: Boolean = false): Vector[DataFile] =
+    DataFileWriter.write(df, root, s"data/$dataDirPrefix$dirName", schemaVersion, blooms)
 
-  /** As [[writeDataFiles]] but with an explicit directory name — maintenance
-    * jobs that may run CONCURRENTLY with ingest must write to a unique dir
-    * (e.g. `s<id>c<rand>`): both pick `snapshotId+1` from the same head, and
-    * `mode(overwrite)` on a shared `data/s<id>` would clobber the other
-    * writer's files before either commits. */
-  def writeDataFilesTo(df: DataFrame, dirName: String, schemaVersion: Int): Vector[DataFile] = {
-    val relDir = s"data/$dataDirPrefix$dirName"
-    val outDir = root.resolve(relDir)
-    // Dictionary encoding is pure overhead on the unique-heavy columns
-    // (url/html/text never repeat within a file: per-url LWW winners), and
-    // building + overflowing the dictionaries costs ~12% of ingest wall
-    // (measured at local[8]: 151k -> 170k ev/s without them). Keep it for
-    // the low-cardinality columns (lang, op) where RLE-dict genuinely
-    // shrinks pages. Options land in the write job's hadoop conf (scoped to
-    // THIS write, not the session).
-    val dictOff = Seq("url", "html", "text").foldLeft(
-      df.write.mode("overwrite").partitionBy("bucket"))(
-      (b, c) => b.option(s"parquet.enable.dictionary#$c", "false"))
-    // Timestamps as TIMESTAMP_MICROS, not Spark's legacy INT96 default:
-    // INT96 footers carry no usable min/max, which would silently kill the
-    // manifest's warc_ts bounds (the time-range file prune). Parquet writers
-    // read this from the SESSION conf (there is no per-write option and
-    // prepareWrite overwrites any hadoop-conf value), so set-and-restore
-    // around the job. A concurrent graft write racing the restore can only
-    // leave MICROS set — a standards-compliant encoding every reader
-    // handles per-file; correctness is unaffected either way. The restore
-    // reads the EXPLICIT setting: getOption would return the built-in
-    // default for an unset key and pin it as a session value.
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = df.sparkSession.conf.getAll.get(tsKey)
-    df.sparkSession.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try dictOff.parquet(outDir.toString)
-    finally prevTsType match {
-      case Some(v) => df.sparkSession.conf.set(tsKey, v)
-      case None => df.sparkSession.conf.unset(tsKey)
-    }
-    // enumerate written files
-    val found = Vector.newBuilder[(Path, Int)]
-    if (Files.isDirectory(outDir)) {
-      val ds = Files.list(outDir)
-      try ds.iterator().forEachRemaining { bdir =>
-        val n = bdir.getFileName.toString
-        if (n.startsWith("bucket=")) {
-          val b = n.stripPrefix("bucket=").toInt
-          val fs = Files.list(bdir)
-          try fs.iterator().forEachRemaining { f =>
-            if (f.getFileName.toString.endsWith(".parquet")) found += ((f, b))
-          } finally fs.close()
-        }
-      } finally ds.close()
-    }
-    found.result().par.map { case (p, b) =>
-      val (rows, uMin, uMax, tsMin, tsMax) =
-        LakeTable.parquetStatsWithTs(p, "url", "warc_ts")
-      DataFile(root.relativize(p).toString, b, rows, uMin, uMax, schemaVersion,
-        Files.size(p), tsMinMicros = tsMin, tsMaxMicros = tsMax)
-    }.toVector.seq.sortBy(f => (f.bucket, f.path))
+  /** Remove written-but-uncommitted files (and any bloom sidecars). */
+  private def discard(files: Seq[DataFile]): Unit = files.foreach { f =>
+    val p = root.resolve(f.path)
+    Files.deleteIfExists(p)
+    Files.deleteIfExists(Bloom.sidecar(p))
   }
 }
 
@@ -1079,16 +1029,9 @@ object LakeTable {
 
   def exists(root: Path): Boolean = Files.exists(root.resolve("meta").resolve("VERSION"))
 
-  /** Exact row count from the parquet footer (no data pages read). */
-  def parquetRowCount(p: Path): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
-  /** Fallback bounds when a column's parquet stats are absent: "" is
+  /** Unbounded url bounds (manifests from writers that took them from
+    * parquet footers with no stats; the table writer always records exact
+    * bounds): "" is
     * genuinely minimal in byte order; `NoStatsMax` is a SENTINEL the prune
     * must treat as "unbounded high" (it is NOT byte-maximal — supplementary-
     * plane code points encode above EF BF BF). */
@@ -1114,109 +1057,6 @@ object LakeTable {
   def compareUtf8(a: String, b: String): Int =
     java.util.Arrays.compareUnsigned(
       a.getBytes(StandardCharsets.UTF_8), b.getBytes(StandardCharsets.UTF_8))
-
-  /** (rowCount, urlMin, urlMax) from the parquet footer — metadata-only.
-    * Min/max accumulated in UNSIGNED UTF-8 BYTE order (matching both the
-    * stat bytes' native order and Spark's string min/max), then decoded for
-    * the manifest — we never truncate stats on our own files, so the bytes
-    * are whole valid-UTF-8 values and the round trip is lossless. Falls
-    * back to the sentinel bounds if stats are absent. */
-  def parquetStats(p: Path, column: String): (Long, String, String) = {
-    import scala.jdk.CollectionConverters._
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val rows = r.getRecordCount
-      var mn: Array[Byte] = null
-      var mx: Array[Byte] = null
-      r.getFooter.getBlocks.asScala.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          if (c.getPath.toDotString == column) {
-            val st = c.getStatistics
-            if (st != null && st.hasNonNullValue) {
-              val bmin = st.getMinBytes
-              val bmax = st.getMaxBytes
-              if (mn == null || java.util.Arrays.compareUnsigned(bmin, mn) < 0) mn = bmin
-              if (mx == null || java.util.Arrays.compareUnsigned(bmax, mx) > 0) mx = bmax
-            }
-          }
-        }
-      }
-      (rows,
-        if (mn == null) NoStatsMin else new String(mn, StandardCharsets.UTF_8),
-        if (mx == null) NoStatsMax else new String(mx, StandardCharsets.UTF_8))
-    } finally r.close()
-  }
-
-  /** (rowCount, urlMin, urlMax, tsMinMicros, tsMaxMicros) in ONE footer
-    * open — the url string stats of [[parquetStats]] plus the INT64 bounds
-    * of `tsColumn` (epoch micros; graft writes timestamps as
-    * TIMESTAMP_MICROS — see [[LakeTable.writeDataFilesTo]]). Falls back to
-    * the unbounded sentinels when the column's physical type is not INT64
-    * (legacy INT96 files carry no usable stats), stats are absent, or the
-    * footer reports nulls — a prune must then admit the file. */
-  def parquetStatsWithTs(p: Path, urlColumn: String, tsColumn: String)
-      : (Long, String, String, Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val rows = r.getRecordCount
-      var mn: Array[Byte] = null
-      var mx: Array[Byte] = null
-      var tsMn = DataFile.NoTsMin
-      var tsMx = DataFile.NoTsMax
-      var tsOk = true // every row group must contribute usable bounds
-      var tsSeen = false
-      r.getFooter.getBlocks.asScala.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          val dot = c.getPath.toDotString
-          if (dot == urlColumn) {
-            val st = c.getStatistics
-            if (st != null && st.hasNonNullValue) {
-              val bmin = st.getMinBytes
-              val bmax = st.getMaxBytes
-              if (mn == null || java.util.Arrays.compareUnsigned(bmin, mn) < 0) mn = bmin
-              if (mx == null || java.util.Arrays.compareUnsigned(bmax, mx) > 0) mx = bmax
-            }
-          } else if (dot == tsColumn) {
-            tsSeen = true
-            val st = c.getStatistics
-            // the physical type AND the logical unit must both be what the
-            // manifest promises: an INT64 TIMESTAMP_MILLIS footer (possible
-            // if a concurrent conf write races the session-level
-            // TIMESTAMP_MICROS pin in writeDataFilesTo) would otherwise be
-            // recorded as micros — bounds ~1000x off, pruning live rows
-            val int64 = c.getPrimitiveType.getPrimitiveTypeName ==
-              org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 &&
-              (c.getPrimitiveType.getLogicalTypeAnnotation match {
-                case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                  t.getUnit == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS
-                case _ => false
-              })
-            if (int64 && st != null && st.hasNonNullValue &&
-                st.isNumNullsSet && st.getNumNulls == 0) {
-              val lo = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-              val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-              if (tsMn == DataFile.NoTsMin || lo < tsMn) tsMn = lo
-              if (tsMx == DataFile.NoTsMax || hi > tsMx) tsMx = hi
-            } else tsOk = false
-          }
-        }
-      }
-      val (outMn, outMx) =
-        if (tsOk && tsSeen && rows > 0) (tsMn, tsMx)
-        else (DataFile.NoTsMin, DataFile.NoTsMax)
-      (rows,
-        if (mn == null) NoStatsMin else new String(mn, StandardCharsets.UTF_8),
-        if (mx == null) NoStatsMax else new String(mx, StandardCharsets.UTF_8),
-        outMn, outMx)
-    } finally r.close()
-  }
 
   /** The table's hash-bucket of a url column: `pmod(murmur3_hash(url), n)` —
     * deliberately IDENTICAL to Spark's `HashPartitioning.partitionIdExpression`

@@ -45,9 +45,9 @@ object Maintain {
     * replaces exactly the files it read ([[LakeTable.commitReplace]]: deltas
     * a concurrent ingest appended since the pin survive the rebase; a
     * competing maintenance that already replaced the inputs turns this into
-    * a clean no-op). Bloom sidecars are inherited when any replaced file had
-    * one, so point lookups stay pruned without waiting for the maintenance
-    * pass. */
+    * a clean no-op). When any replaced file had a bloom sidecar, the
+    * writing tasks build the new files' sidecars too, so point lookups stay
+    * pruned without waiting for the maintenance pass. */
   private[graft] def foldReplace(spark: SparkSession, table: LakeTable,
       outTier: Int, dirTag: String, dropTombstonesOlderThanMicros: Long = Long.MinValue)(
       select: Snapshot => Seq[DataFile]): Snapshot = {
@@ -66,12 +66,10 @@ object Maintain {
         .withColumn("bucket", LakeTable.bucketOf(col("url"), snap.nBuckets))
         .sortWithinPartitions(col("url"))
       val outDir = s"s${snap.snapshotId + 1}$dirTag${java.util.UUID.randomUUID().toString.take(8)}"
-      val newFiles = table.writeDataFilesTo(out, outDir, snap.schemaVersion)
+      val blooms = sel.exists(f => Files.exists(Bloom.sidecar(table.root.resolve(f.path))))
+      val newFiles = table.writeDataFilesTo(out, outDir, snap.schemaVersion, blooms)
         .map(_.copy(tier = outTier))
-      val next = table.commitReplace(sel, newFiles)
-      if (sel.exists(f => Files.exists(Bloom.sidecar(table.root.resolve(f.path)))))
-        Bloom.inherit(spark, table, next, newFiles): Unit
-      next
+      table.commitReplace(sel, newFiles)
     } finally pin.release()
   }
 
@@ -105,7 +103,7 @@ object Maintain {
       .withColumn("bucket", LakeTable.bucketOf(col("url"), newBuckets))
       .sortWithinPartitions(col("url"))
     val nextId = snap.snapshotId + 1
-    val newFiles = table.writeDataFiles(out, nextId, snap.schemaVersion)
+    val newFiles = table.writeDataFilesTo(out, s"s$nextId", snap.schemaVersion)
     val next = snap.copy(snapshotId = nextId, parentId = snap.snapshotId,
       nBuckets = newBuckets, files = newFiles,
       totalRows = newFiles.map(_.rowCount).sum)
@@ -197,7 +195,7 @@ object Maintain {
     * files. The multi-batch increment is LWW-RESOLVED before writing: a
     * url that changed in several chased batches must not write several
     * versions into ONE delta file — writers keep one version per url per
-    * file (see [[LakeTable.writeDataFiles]]; resolving within the increment
+    * file (see [[LakeTable.writeDataFilesTo]]; resolving within the increment
     * is exact: any dropped row is beaten by a kept row of the same url, so
     * the global LWW winner next to the new base is unchanged; tombstone
     * winners are kept). The groupBy(url) rides the repartition's hash

@@ -33,14 +33,14 @@ final case class DataFile(
       * Absent in pre-tier manifests → 0 (one full fold re-stamps). */
     tier: Int = 0,
     /** Event-time bounds of the file's `warc_ts` column in epoch MICROS,
-      * from the parquet footer. Sentinels ([[DataFile.NoTsMin]] /
-      * [[DataFile.NoTsMax]]) mean "unbounded" — pre-stats manifests, files
-      * whose footers carry no usable stats (legacy INT96 encoding), or a
-      * footer reporting nulls in the column. Pruning must ADMIT unbounded
-      * files. Used by the time-range prune: on the LWW-resolved read only
-      * LOWER-bound predicates may skip files (see GraftLakeScan — dropping
-      * a file of NEWER rows could un-shadow an older version); the raw
-      * change feed may prune on both bounds. */
+      * computed by the writing task ([[LakeTable.writeDataFilesTo]]).
+      * Sentinels ([[DataFile.NoTsMin]] / [[DataFile.NoTsMax]]) mean
+      * "unbounded" — pre-stats manifests, legacy files whose footers carried
+      * no usable stats (INT96 encoding), or a null in the column. Pruning
+      * must ADMIT unbounded files. Used by the time-range prune: on the
+      * LWW-resolved read only LOWER-bound predicates may skip files (see
+      * GraftLakeScan — dropping a file of NEWER rows could un-shadow an
+      * older version); the raw change feed may prune on both bounds. */
     tsMinMicros: Long = DataFile.NoTsMin,
     tsMaxMicros: Long = DataFile.NoTsMax)
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expressi
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.lake.{LakeTable, TableSchemas}
@@ -518,17 +518,20 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
   // --- TopN pushdown: `ORDER BY url [ASC] LIMIT k` reuses the same
   // early-exit — the drain emits ascending url, so its first k rows ARE
   // the bucket's k smallest urls. Partial push: Spark merges the buckets'
-  // prefixes above. url is non-null, so either null ordering is vacuously
-  // satisfied. Anything else (DESC, other columns) declines — the drain
-  // order can't serve it.
+  // prefixes above. NULLS FIRST (the ASC default) always matches the drain;
+  // NULLS LAST only when the scan's url field is non-nullable (the table
+  // writer rejects null urls, so the schema says so). Anything else (DESC,
+  // other columns) declines — the drain order can't serve it.
   override def pushTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       limit: Int): Boolean = {
+    import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
+    val urlNullable = readSchema().find(_.name == "url").forall(_.nullable)
     val urlAsc = orders.length == 1 && (orders(0).expression() match {
       case r: org.apache.spark.sql.connector.expressions.NamedReference =>
         r.fieldNames.sameElements(Array("url")) &&
-          orders(0).direction() ==
-            org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING
+          orders(0).direction() == SortDirection.ASCENDING &&
+          (orders(0).nullOrdering() == NullOrdering.NULLS_FIRST || !urlNullable)
       case _ => false
     })
     if (urlAsc) pushedLimit = Some(limit)
@@ -658,16 +661,7 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
           .groupBy(u => LakeTable.bucketIdOf(u, snap.nBuckets))
         byBucket.collect {
           case (b, fs) if wanted.contains(b) =>
-            b -> fs.filter { f =>
-              val admitted = wanted(b).filter(u =>
-                f.urlMax == LakeTable.NoStatsMax ||
-                  (LakeTable.compareUtf8(f.urlMin, u) <= 0 &&
-                    LakeTable.compareUtf8(u, f.urlMax) <= 0))
-              // bloom sidecar (when present) can skip delta files whose
-              // bounds admit the key but that cannot contain it
-              admitted.nonEmpty &&
-                graft.lake.Bloom.mightContainAny(lake.root.resolve(f.path), admitted)
-            }
+            b -> fs.filter(f => graft.lake.FeedSource.fileAdmits(lake.root, f, wanted(b)))
         }.filter(_._2.nonEmpty)
       }
     selected.map { case (b, fs) => b -> fs.toSeq }
@@ -787,20 +781,46 @@ object GraftBucketReader {
       : Map[Int, FileReader] =
     versions.distinct.map { v =>
       val phys = TableSchemas.forVersion(v)
-      val physRequired = StructType(
-        scanSchema.fields.filter(f => phys.fieldNames.contains(f.name))
-          .map(f => phys.fields(phys.fieldNames.indexOf(f.name))))
       v -> new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
         .buildReaderWithPartitionValues(
           sparkSession = spark,
           dataSchema = phys,
           partitionSchema = new StructType(),
-          requiredSchema = physRequired,
-          filters = filters,
+          requiredSchema = StructType(physRequired(scanSchema, v)),
+          // a version's reader gets only the filters its columns can bind
+          filters = filters.filter(_.references.forall(phys.fieldNames.contains(_))),
           // rows, not ColumnarBatch: the fold consumes row iterators
           options = Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
           hadoopConf = spark.sessionState.newHadoopConf())
     }.toMap
+
+  /** The columns of `target` a version-`v` file physically holds, with
+    * their physical types, in `target` order: what its parquet reader
+    * returns. */
+  private def physRequired(target: StructType, v: Int): Array[StructField] = {
+    val phys = TableSchemas.forVersion(v)
+    target.fields.filter(f => phys.fieldNames.contains(f.name))
+      .map(f => phys.fields(phys.fieldNames.indexOf(f.name)))
+  }
+
+  /** Align a version-`v` row from its [[parquetReaders]] reader to
+    * `target`: widen-cast present columns, null-fill added ones, and take
+    * `synthetic` columns (not stored in files) from their expressions. */
+  def alignProj(target: StructType, v: Int,
+      synthetic: Map[String, Expression] = Map.empty): UnsafeProjection = {
+    val phys = physRequired(target, v)
+    val exprs: Seq[Expression] = target.fields.toSeq.map { f =>
+      val i = phys.indexWhere(_.name == f.name)
+      if (synthetic.contains(f.name)) synthetic(f.name)
+      else if (i < 0) Literal.create(null, f.dataType)
+      else {
+        val br = BoundReference(i, phys(i).dataType, phys(i).nullable)
+        if (phys(i).dataType == f.dataType) br
+        else Cast(br, f.dataType, Some("UTC"))
+      }
+    }
+    UnsafeProjection.create(exprs.toArray)
+  }
 }
 
 /** Streaming k-way LWW merge over one bucket's url-sorted files: the one
@@ -826,30 +846,10 @@ final class GraftBucketReader(
   private val partIdx = idx("_seq_part")
   private val delIdx = idx("_deleted")
 
-  /** Align a physical-version row (already pruned to the working columns it
-    * holds, in working order — the parquet readers' requiredSchema) to the
-    * working layout: widen-cast present columns, null-fill added ones (the
-    * generic form of the DataFrame-side `align`). */
-  private def alignProj(version: Int): UnsafeProjection = {
-    val phys = TableSchemas.forVersion(version)
-    val physRequired = full.fields.filter(f => phys.fieldNames.contains(f.name))
-      .map(f => phys.fields(phys.fieldNames.indexOf(f.name)))
-    val exprs: Seq[Expression] = full.fields.toSeq.map { f =>
-      val i = physRequired.indexWhere(_.name == f.name)
-      if (i < 0) Literal.create(null, f.dataType)
-      else {
-        val br = BoundReference(i, physRequired(i).dataType, physRequired(i).nullable)
-        if (physRequired(i).dataType == f.dataType) br
-        else Cast(br, f.dataType, Some("UTC"))
-      }
-    }
-    UnsafeProjection.create(exprs.toArray)
-  }
-
   // per-file iterators, each aligned with its OWN projection instance so the
   // heads (one live row per file) occupy distinct buffers
   private val its: Array[Iterator[InternalRow]] = p.files.toArray.map { case (path, bytes, v) =>
-    val proj = alignProj(v)
+    val proj = GraftBucketReader.alignProj(full, v)
     val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
       InternalRow.empty, org.apache.spark.paths.SparkPath.fromPathString(path), 0L, bytes)
     // OPTION_RETURNING_BATCH=false → the reader yields rows, never batches

@@ -88,8 +88,9 @@ class TieredCompactionSpec extends SparkSpec {
     assert(want.exists(_._6), "the deltas must hold tombstone winners")
 
     val buckets = deltas.map(_.bucket).toSet
+    // the table writer runs as one SQL execution of the fold's own plan
     val writes = captureQueries { Merge.compactDeltaTier(spark, table, buckets): Unit }
-      .map(_.executedPlan.treeString).filter(_.contains("InsertIntoHadoopFsRelation"))
+      .map(_.executedPlan.treeString).filter(_.contains("GraftLakeScan"))
     assert(writes.size == 1, s"expected ONE fold write job, got ${writes.size}")
     assert(writes.head.contains("GraftLakeScan"), writes.head)
     assert(!writes.head.contains("Exchange"), writes.head)

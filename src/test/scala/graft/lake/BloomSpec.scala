@@ -88,6 +88,38 @@ class BloomSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM graft.bl").head().getLong(0) == 600)
   }
 
+  test("a folded file's sidecar equals, bit for bit, the one the backfill builds") {
+    val wh = tmpDir("bloom-fold-wh").toString
+    GraftSql.enable(spark, wh)
+    spark.sql("DROP TABLE IF EXISTS graft.blf")
+    spark.sql("CREATE TABLE graft.blf (url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, content_len BIGINT, lang STRING) USING graft TBLPROPERTIES('buckets'='2')")
+    spark.conf.set(GraftSql.MergeModeConf, "mor")
+    try (0 until 2).foreach { r =>
+      spark.sql(
+        s"""INSERT INTO graft.blf
+           |SELECT concat('f', CAST(id AS STRING), '-r$r') AS url,
+           |  timestamp_micros(${1700000000000000L + r} + id) AS warc_ts,
+           |  cast('<p>x</p>' AS BINARY), CAST(NULL AS STRING), CAST(NULL AS BIGINT), 'en'
+           |FROM range(300)""".stripMargin)
+    } finally spark.conf.unset(GraftSql.MergeModeConf)
+    val lake = LakeTable.load(java.nio.file.Paths.get(wh, "blf"))
+    assert(Maintain.buildBlooms(spark, lake) == lake.currentSnapshot.files.size)
+
+    // the fold's writing tasks build the sidecars (the inputs had them) …
+    Maintain.compact(spark, lake)
+    val folded = lake.currentSnapshot.files
+    assert(folded.size == 2)
+    folded.foreach { f =>
+      val p = lake.root.resolve(f.path)
+      val written = java.nio.file.Files.readAllBytes(Bloom.sidecar(p))
+      // … and the backfill, reading the same file's urls, builds the same bits
+      java.nio.file.Files.delete(Bloom.sidecar(p))
+      assert(Bloom.build(spark, Seq(p -> f.rowCount)) == 1)
+      assert(java.util.Arrays.equals(written, java.nio.file.Files.readAllBytes(Bloom.sidecar(p))),
+        s"sidecar of ${f.path} differs from the backfill's")
+    }
+  }
+
   implicit class IterOps[A](it: java.util.Iterator[A]) {
     def asScala: Iterator[A] = scala.jdk.CollectionConverters.IteratorHasAsScala(it).asScala
   }

@@ -43,17 +43,135 @@ class LakeTableSpec extends SparkSpec {
     intercept[IllegalArgumentException](t.evolveSchema(2))
   }
 
-  test("parquetStats: exact rows and safe url bounds from footers") {
-    val root = tmpDir("pq")
-    import spark.implicits._
-    val df = Seq("https://b.org/1", "https://a.org/2", "https://c.org/3")
-      .toDF("url").coalesce(1)
-    val out = root.resolve("f").toString
-    df.write.parquet(out)
-    val f = Files.list(root.resolve("f")).filter(_.toString.endsWith(".parquet")).findFirst().get()
-    val (rows, umin, umax) = LakeTable.parquetStats(f, "url")
-    assert(rows == 3)
-    assert(umin <= "https://a.org/2" && umax >= "https://c.org/3")
+  /** A v2 table row plus its bucket. */
+  private def v2Row(u: String, tsMicros: Long, html: String, off: Long, del: Boolean,
+      nBuckets: Int): Row =
+    Row(u, new java.sql.Timestamp(tsMicros / 1000), Option(html).map(_.getBytes).orNull,
+      Option(html).map(h => s"t:$h").orNull, Option(html).map(_.length.toLong).orNull,
+      "en", 9, off, del, LakeTable.bucketIdOf(u, nBuckets))
+
+  private val v2WithBucket =
+    StructType(TableSchemas.v2.fields :+ StructField("bucket", IntegerType))
+
+  /** (rows, url min/max, warc_ts min/max micros) read from a parquet footer. */
+  private def footerStats(p: java.nio.file.Path): (Long, String, String, Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(p.toUri), new org.apache.hadoop.conf.Configuration())
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      val cols = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      def stats(c: String) = cols.filter(_.getPath.toDotString == c).map(_.getStatistics)
+      val url = stats("url")
+      val ts = stats("warc_ts")
+      assert(r.getFooter.getFileMetaData.getSchema.getFields.asScala.find(_.getName == "warc_ts").get
+        .getLogicalTypeAnnotation.toString.contains("MICROS"))
+      (r.getRecordCount,
+        url.map(s => new String(s.getMinBytes, "UTF-8")).min,
+        url.map(s => new String(s.getMaxBytes, "UTF-8")).max,
+        ts.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+        ts.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
+    } finally r.close()
+  }
+
+  test("writer stats equal the footer") {
+    val t = LakeTable.create(tmpDir("wstats"), nBuckets = 2)
+    val t0 = 1700000000000000L
+    // per bucket: live rows, a tombstone, a null html — url-sorted runs
+    val rows = (0 until 40).map { i =>
+      val u = f"https://s.example/$i%03d"
+      v2Row(u, t0 + (i * 7919L % 40) * 1000000L, if (i % 5 == 0) null else s"<p>$i</p>",
+        off = i.toLong, del = i % 9 == 0, 2)
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), v2WithBucket)
+      .repartition(2, col("url")).sortWithinPartitions(col("url"))
+    val files = t.writeDataFilesTo(df, "wstats", TableSchemas.current)
+    assert(files.map(_.bucket) == Seq(0, 1))
+    assert(files.map(_.rowCount).sum == 40)
+    assert(rows.exists(_.getBoolean(8)) && rows.exists(_.isNullAt(2)))
+    files.foreach { f =>
+      val p = t.root.resolve(f.path)
+      assert(footerStats(p) == ((f.rowCount, f.urlMin, f.urlMax, f.tsMinMicros, f.tsMaxMicros)),
+        s"manifest entry $f disagrees with its footer")
+      assert(f.bytes == Files.size(p))
+      assert(f.schemaVersion == TableSchemas.current)
+    }
+  }
+
+  test("writer creates files, checksums and bucket dirs with stock Hadoop modes and no child process") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val t = LakeTable.create(tmpDir("wmode"), nBuckets = 2)
+    val rows = (0 until 20).map(i =>
+      v2Row(f"https://m.example/$i%02d", 1000000L * i, "<p>m</p>", i.toLong, false, 2))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), v2WithBucket)
+      .repartition(2, col("url")).sortWithinPartitions(col("url"))
+    // without Hadoop's native library a stock local write runs `chmod` in a
+    // child process per created file and dir; the JDK records each start
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val files = try t.writeDataFilesTo(df, "wmode", TableSchemas.current) finally rec.stop()
+    val dump = Files.createTempFile(tmpDir("wmode-jfr"), "write", ".jfr")
+    rec.dump(dump)
+    rec.close()
+    val chmods = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+      .map(_.getString("command")).filter(_.contains("chmod"))
+    assert(chmods.isEmpty, chmods)
+    def mode(p: java.nio.file.Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    assert(files.size == 2)
+    files.foreach { f =>
+      val p = t.root.resolve(f.path)
+      val crc = p.resolveSibling(s".${p.getFileName}.crc")
+      assert(mode(p) == "rw-r--r--" && mode(crc) == "rw-r--r--" && mode(p.getParent) == "rwxr-xr-x")
+    }
+    assert(mode(t.root.resolve("data/wmode")) == "rwxr-xr-x")
+    // the write's file system stays scoped to the write
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"),
+      spark.sessionState.newHadoopConf())
+    assert(!fs.isInstanceOf[ForklessLocalFileSystem], fs.getClass)
+  }
+
+  test("writer invariant: a duplicate url or a null url fails the write and commits nothing") {
+    val t = LakeTable.create(tmpDir("winv"), nBuckets = 2)
+    val u = "https://inv.example/a"
+    val dup = Seq(v2Row(u, 1000000L, "<p>a</p>", 1L, false, 2),
+      v2Row(u, 2000000L, "<p>b</p>", 2L, false, 2))
+    val nul = Seq(Row(null, new java.sql.Timestamp(1000L), null, null, null, "en", 9, 1L, false, 0))
+    val nullableUrl = StructType(v2WithBucket.fields.map(f =>
+      if (f.name == "url") f.copy(nullable = true) else f))
+    Seq("dup" -> spark.createDataFrame(spark.sparkContext.parallelize(dup, 1), v2WithBucket),
+      "null" -> spark.createDataFrame(spark.sparkContext.parallelize(nul, 1), nullableUrl))
+      .foreach { case (dir, df) =>
+        val e = intercept[Exception](t.writeDataFilesTo(df, dir, TableSchemas.current))
+        assert(e.getMessage.contains("writer invariant"), e.getMessage)
+        val left = t.root.resolve(s"data/$dir")
+        val files = if (!Files.exists(left)) Nil else {
+          val w = Files.walk(left)
+          try w.filter(p => p.toString.endsWith(".parquet")).toArray.toSeq finally w.close()
+        }
+        assert(files.isEmpty, s"the failed task must delete what it wrote: $files")
+      }
+    assert(t.currentSnapshotId == 0L && t.currentSnapshot.files.isEmpty)
+  }
+
+  test("an uncommitted write's files and sidecars are orphans the GC removes") {
+    val t = LakeTable.create(tmpDir("worph"), nBuckets = 2)
+    val rows = (0 until 20).map(i =>
+      v2Row(f"https://o.example/$i%02d", 1000000L * i, "<p>x</p>", i.toLong, false, 2))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), v2WithBucket)
+      .repartition(2, col("url")).sortWithinPartitions(col("url"))
+    val files = t.writeDataFilesTo(df, "worph", TableSchemas.current, blooms = true)
+    val paths = files.map(f => t.root.resolve(f.path))
+    assert(paths.nonEmpty && paths.forall(p => Files.exists(p) && Files.exists(Bloom.sidecar(p))))
+    // inside the horizon an in-flight write is left alone
+    assert(Maintain.removeOrphanFiles(t, olderThanMs = 0L).isEmpty)
+    Thread.sleep(20)
+    val removed = Maintain.removeOrphanFiles(t, olderThanMs = System.currentTimeMillis())
+    files.foreach { f =>
+      assert(removed.contains(f.path) && removed.contains(f.path + ".bloom"), removed)
+    }
+    assert(paths.forall(p => !Files.exists(p) && !Files.exists(Bloom.sidecar(p))))
   }
 
   test("rollbackTo: state and markers as-of target, history kept, replay composes") {
@@ -122,5 +240,33 @@ class LakeTableSpec extends SparkSpec {
     spark.conf.set(key, "TIMESTAMP_MILLIS")
     try writeKeepsConf("conf-set") // an explicit value comes back
     finally spark.conf.unset(key)
+  }
+
+  test("concurrent writes under a TIMESTAMP_MILLIS session write MICROS and leave the conf alone") {
+    val t = LakeTable.create(tmpDir("lakeconc"), nBuckets = 4)
+    val key = "spark.sql.parquet.outputTimestampType"
+    def df(tag: String) = spark.createDataFrame(spark.sparkContext.parallelize(
+        (0 until 200).map(i => v2Row(f"https://$tag.example/$i%03d", 1000000L * (i + 1),
+          "<p>c</p>", i.toLong, false, 4)), 2), v2WithBucket)
+      .repartition(4, col("url")).sortWithinPartitions(col("url"))
+    spark.conf.set(key, "TIMESTAMP_MILLIS")
+    try {
+      val before = spark.conf.getAll
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val writes = Seq("c1", "c2").map { tag =>
+        val input = df(tag)
+        Future((0 until 3).foreach(i =>
+          t.writeDataFilesTo(input, s"$tag-$i", TableSchemas.current).foreach { f =>
+            val (_, _, _, lo, hi) = footerStats(t.root.resolve(f.path))
+            assert(lo == f.tsMinMicros && hi == f.tsMaxMicros && lo >= 1000000L)
+          }))
+      }
+      writes.foreach(Await.result(_, scala.concurrent.duration.Duration(5, "min")))
+      assert(spark.conf.getAll == before)
+      // six writes x four buckets, every footer checked above
+      val w = Files.walk(t.root.resolve("data"))
+      try assert(w.filter(_.toString.endsWith(".parquet")).count() == 24) finally w.close()
+    } finally spark.conf.unset(key)
   }
 }

@@ -2,7 +2,9 @@ package graft.lake
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,6 +35,25 @@ class MultiVersionFileSpec extends SparkSpec {
 
   private val craftedSchema =
     StructType(TableSchemas.v2.fields :+ StructField("bucket", IntegerType))
+
+  /** Store crafted rows the way a FOREIGN writer would — plain Spark
+    * parquet, one file per bucket, manifest entries built here (exact rows
+    * and url bounds, unbounded event time) — since the table's own writer
+    * refuses a second version of a url in one file. */
+  private def foreignFiles(table: LakeTable, crafted: DataFrame, dir: String): Vector[DataFile] = {
+    val out = table.root.resolve(s"data/$dir")
+    crafted.write.partitionBy("bucket").parquet(out.toString)
+    val w = java.nio.file.Files.walk(out)
+    val parquet = try w.iterator().asScala.filter(_.toString.endsWith(".parquet")).toVector
+      finally w.close()
+    parquet.map { p =>
+      val s = spark.read.parquet(p.toString).agg(count(lit(1)), min(col("url")), max(col("url"))).head()
+      DataFile(table.root.relativize(p).toString,
+        p.getParent.getFileName.toString.stripPrefix("bucket=").toInt,
+        s.getLong(0), s.getString(1), s.getString(2), TableSchemas.current,
+        java.nio.file.Files.size(p))
+    }
+  }
 
   /** The raw change-event layout a merge batch carries. */
   private val batchSchema = StructType(Seq(
@@ -78,7 +99,7 @@ class MultiVersionFileSpec extends SparkSpec {
     val crafted = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), craftedSchema)
       .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
-    val files = table.writeDataFilesTo(crafted, "mvf-delta", TableSchemas.current)
+    val files = foreignFiles(table, crafted, "mvf-delta")
     table.commitAppend(files.map(_.copy(tier = DataFile.TierDelta)), None)
 
     // path 1: co-located catalog read (GraftBucketReader run-drain)
@@ -122,7 +143,7 @@ class MultiVersionFileSpec extends SparkSpec {
     val crafted4 = spark.createDataFrame(
         spark.sparkContext.parallelize(rows4, 1), craftedSchema)
       .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
-    val files4 = table.writeDataFilesTo(crafted4, "mvf-delta4", TableSchemas.current)
+    val files4 = foreignFiles(table, crafted4, "mvf-delta4")
     table.commitAppend(files4.map(_.copy(tier = DataFile.TierDelta)), None)
     val foldBuckets = Set(urlA, urlB).map(LakeTable.bucketIdOf(_, n))
     graft.cdc.Merge.compactDeltaTier(spark, table, foldBuckets)
@@ -161,7 +182,7 @@ class MultiVersionFileSpec extends SparkSpec {
       row(u, at(2), "<p>b</p>".getBytes, "b", off = 20L, del = false, 4)) // winner
     val crafted = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), craftedSchema)
       .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
-    table.commitAppend(table.writeDataFilesTo(crafted, "mvf-read", TableSchemas.current), None)
+    table.commitAppend(foreignFiles(table, crafted, "mvf-read"), None)
     assert(table.currentSnapshot.files.size == 1, "the crafted file must be the table's only file")
 
     val viaRead = table.read(spark).collect().map(_.getAs[String]("text")).toSeq
@@ -188,7 +209,7 @@ class MultiVersionFileSpec extends SparkSpec {
       row(urlW, at(1), "<p>old W</p>".getBytes, "old W", off = 20L, del = false, 4))
     val crafted = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), craftedSchema)
       .repartition(1).sortWithinPartitions(col("url"), col("_seq_offset"))
-    val files = table.writeDataFilesTo(crafted, "mvf-single", TableSchemas.current)
+    val files = foreignFiles(table, crafted, "mvf-single")
     table.commitAppend(files, None)
     assert(table.currentSnapshot.files.map(_.bucket) == Seq(b),
       "the crafted file must be its bucket's only file")

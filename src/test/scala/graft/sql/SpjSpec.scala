@@ -260,4 +260,21 @@ class SpjSpec extends SparkSpec {
     assert(!bScan.description().contains("limit="),
       s"DESC TopN must NOT push a limit (the drain would keep the WRONG end): ${bScan.description()}")
   }
+
+  test("ORDER BY url ASC NULLS LAST LIMIT k: same rows with and without pushdown") {
+    fixture()
+    val q = "SELECT url, lang FROM %s ORDER BY url ASC NULLS LAST LIMIT 7"
+    val pushed = spark.sql(q.format("graft.spj_a"))
+    // the same query over an in-memory copy of the table: nothing to push into
+    val all = spark.sql("SELECT url, lang FROM graft.spj_a")
+    spark.createDataFrame(spark.sparkContext.parallelize(all.collect().toSeq, 3), all.schema)
+      .createOrReplaceTempView("spj_a_copy")
+    val plain = spark.sql(q.format("spj_a_copy"))
+    assert(pushed.collect().toSeq == plain.collect().toSeq)
+    // url is non-nullable in the table schema, so NULLS LAST rides the drain
+    val scan = pushed.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.getOrElse(fail("no BatchScanExec leaf"))
+    assert(scan.description().contains("limit=7"), scan.description())
+  }
 }
