@@ -143,7 +143,7 @@ object Bench {
       Seq(mirrorReplay(spark, mirrorSrc, feedRows),
         mirrorReplay(spark, mirrorSrc, feedRows)).minBy(_._2)
     results("cdc_mirror_1m") = mrSec
-    graft.lake.SinkIO.rmDir(mirrorSrc.getParent)
+    graft.lake.LakeTable.deleteRecursively(mirrorSrc.getParent)
 
     def json(m: collection.Map[String, Double]) =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
@@ -163,7 +163,7 @@ object Bench {
       mode = mode)
     val events = table.currentSnapshot.batches.flatMap(_.lineage).map(_.count).sum
     val sec = (System.nanoTime() - t0) / 1e9
-    graft.lake.SinkIO.rmDir(work)
+    graft.lake.LakeTable.deleteRecursively(work)
     (events, sec, events / sec)
   }
 
@@ -187,7 +187,7 @@ object Bench {
     val table = graft.lake.LakeTable.load(work.resolve("table"))
     val events = table.currentSnapshot.batches.flatMap(_.lineage).map(_.count).sum
     val sec = (System.nanoTime() - t0) / 1e9
-    graft.lake.SinkIO.rmDir(work)
+    graft.lake.LakeTable.deleteRecursively(work)
     (events, sec, events / sec)
   }
 
@@ -203,7 +203,7 @@ object Bench {
       work.resolve("ckpt").toString, nBuckets = 64, mode = graft.cdc.Mor)
     q.awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
-    graft.lake.SinkIO.rmDir(work)
+    graft.lake.LakeTable.deleteRecursively(work)
     (feedRows, sec, feedRows / sec)
   }
 }

@@ -77,14 +77,7 @@ object BenchUtil {
     q.awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
     // clean up the table (bench tables are large)
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.forEach(rm) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(work)
+    graft.lake.LakeTable.deleteRecursively(work)
     (events, sec, events / sec)
   }
 }

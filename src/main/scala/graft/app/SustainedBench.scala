@@ -78,7 +78,7 @@ object SustainedBench {
     println(s"""{"metric":"sustained_mor","events":$total,"cores":$cores,"batches":${times.size},""" +
       s""""per_batch_sec":$js,"first_quartile_mean":${f"$firstQ%.2f"},"last_quartile_mean":${f"$lastQ%.2f"},""" +
       s""""growth_ratio":${f"${lastQ / firstQ}%.3f"}$rb}""")
-    graft.lake.SinkIO.rmDir(work)
+    graft.lake.LakeTable.deleteRecursively(work)
     spark.stop()
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -153,6 +153,41 @@ object FeedSource {
       admitted.nonEmpty && Bloom.mightContainAny(root.resolve(f.path), admitted)
     }
 
+  /** Url keys of the first pushed `url` equality or IN, the keys
+    * [[fileAdmits]] prunes by; empty when none is pushed. Null IN entries
+    * never match the non-null key and are dropped. Shared by the feed, the
+    * resolved lake scan and its runtime filter. */
+  private[graft] def pushedUrlKeys(filters: Seq[Filter]): Seq[String] =
+    filters.collectFirst {
+      case EqualTo("url", v: String) => Seq(v)
+      case In("url", vs) if vs.nonEmpty && vs.forall(v => v == null || v.isInstanceOf[String]) =>
+        vs.toSeq.collect { case s: String => s }
+    }.getOrElse(Nil)
+
+  /** One pushed `warc_ts` comparison as `(lower, upper)` bounds, each
+    * `(micros, strict)`: an equality bounds both sides, a literal that is
+    * no timestamp ([[LakeTable.tsLiteralMicros]]) bounds neither. */
+  private[graft] def pushedTsBound(f: Filter): (Option[(Long, Boolean)], Option[(Long, Boolean)]) = {
+    def at(v: Any, strict: Boolean) = LakeTable.tsLiteralMicros(v).map((_, strict))
+    f match {
+      case GreaterThan("warc_ts", v) => (at(v, true), None)
+      case GreaterThanOrEqual("warc_ts", v) => (at(v, false), None)
+      case LessThan("warc_ts", v) => (None, at(v, true))
+      case LessThanOrEqual("warc_ts", v) => (None, at(v, false))
+      case EqualTo("warc_ts", v) => (at(v, false), at(v, false))
+      case _ => (None, None)
+    }
+  }
+
+  /** The strongest pushed `warc_ts` bounds, `(lower, upper)`, across the
+    * conjuncts (Spark hands top-level AND legs as separate entries). */
+  private[graft] def pushedTsBounds(filters: Seq[Filter])
+      : (Option[(Long, Boolean)], Option[(Long, Boolean)]) = {
+    val bounds = filters.map(pushedTsBound)
+    (bounds.flatMap(_._1).sortBy(l => (-l._1, !l._2)).headOption,
+      bounds.flatMap(_._2).sortBy(h => (h._1, !h._2)).headOption)
+  }
+
   /** Event-time file admission for the feed's BATCH scan. The feed emits
     * RAW change rows (no LWW resolution), so — unlike the resolved lake
     * scan, where only a lower bound commutes with winner resolution — BOTH
@@ -221,37 +256,12 @@ final class FeedScan(root: Path, pinnedVersion: Int, options: CaseInsensitiveStr
   private var tsLo: Option[(Long, Boolean)] = None
   private var tsHi: Option[(Long, Boolean)] = None
   private var tsRowFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-    import LakeTable.{tsLiteralMicros => tsMicros}
-    urlKeys = filters.collectFirst {
-      case EqualTo("url", v: String) => Seq(v)
-      case In("url", vs) if vs.nonEmpty && vs.forall(v => v == null || v.isInstanceOf[String]) =>
-        vs.toSeq.collect { case s: String => s }
-    }.filter(_.nonEmpty).getOrElse(Nil)
-    val los = filters.toSeq.flatMap {
-      case GreaterThan("warc_ts", v) => tsMicros(v).map((_, true))
-      case GreaterThanOrEqual("warc_ts", v) => tsMicros(v).map((_, false))
-      case EqualTo("warc_ts", v) => tsMicros(v).map((_, false))
-      case _ => None
-    }
-    val his = filters.toSeq.flatMap {
-      case LessThan("warc_ts", v) => tsMicros(v).map((_, true))
-      case LessThanOrEqual("warc_ts", v) => tsMicros(v).map((_, false))
-      case EqualTo("warc_ts", v) => tsMicros(v).map((_, false))
-      case _ => None
-    }
-    tsLo = los.sortBy(l => (-l._1, !l._2)).headOption
-    tsHi = his.sortBy(h => (h._1, !h._2)).headOption
-    tsRowFilters = filters.filter {
-      case GreaterThan("warc_ts", v) => tsMicros(v).nonEmpty
-      case GreaterThanOrEqual("warc_ts", v) => tsMicros(v).nonEmpty
-      case LessThan("warc_ts", v) => tsMicros(v).nonEmpty
-      case LessThanOrEqual("warc_ts", v) => tsMicros(v).nonEmpty
-      case EqualTo("warc_ts", v) => tsMicros(v).nonEmpty
-      case _ => false
-    }.toSeq
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    urlKeys = FeedSource.pushedUrlKeys(filters.toSeq)
+    val (lo, hi) = FeedSource.pushedTsBounds(filters.toSeq)
+    tsLo = lo
+    tsHi = hi
+    tsRowFilters = filters.toSeq.filter(f => FeedSource.pushedTsBound(f) != ((None, None)))
     filters
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = {

@@ -1,12 +1,12 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 import java.sql.Timestamp
 import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.binlog.{Layout, Segment, SegmentWriter}
+import graft.binlog.{BinlogRead, Layout, SegmentFile, SegmentWriter}
 import graft.model.ChangeEvent
 
 /** Native Structured Streaming SINK for the lake table — the fully
@@ -33,13 +33,15 @@ import graft.model.ChangeEvent
   * exactly-once batch id, so a replayed epoch (crash between sink commit and
   * checkpoint write) is a no-op via the table's `(batchId, lineage)` marker.
   *
-  * Each task stages its rows as binlog segments PRESERVING the incoming CDC
-  * envelope — a new segment starts whenever the source partition changes or
-  * an offset is non-contiguous, so staged chunk metadata reconstructs the
-  * true per-partition lineage (the reference's gap-free chain) without an
-  * extra data pass. The epoch commit merges the staged envelope through
-  * `Merge.apply` and deletes the staging area. Input schema must be the CDC
-  * envelope ([[ChangeEvent.schema]]).
+  * This file holds the engine's one staged write, shared by this sink,
+  * `writeStream.toTable("graft.t")` and SQL `INSERT` ([[graft.sql.GraftBatchWrite]]):
+  * each task stages its rows as binlog segments through
+  * [[StagedSegmentWriter]], and the driver commit reads back exactly the
+  * committed tasks' segments through [[Staged.commit]] and merges them as
+  * one batch. Input schema here must be the CDC envelope
+  * ([[ChangeEvent.schema]]), which is staged as given, so staged segment
+  * metadata carries the true per-partition lineage (the reference's
+  * gap-free chain) without an extra data pass.
   *
   * ONE sink query per table (the engine's single-writer contract): a second
   * concurrent writer would collide in the epoch staging area before the
@@ -71,14 +73,18 @@ final class LakeSinkTable(root: String, props: util.Map[String, String])
     }
     new WriteBuilder {
       override def build(): Write = new Write {
-        override def toStreaming: StreamingWrite = new LakeStreamingWrite(root, nBuckets, mode)
+        override def toStreaming: StreamingWrite =
+          new LakeStreamingWrite(root, nBuckets, mode, info.schema())
       }
     }
   }
 }
 
+/** One streaming write: each epoch is staged, then merged as exactly-once
+  * batch `epochId`. `rows` is the write's schema — the CDC envelope for the
+  * `graft-lake` sink, the table's user schema for `writeStream.toTable`. */
 final class LakeStreamingWrite(root: String, nBuckets: Int, mode: graft.cdc.MergeMode,
-    userSchemaRows: Boolean = false)
+    rows: StructType)
   extends StreamingWrite {
 
   private def tableRoot = Paths.get(root)
@@ -86,166 +92,99 @@ final class LakeStreamingWrite(root: String, nBuckets: Int, mode: graft.cdc.Merg
     tableRoot.resolve("staging").resolve(s"epoch-$epochId")
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new LakeSinkWriterFactory(tableRoot.resolve("staging").toString, userSchemaRows)
+    new StagedSegmentWriterFactory(tableRoot.resolve("staging").toString, new RowEvents(rows))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val table =
-      if (LakeTable.exists(tableRoot)) LakeTable.load(tableRoot)
-      else LakeTable.create(tableRoot, nBuckets)
-    val staging = stagingDir(epochId)
-    try {
-      if (table.currentSnapshot.committedBatchIds.contains(epochId)) return // replayed epoch
-      // ingest ONLY the attempt dirs reported by COMMITTED writers — a task
-      // attempt that closed segments and then died without abort() (executor
-      // crash, killed speculative loser) leaves orphans under staging/epoch-N
-      // which must not be read alongside the retry's copy (duplicate lineage
-      // runs would break the gap-free audit). Orphans die with the staging
-      // dir in the finally.
-      val committedDirs = messages.collect { case SegmentsStaged(dir) => Paths.get(dir) }
-        .filter(Files.isDirectory(_))
-      val staged = committedDirs.flatMap(d => Layout.listUnder(d, Layout.Flat)).toSeq
-      if (staged.isEmpty) return
-      // lineage from segment metadata (no data pass): one entry per
-      // CONTIGUOUS run per partition — the canonical pipeline yields a
-      // single gap-free run each; upstream filters that drop records
-      // surface as multiple runs instead of a fabricated envelope
-      val lineage = staged.map(_._2).groupBy(_.partition).toSeq.sortBy(_._1).flatMap { case (p, fs) =>
-        val sorted = fs.sortBy(_.startOffset)
-        val runs = Vector.newBuilder[PartLineage]
-        var runStart = sorted.head.startOffset
-        var runEnd = sorted.head.endOffset
-        sorted.tail.foreach { f =>
-          if (f.startOffset == runEnd) runEnd = f.endOffset
-          else {
-            runs += PartLineage(p, runStart, runEnd - runStart, runEnd - runStart)
-            runStart = f.startOffset
-            runEnd = f.endOffset
-          }
-        }
-        runs += PartLineage(p, runStart, runEnd - runStart, runEnd - runStart)
-        runs.result()
-      }
-      val parts = staged.map(_._2.path.getParent.toString).distinct
-      val df = parts.map(d => graft.binlog.BinlogRead.all(spark, d)).reduce(_.unionByName(_))
-      graft.cdc.Merge(spark, table, df, epochId, lineage, mode): Unit
-    } finally rm(staging)
+    Staged.commit(spark, stagingDir(epochId), messages) { staged =>
+      val table =
+        if (LakeTable.exists(tableRoot)) LakeTable.load(tableRoot)
+        else LakeTable.create(tableRoot, nBuckets)
+      if (!table.currentSnapshot.committedBatchIds.contains(epochId)) // else a replayed epoch
+        staged.foreach(s => graft.cdc.Merge(spark, table, s.events, epochId, s.lineage, mode): Unit)
+    }
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    rm(stagingDir(epochId))
-
-  private def rm(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(rm) finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
-  }
+    LakeTable.deleteRecursively(stagingDir(epochId))
 }
 
 /** Commit message: the attempt dir whose segments this writer staged and
-  * closed. The epoch commit ingests exactly these dirs. */
+  * closed. The commit ingests exactly these dirs. */
 final case class SegmentsStaged(dir: String) extends WriterCommitMessage
 
-final class LakeSinkWriterFactory(stagingRoot: String, userSchemaRows: Boolean = false)
-  extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] = {
-    // taskId is unique PER ATTEMPT: speculative/retried attempts get
-    // disjoint dirs (no shared tmp paths), and abort can remove the whole
-    // attempt dir — including segments already closed by a rolling writer
-    val dir = Paths.get(stagingRoot, s"epoch-$epochId", s"task-$partitionId-a$taskId")
-    if (userSchemaRows) new LakeSinkUserWriter(dir, partitionId, epochId)
-    else new LakeSinkWriter(dir)
-  }
-}
+/** Reads a written row as a change event, by column name from the write's
+  * schema. An envelope row ([[ChangeEvent.schema]]) carries its own
+  * `(partition, offset, op)`. A user row (a SQL table's user schema; a v1
+  * table has no `lang`) is an upsert at the synthetic `(partition, offset)`
+  * the writer hands in; its `text`/`content_len` are engine-derived, so they
+  * are not read. */
+final class RowEvents(schema: StructType) extends Serializable {
+  private def col(name: String): Int = schema.fieldNames.indexOf(name)
+  private val (partCol, offCol, opCol) = (col("partition"), col("offset"), col("op"))
+  private val envelope = offCol >= 0
+  private val (urlCol, tsCol, htmlCol, langCol) = (col("url"), col("warc_ts"), col("html"), col("lang"))
+  require(urlCol >= 0 && tsCol >= 0, s"a staged write needs url and warc_ts, got ${schema.simpleString}")
 
-private[graft] object SinkIO {
-  def rmDir(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(rmDir) finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
-  }
-}
-
-/** `writeStream.toTable("graft.t")` variant: rows arrive in the USER schema
-  * (url, warc_ts, html, text, content_len, lang) — every row is an upsert
-  * with a synthetic envelope (partition = task id, offsets anchored at
-  * `epochId << 32`), resolved LWW by warc_ts like any other batch;
-  * text/content_len are engine-derived. Anchoring offsets at the epoch
-  * makes the `(warc_ts, offset, partition)` tie-break DETERMINISTIC across
-  * epochs: two epochs can never repeat a (partition, offset) pair, so an
-  * equal-warc_ts upsert from a later epoch strictly wins. */
-final class LakeSinkUserWriter(dir: Path, partitionId: Int, epochId: Long)
-  extends DataWriter[InternalRow] {
-  private var w: SegmentWriter = _
-  private val base: Long = epochId << 32
-  private var n = 0L
-
-  override def write(row: InternalRow): Unit = {
-    if (w == null) w = new SegmentWriter(dir, partitionId, base)
-    val micros = row.getLong(1)
+  def apply(row: InternalRow, partition: Int, offset: Long): ChangeEvent = {
+    val micros = row.getLong(tsCol)
     val ts = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
     ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-    w.writeEvent(ChangeEvent(
-      partition = partitionId,
-      offset = base + n,
-      op = ChangeEvent.OpUpsert,
-      url = row.getUTF8String(0).toString,
+    ChangeEvent(
+      partition = if (envelope) row.getInt(partCol) else partition,
+      offset = if (envelope) row.getLong(offCol) else offset,
+      op = if (envelope) row.getUTF8String(opCol).toString else ChangeEvent.OpUpsert,
+      url = row.getUTF8String(urlCol).toString,
       warc_ts = ts,
-      html = if (row.isNullAt(2)) null else row.getBinary(2),
-      lang = if (row.isNullAt(5)) null else row.getUTF8String(5).toString))
-    n += 1
+      html = if (htmlCol < 0 || row.isNullAt(htmlCol)) null else row.getBinary(htmlCol),
+      lang = if (langCol < 0 || row.isNullAt(langCol)) null else row.getUTF8String(langCol).toString)
   }
-
-  override def commit(): WriterCommitMessage = {
-    if (w != null) w.close()
-    SegmentsStaged(dir.toString)
-  }
-  // the attempt dir is exclusively ours (unique taskId in the path): abort
-  // removes it WHOLE, including segments already rolled and closed
-  override def abort(): Unit = {
-    if (w != null) w.delete()
-    SinkIO.rmDir(dir)
-  }
-  override def close(): Unit = ()
 }
 
-/** Streams envelope rows into segments, rolling on source-partition change
-  * or offset discontinuity so file names + chunk indexes carry the true
-  * (partition, offset-range) coverage. */
-final class LakeSinkWriter(dir: Path) extends DataWriter[InternalRow] {
+/** Task side of every staged write. Batch writers stage under
+  * `<staging>/task-<attempt>` with user-row offsets from 0; streaming
+  * writers under `<staging>/epoch-<id>/task-<partition>-a<attempt>` with
+  * offsets anchored at `epochId << 32`. The anchor makes the `(warc_ts,
+  * offset, partition)` tie-break deterministic across epochs: two epochs
+  * never repeat a `(partition, offset)` pair, so an equal-warc_ts upsert
+  * from a later epoch strictly wins. The task id is unique per ATTEMPT, so
+  * speculative or retried attempts never share a dir, and abort can remove
+  * the whole attempt dir. */
+final class StagedSegmentWriterFactory(stagingRoot: String, rows: RowEvents)
+  extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new StagedSegmentWriter(Paths.get(stagingRoot, s"task-$taskId"), partitionId, 0L, rows)
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
+    new StagedSegmentWriter(Paths.get(stagingRoot, s"epoch-$epochId", s"task-$partitionId-a$taskId"),
+      partitionId, epochId << 32, rows)
+}
+
+/** Streams rows into segments, rolling on source-partition change or offset
+  * discontinuity so file names + chunk indexes carry the true
+  * (partition, offset-range) coverage. User rows get the synthetic envelope
+  * `(partitionId, base + n)` and so land in one segment. */
+final class StagedSegmentWriter(dir: Path, partitionId: Int, base: Long, rows: RowEvents)
+  extends DataWriter[InternalRow] {
   private var w: SegmentWriter = _
   private var curPart = -1
   private var nextOff = -1L
+  private var n = 0L
   private val seenRanges = scala.collection.mutable.Set.empty[(Int, Long)]
 
   override def write(row: InternalRow): Unit = {
-    val part = row.getInt(0)
-    val off = row.getLong(1)
-    if (w == null || part != curPart || off != nextOff) {
+    val e = rows(row, partitionId, base + n)
+    n += 1
+    if (w == null || e.partition != curPart || e.offset != nextOff) {
       if (w != null) w.close()
       // a repeated (partition, startOffset) would silently overwrite the
       // earlier segment — refuse: the envelope must not repeat ranges
-      require(seenRanges.add((part, off)),
-        s"duplicate envelope range p$part@$off in one task — offsets must not repeat")
-      curPart = part
-      w = new SegmentWriter(dir, part, off)
+      require(seenRanges.add((e.partition, e.offset)),
+        s"duplicate envelope range p${e.partition}@${e.offset} in one task — offsets must not repeat")
+      curPart = e.partition
+      w = new SegmentWriter(dir, e.partition, e.offset)
     }
-    val micros = row.getLong(4)
-    val ts = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-    ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-    w.writeEvent(ChangeEvent(
-      partition = part,
-      offset = off,
-      op = row.getUTF8String(2).toString,
-      url = row.getUTF8String(3).toString,
-      warc_ts = ts,
-      html = if (row.isNullAt(5)) null else row.getBinary(5),
-      lang = if (row.isNullAt(6)) null else row.getUTF8String(6).toString))
-    nextOff = off + 1
+    w.writeEvent(e)
+    nextOff = e.offset + 1
   }
 
   override def commit(): WriterCommitMessage = {
@@ -256,7 +195,42 @@ final class LakeSinkWriter(dir: Path) extends DataWriter[InternalRow] {
   // removes it WHOLE, including segments already rolled and closed
   override def abort(): Unit = {
     if (w != null) w.delete()
-    SinkIO.rmDir(dir)
+    LakeTable.deleteRecursively(dir)
   }
   override def close(): Unit = ()
+}
+
+/** The committed rows of one staged write: their change events, and one
+  * lineage entry per CONTIGUOUS offset run per partition, read from segment
+  * metadata (no data pass). The envelope pipeline yields a single gap-free
+  * run per partition; upstream filters that drop records surface as
+  * several runs instead of a fabricated envelope. */
+final case class Staged(events: DataFrame, lineage: Seq[PartLineage])
+
+object Staged {
+  /** Runs `body` over the segments staged by COMMITTED writers (`None` when
+    * they staged none), then deletes `staging`, also when `body` fails.
+    * Only the dirs named by commit messages are read: a task attempt that
+    * closed segments and then died without abort() (executor crash, killed
+    * speculative loser) leaves orphans beside the retry's copy, and reading
+    * both would duplicate rows and lineage runs. The orphans die with the
+    * staging dir. */
+  def commit(spark: SparkSession, staging: Path, messages: Array[WriterCommitMessage])(
+      body: Option[Staged] => Unit): Unit =
+    try {
+      val segs = messages.toSeq.collect { case SegmentsStaged(d) => Paths.get(d) }.distinct
+        .flatMap(d => Layout.listUnder(d, Layout.Flat).map(_._2))
+      body(if (segs.isEmpty) None else Some(Staged(
+        segs.map(_.path.getParent.toString).distinct
+          .map(BinlogRead.all(spark, _)).reduce(_.unionByName(_)),
+        lineageRuns(segs))))
+    } finally LakeTable.deleteRecursively(staging)
+
+  private def lineageRuns(segs: Seq[SegmentFile]): Seq[PartLineage] =
+    segs.groupBy(_.partition).toSeq.sortBy(_._1).flatMap { case (p, fs) =>
+      fs.sortBy(_.startOffset).foldLeft(Vector.empty[(Long, Long)]) {
+        case (runs :+ ((start, end)), f) if f.startOffset == end => runs :+ ((start, f.endOffset))
+        case (runs, f) => runs :+ ((f.startOffset, f.endOffset))
+      }.map { case (start, end) => PartLineage(p, start, end - start, end - start) }
+    }
 }

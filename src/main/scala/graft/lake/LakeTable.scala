@@ -965,8 +965,10 @@ object LakeTable {
         "never resolve the branch by name")
   }
 
-  private[lake] def deleteRecursively(dir: Path): Unit = {
-    if (!Files.exists(dir)) return
+  /** The engine's one recursive delete: removes `dir` and everything under
+    * it; an absent path is a no-op. Symlinks are removed, not followed. */
+  private[graft] def deleteRecursively(dir: Path): Unit = {
+    if (!Files.exists(dir, java.nio.file.LinkOption.NOFOLLOW_LINKS)) return
     val s = Files.walk(dir)
     try s.sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach(p => { Files.deleteIfExists(p): Unit })

@@ -304,9 +304,8 @@ object Maintain {
     * files referenced by EXPIRED snapshots. Orphans accumulate from every
     * crash between write and commit: a merge that wrote `data/s<id>/` and
     * died before the VERSION CAS, a lost [[LakeTable.commitAppend]] CAS
-    * race interrupted before its self-cleanup, committer staging
-    * (`_temporary`) left by a killed write job, and `staging/epoch-N`
-    * attempt dirs of an abandoned stream. At webtext scale each such crash
+    * race interrupted before its self-cleanup, and the `staging/` attempt
+    * dirs of an abandoned stream or INSERT. At webtext scale each such crash
     * strands full-size parquet — without this op the storage bill only
     * ever grows.
     *
@@ -316,8 +315,8 @@ object Maintain {
     * snapshot yet — they are protected because they are always YOUNGER
     * than a sane horizon (hours-to-days; an epoch that stages files, then
     * pauses past the horizon before committing, re-runs its tasks on
-    * restart and never reads the stale attempt dirs — [[LakeSink]] ingests
-    * only the dirs named by committed writer messages). Likewise a file
+    * restart and never reads the stale attempt dirs — [[Staged.commit]]
+    * ingests only the dirs named by committed writer messages). Likewise a file
     * referenced by a commit that lands AFTER the referenced-set read was
     * necessarily written after this call started, so the horizon admits it.
     * Bloom sidecars of referenced files are referenced. Empty dirs are

@@ -428,7 +428,7 @@ object LshIndex {
     // nothing and would break schema inference as a read root; drop it (the
     // crashed-fold case is the self-heal the contract promises)
     val (ins, empty) = all.partition(hasVisibleParquet)
-    empty.foreach(graft.lake.SinkIO.rmDir)
+    empty.foreach(graft.lake.LakeTable.deleteRecursively)
     if (ins.isEmpty) return 0L
     val obs = org.apache.spark.sql.Observation()
     // one read per input span with basePath pinned to the span dir: a single
@@ -442,7 +442,7 @@ object LshIndex {
       .write.mode("overwrite").partitionBy("pb")
       .parquet(spanDir(dir, outTag).toString)
     val n = obs.get("n").asInstanceOf[Long]
-    ins.foreach(graft.lake.SinkIO.rmDir)
+    ins.foreach(graft.lake.LakeTable.deleteRecursively)
     n
   }
 
@@ -482,7 +482,7 @@ object LshIndex {
     val old = dir.resolveSibling(s"${dir.getFileName}.old-$nonce")
     Files.move(dir, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     Files.move(fresh, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    graft.lake.SinkIO.rmDir(old)
+    graft.lake.LakeTable.deleteRecursively(old)
     n
   }
 

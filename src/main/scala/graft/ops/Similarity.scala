@@ -425,7 +425,7 @@ object Similarity {
     java.nio.file.Files.move(live, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir.rebuild-$nonce"), live,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    graft.lake.SinkIO.rmDir(old)
+    graft.lake.LakeTable.deleteRecursively(old)
     cents
   }
 

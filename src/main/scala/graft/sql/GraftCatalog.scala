@@ -245,14 +245,7 @@ class GraftCatalog extends TableCatalog
   override def dropTable(ident: Identifier): Boolean = {
     val root = rootOf(ident)
     if (!LakeTable.exists(root)) return false
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.forEach(rm) finally s.close()
-      }
-      Files.deleteIfExists(p): Unit
-    }
-    rm(root)
+    LakeTable.deleteRecursively(root)
     true
   }
 
@@ -388,7 +381,7 @@ final class GraftSqlTable(val lake: LakeTable, ident: String,
             new graft.lake.LakeStreamingWrite(wl.root.toString,
               wl.currentSnapshot.nBuckets,
               GraftSql.mergeModeFor(org.apache.spark.sql.SparkSession.active),
-              userSchemaRows = true)
+              info.schema())
           }
         }
       }
@@ -546,36 +539,22 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
 
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In}
-    val keys = filters.collectFirst {
-      case EqualTo("url", v: String) => Seq(v)
-      // null list entries never match url (non-null key) — drop, don't NPE
-      case In("url", vs) if vs.nonEmpty && vs.forall(v => v == null || v.isInstanceOf[String]) =>
-        vs.toSeq.collect { case s: String => s }
-    }.filter(_.nonEmpty)
-    urlKeys = keys.getOrElse(Nil)
+    import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, In}
+    urlKeys = graft.lake.FeedSource.pushedUrlKeys(filters.toSeq)
     urlRowFilters = filters.collect {
       case f @ EqualTo("url", _: String) => f
       case f @ In("url", vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) => f
     }.take(1).toSeq
-    // strongest lower bound across conjuncts (Spark hands top-level AND
-    // legs as separate array entries); an EqualTo contributes its implied
-    // inclusive lower bound — but only the BOUND, never the equality (a
-    // row-level equality would drop the true winner and un-shadow losers)
-    val lowers = filters.toSeq.flatMap {
-      case GreaterThan("warc_ts", v) => GraftLakeScan.tsMicros(v).map(m => (m, true))
-      case GreaterThanOrEqual("warc_ts", v) => GraftLakeScan.tsMicros(v).map(m => (m, false))
-      case EqualTo("warc_ts", v) => GraftLakeScan.tsMicros(v).map(m => (m, false))
-      case _ => None
-    }
-    tsLower = lowers.sortBy(l => (-l._1, !l._2)).headOption
+    // the resolved scan uses LOWER bounds only (an upper bound would drop
+    // a newer winner and un-shadow its losers); an EqualTo contributes its
+    // implied inclusive lower bound — but only the BOUND, never the equality
+    // (a row-level equality would drop the true winner likewise)
+    tsLower = graft.lake.FeedSource.pushedTsBounds(filters.toSeq)._1
     // ALL lower-bound conjuncts go to parquet (each is individually sound;
     // row-group skipping then honors the strongest, not just the first)
-    tsRowFilters = filters.toSeq.collect {
-      case f @ GreaterThan("warc_ts", v) if GraftLakeScan.tsMicros(v).nonEmpty => f
-      case f @ GreaterThanOrEqual("warc_ts", v) if GraftLakeScan.tsMicros(v).nonEmpty => f
-      case EqualTo("warc_ts", v) if GraftLakeScan.tsMicros(v).nonEmpty =>
-        GreaterThanOrEqual("warc_ts", v)
+    tsRowFilters = filters.toSeq.filter(graft.lake.FeedSource.pushedTsBound(_)._1.nonEmpty).map {
+      case EqualTo(col, v) => GreaterThanOrEqual(col, v)
+      case f => f
     }
     filters // everything residual
   }
@@ -603,12 +582,8 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("url"))
   override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    import org.apache.spark.sql.sources.{EqualTo, In}
-    val keys = filters.collectFirst {
-      case EqualTo("url", v: String) => Seq(v)
-      case In("url", vs) if vs.nonEmpty && vs.forall(v => v == null || v.isInstanceOf[String]) =>
-        vs.toSeq.collect { case s: String => s }
-    }.filter(ks => ks.nonEmpty && ks.size <= GraftLakeScan.MaxRuntimeFilterKeys)
+    val keys = Some(graft.lake.FeedSource.pushedUrlKeys(filters.toSeq))
+      .filter(ks => ks.nonEmpty && ks.size <= GraftLakeScan.MaxRuntimeFilterKeys)
     keys.foreach { ks =>
       val static = urlKeys
       urlKeys = if (static.isEmpty) ks else static.intersect(ks)
@@ -741,10 +716,6 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
 }
 
 object GraftLakeScan {
-  /** See [[graft.lake.LakeTable.tsLiteralMicros]]. */
-  private[sql] def tsMicros(v: Any): Option[Long] =
-    graft.lake.LakeTable.tsLiteralMicros(v)
-
   /** Runtime-filter key ceiling: per-key bounds/bloom admission is
     * driver-side work, so a huge build side must degrade to "no dynamic
     * prune" (sound) rather than an O(keys × files) planning stall. */

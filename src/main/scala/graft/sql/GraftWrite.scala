@@ -1,18 +1,15 @@
 package graft.sql
 
-import java.nio.file.{Files, Path, Paths}
-import java.sql.Timestamp
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
-import graft.binlog.SegmentWriter
-import graft.lake.LakeTable
-import graft.model.ChangeEvent
+import graft.lake.{LakeTable, RowEvents, Staged, StagedSegmentWriterFactory}
 
-/** DSv2 batch write: `INSERT INTO graft.t …` / `df.writeTo("graft.t").append()`.
+/** DSv2 batch write: `INSERT INTO graft.t …` / `INSERT OVERWRITE` /
+  * `df.writeTo("graft.t").append()`.
   *
   * Semantics on a url-keyed CDC table: an INSERT is an upsert MERGE batch —
   * duplicate urls (within the insert or against stored rows) resolve
@@ -20,13 +17,13 @@ import graft.model.ChangeEvent
   * streaming path, and `text`/`content_len` are DERIVED from `html` by the
   * engine (user-supplied values for those columns are ignored).
   *
-  * Mechanics: each task stages its rows as block-GZIP binlog segments
-  * (partition = task id, offsets 0..n — the same wire format the source
-  * tails), the driver commit replays the staging directory through
-  * `Merge.apply` as ONE exactly-once batch, then deletes the staging area.
-  * Abort deletes the staging area without committing. */
-final class GraftBatchWrite(lake: LakeTable,
-    schema: org.apache.spark.sql.types.StructType,
+  * Mechanics: the engine's one staged write (see [[graft.lake.LakeSinkProvider]]).
+  * Each task stages its rows, read by name from the table's user schema for
+  * ITS version, as block-GZIP binlog segments (partition = task id, offsets
+  * 0..n — the same wire format the source tails). The driver commit merges
+  * the committed tasks' segments as ONE exactly-once batch, then deletes the
+  * staging area. Abort deletes the staging area without committing. */
+final class GraftBatchWrite(lake: LakeTable, schema: StructType,
     overwrite: Boolean = false) extends BatchWrite {
 
   private val staging: Path =
@@ -34,97 +31,29 @@ final class GraftBatchWrite(lake: LakeTable,
       s"ins-${java.util.UUID.randomUUID().toString.take(8)}")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftInsertWriterFactory(staging.toString, schema)
+    new StagedSegmentWriterFactory(staging.toString, new RowEvents(schema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    try {
-      // only dirs reported by COMMITTED writers: an attempt that closed
-      // segments then died without abort() leaves orphans that must not be
-      // ingested next to the retry's copy (they die with the staging dir)
-      val dirs = messages.collect { case graft.lake.SegmentsStaged(d) => d }
-        .filter(d => Files.isDirectory(Paths.get(d))).distinct.toSeq
-        .filter(d => graft.binlog.Layout.listUnder(Paths.get(d), graft.binlog.Layout.Flat).nonEmpty)
-      if (dirs.nonEmpty) {
+    Staged.commit(spark, staging, messages) {
+      case Some(staged) =>
         val batchId = GraftRowLevel.nextSqlBatchId(lake)
-        val df = dirs.map(d => graft.binlog.BinlogRead.all(spark, d)).reduce(_.unionByName(_))
         if (overwrite)
           // INSERT OVERWRITE: LWW winners of the insert become the ENTIRE
           // table state in ONE atomic commit (files + markers replaced) —
           // see Merge.overwrite. Always COW regardless of session merge
           // mode: an overwrite is a full rewrite by definition.
-          graft.cdc.Merge.overwrite(spark, lake, df, batchId): Unit
+          graft.cdc.Merge.overwrite(spark, lake, staged.events, batchId): Unit
         else
-          graft.cdc.Merge(spark, lake, df, batchId, lineage = Nil,
+          graft.cdc.Merge(spark, lake, staged.events, batchId, lineage = Nil,
             mode = GraftSql.mergeModeFor(spark)): Unit
-      } else if (overwrite) {
+      case None =>
         // INSERT OVERWRITE from an empty SELECT: the new state is empty —
         // truncate (one metadata commit clearing files AND markers)
-        lake.truncate(): Unit
-      }
-    } finally rm(staging)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = rm(staging)
-
-  private def rm(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(rm) finally s.close()
+        if (overwrite) lake.truncate(): Unit
     }
-    Files.deleteIfExists(p): Unit
-  }
-}
-
-final class GraftInsertWriterFactory(staging: String,
-    schema: org.apache.spark.sql.types.StructType) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    // per-ATTEMPT subdir (taskId is attempt-unique): speculative or retried
-    // attempts never share a tmp path, and abort removes the whole dir
-    new GraftInsertWriter(Paths.get(staging, s"task-$taskId"), partitionId, schema)
-}
-
-/** Buffers nothing: streams rows straight into a segment file. Input layout
-  * is the table's user-facing schema for ITS version — ordinals are resolved
-  * by name (a v1 table has no `lang` column). */
-final class GraftInsertWriter(dir: Path, partitionId: Int,
-    schema: org.apache.spark.sql.types.StructType)
-  extends DataWriter[InternalRow] {
-
-  private def idx(n: String): Int = schema.fieldNames.indexOf(n)
-  private val urlIdx = idx("url")
-  private val tsIdx = idx("warc_ts")
-  private val htmlIdx = idx("html")
-  private val langIdx = idx("lang") // -1 on v1 tables
-
-  private var w: SegmentWriter = _
-  private var n = 0L
-
-  override def write(row: InternalRow): Unit = {
-    if (w == null)
-      w = new SegmentWriter(dir, partitionId, 0L, 64L * 1024 * 1024)
-    val micros = row.getLong(tsIdx)
-    val ts = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-    ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-    w.writeEvent(ChangeEvent(
-      partition = partitionId,
-      offset = n,
-      op = ChangeEvent.OpUpsert,
-      url = row.getUTF8String(urlIdx).toString,
-      warc_ts = ts,
-      html = if (htmlIdx < 0 || row.isNullAt(htmlIdx)) null else row.getBinary(htmlIdx),
-      lang = if (langIdx < 0 || row.isNullAt(langIdx)) null else row.getUTF8String(langIdx).toString))
-    n += 1
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (w != null) w.close()
-    graft.lake.SegmentsStaged(dir.toString)
-  }
-
-  override def abort(): Unit = {
-    if (w != null) w.delete()
-    graft.lake.SinkIO.rmDir(dir)
-  }
-  override def close(): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    LakeTable.deleteRecursively(staging)
 }

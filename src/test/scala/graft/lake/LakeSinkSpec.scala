@@ -222,4 +222,51 @@ class LakeSinkSpec extends SparkSpec {
     assert(texts.values.forall(_ == "new"),
       s"later epoch must win every equal-warc_ts tie: ${texts.view.filter(_._2 != "new").take(3).toMap}")
   }
+
+  test("writeStream.toTable into a v1 table (no lang): every row stored, same rows as INSERT INTO") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val wh = tmpDir("ttv1-wh").toString
+    graft.sql.GraftSql.enable(spark, wh)
+    // v1 schema: content_len INT, no lang — the written rows have five
+    // fields, so the writer must read them by name, not by v2 position
+    val v1 = "(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, content_len INT) " +
+      "USING graft TBLPROPERTIES('buckets'='2')"
+    Seq("ttv1", "insv1").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS graft.$t")
+      spark.sql(s"CREATE TABLE graft.$t $v1")
+    }
+    try {
+      // 30 urls, the first 10 updated later in the same write (LWW)
+      val rows = (0 until 30).map(i => (s"v$i", 1700000000000000L + i)) ++
+        (0 until 10).map(i => (s"v$i", 1800000000000000L + i))
+      val shape = Seq("u AS url", "timestamp_micros(t) AS warc_ts",
+        "cast(concat('<p>', u, '@', t, '</p>') AS BINARY) AS html",
+        "CAST(NULL AS STRING) AS text", "CAST(NULL AS INT) AS content_len")
+
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val mem = MemoryStream[(String, Long)]
+      mem.addData(rows: _*)
+      mem.toDF().toDF("u", "t").selectExpr(shape: _*).writeStream
+        .option("checkpointLocation", tmpDir("ttv1-ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .toTable("graft.ttv1")
+        .awaitTermination()
+
+      rows.toDF("u", "t").selectExpr(shape: _*).createOrReplaceTempView("ttv1_src")
+      spark.sql("INSERT INTO graft.insv1 SELECT * FROM ttv1_src")
+
+      def stored(t: String): Seq[String] =
+        spark.sql(s"SELECT url, warc_ts, hex(html), text, content_len FROM graft.$t")
+          .collect().map(_.toString).sorted.toSeq
+      val streamed = stored("ttv1")
+      assert(streamed.size == 30)
+      assert(spark.sql("SELECT text FROM graft.ttv1 WHERE url = 'v3'").head().getString(0)
+        == "v3@1800000000000003")
+      assert(streamed == stored("insv1"))
+      // the write does not evolve the table
+      assert(!spark.table("graft.ttv1").schema.fieldNames.contains("lang"))
+      assert(LakeTable.load(java.nio.file.Paths.get(wh, "ttv1")).currentSnapshot.schemaVersion == 1)
+    } finally Seq("ttv1", "insv1").foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft.$t"))
+  }
 }
