@@ -16,6 +16,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.lake.MetaFiles
 import graft.model.ChangeEvent
 
 /** DataSource V2 binlog source: tails a directory of block-GZIP segment
@@ -448,25 +449,16 @@ final class BinlogPartitionReader(p: BinlogInputPartition,
 
 /** Dead-letter reports for `errorsTolerance=all`: one JSON file per
   * quarantined offset range, named by (segment, fromOffset) so task retries
-  * and speculative twins overwrite the identical file — the report channel
+  * and speculative twins replace the identical file — the report channel
   * is exactly-once by construction, like every other side artifact here. */
 object DeadLetter {
   def report(dlqDir: java.nio.file.Path, cr: Segment.CorruptRange): Unit = {
     java.nio.file.Files.createDirectories(dlqDir)
-    val m = new ObjectMapper()
-    val node = m.createObjectNode()
-    node.put("segment", cr.segment.getFileName.toString)
-    node.put("partition", cr.partition)
-    node.put("fromOffset", cr.fromOffset)
-    node.put("untilOffset", cr.untilOffset)
-    node.put("error", cr.error)
-    val json = m.writeValueAsString(node)
-    val name = s"${cr.segment.getFileName}.${cr.fromOffset}.dlq.json"
-    val tmp = dlqDir.resolve(s".$name.tmp-${Thread.currentThread().getId}")
-    java.nio.file.Files.write(tmp, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, dlqDir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    MetaFiles.publish(dlqDir.resolve(s"${cr.segment.getFileName}.${cr.fromOffset}.dlq.json"),
+      MetaFiles.json(_.put("segment", cr.segment.getFileName.toString)
+        .put("partition", cr.partition).put("fromOffset", cr.fromOffset)
+        .put("untilOffset", cr.untilOffset).put("error", cr.error)),
+      replace = true)
     System.err.println(s"[binlog] QUARANTINED ${cr.segment.getFileName} " +
       s"offsets [${cr.fromOffset}, ${cr.untilOffset}): ${cr.error}")
   }

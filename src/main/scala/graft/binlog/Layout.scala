@@ -2,6 +2,8 @@ package graft.binlog
 
 import java.nio.file.{Files, Path}
 
+import graft.lake.MetaFiles
+
 /** Archive key layouts — the reference's `Layout` strategies
   * (`/root/reference/common/src/main/java/com/spredfast/kafka/connect/s3/Layout.java:5-21`,
   * `GroupedByDateLayout.java:33-44`, `GroupedByTopicLayout.java:33-46`,
@@ -75,28 +77,20 @@ object Layout {
     * archive reads O(days touched), not O(archive). */
   def listUnder(root: Path, layout: Layout,
       dateFilter: String => Boolean = _ => true): Vector[(BlockMeta, SegmentFile)] = {
-    if (!Files.isDirectory(root)) return Vector.empty
-    val out = Vector.newBuilder[(BlockMeta, SegmentFile)]
-    def walk(dir: Path, depth: Int): Unit = {
-      val s = Files.list(dir)
-      try s.iterator().forEachRemaining { p =>
+    def walk(dir: Path, depth: Int): Vector[(BlockMeta, SegmentFile)] =
+      MetaFiles.list(dir) { p =>
         if (Files.isDirectory(p)) {
           val prunable = layout match {
             case GroupedByDate => depth == 0
             case GroupedByTopic => depth == 1
             case Flat => false
           }
-          if (!prunable || dateFilter(p.getFileName.toString)) walk(p, depth + 1)
-        } else {
-          val rel = root.relativize(p).toString
-          layout.parse(rel).foreach { m =>
-            val sf = SegmentFile(p, m.partition, m.startOffset)
-            if (Files.exists(sf.indexPath)) out += ((m, sf))
-          }
-        }
-      } finally s.close()
-    }
-    walk(root, 0)
-    out.result().sortBy { case (m, f) => (m.topic, m.partition, m.startOffset) }
+          Option.when(!prunable || dateFilter(p.getFileName.toString))(walk(p, depth + 1))
+        } else
+          layout.parse(root.relativize(p).toString)
+            .map(m => (m, SegmentFile(p, m.partition, m.startOffset)))
+            .filter { case (_, sf) => Files.exists(sf.indexPath) }.map(Vector(_))
+      }.flatten
+    walk(root, 0).sortBy { case (m, f) => (m.topic, m.partition, m.startOffset) }
   }
 }

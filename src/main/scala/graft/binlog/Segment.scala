@@ -7,6 +7,7 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.lake.MetaFiles
 import graft.model.ChangeEvent
 
 /** Block-GZIP segment writer: the reference's chunked-output design
@@ -94,8 +95,8 @@ final class SegmentWriter(dir: Path, partition: Int, startOffset: Long,
 
   def recordCount: Long = nextOffset - startOffset
 
-  /** Seal the file: flush last chunk, write `<base>.index.json`, atomically
-    * publish both (tmp + rename, so a crashed writer never leaves a
+  /** Seal the file: flush last chunk, then atomically publish the data file
+    * and `<base>.index.json` (renames, so a crashed writer never leaves a
     * half-visible segment). Returns the index. */
   def close(): ChunkIndex = {
     require(!closed)
@@ -103,16 +104,14 @@ final class SegmentWriter(dir: Path, partition: Int, startOffset: Long,
     if (chunkRecords > 0) sealChunk() else { gz.finish(); gz = null }
     out.close()
     val index = ChunkIndex(chunks.toVector)
-    val idxTmp = dir.resolve(baseName + ".index.json.tmp")
-    Files.write(idxTmp, index.toJson.getBytes(StandardCharsets.UTF_8))
     // data first, then index — readers treat the index as the commit marker,
     // mirroring the reference's upload order (S3Writer.java:47-67). REPLACE
     // mirrors overwrite-on-recreate (BlockGZIPFileWriterTest.java:157-201):
     // a replayed batch rewrites the same names with identical bytes.
     Files.move(dataTmp, dir.resolve(baseName + ".gz"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    Files.move(idxTmp, dir.resolve(baseName + ".index.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    MetaFiles.publish(dir.resolve(baseName + ".index.json"),
+      index.toJson.getBytes(StandardCharsets.UTF_8), replace = true)
     index
   }
 
@@ -140,22 +139,13 @@ object Segment {
     * without its `.index.json` is an uncommitted torn write — skipped. */
   def list(dir: Path, partition: Int): Vector[SegmentFile] = listAll(dir).filter(_.partition == partition)
 
-  def listAll(dir: Path): Vector[SegmentFile] = {
-    if (!Files.isDirectory(dir)) return Vector.empty
-    val out = Vector.newBuilder[SegmentFile]
-    val s = Files.list(dir)
-    try {
-      s.iterator().forEachRemaining { p =>
-        p.getFileName.toString match {
-          case Name(part, off) =>
-            val sf = SegmentFile(p, part.toInt, off.toLong)
-            if (Files.exists(sf.indexPath)) out += sf
-          case _ =>
-        }
-      }
-    } finally s.close()
-    out.result().sortBy(f => (f.partition, f.startOffset))
-  }
+  def listAll(dir: Path): Vector[SegmentFile] = MetaFiles.list(dir) { p =>
+    p.getFileName.toString match {
+      case Name(part, off) =>
+        Some(SegmentFile(p, part.toInt, off.toLong)).filter(sf => Files.exists(sf.indexPath))
+      case _ => None
+    }
+  }.sortBy(f => (f.partition, f.startOffset))
 
   /** Read events of one segment starting at `fromOffset` (inclusive): seek to
     * the chunk containing it via the index (range read), decompress only the

@@ -212,9 +212,7 @@ object Ingest {
   def bootstrap(spark: SparkSession, tableRoot: Path, snapshot: DataFrame,
       nBuckets: Int = 32, mode: MergeMode = Cow,
       opts: MergeOptions = MergeOptions()): LakeTable = {
-    val table =
-      if (LakeTable.exists(tableRoot)) LakeTable.load(tableRoot)
-      else LakeTable.create(tableRoot, nBuckets)
+    val table = LakeTable.create(tableRoot, nBuckets)
     val prior = table.currentSnapshot.batches.map(_.batchId).filterNot(_ == BootstrapBatchId)
     require(prior.isEmpty,
       s"bootstrap requires a fresh table; found committed batches $prior")
@@ -279,9 +277,7 @@ object Ingest {
       retainBinlogEveryBatches: Long = 0L,
       maxBytesPerBatch: Long = Long.MaxValue,
       branch: Option[String] = None): StreamingQuery = {
-    val mainTable =
-      if (LakeTable.exists(tableRoot)) LakeTable.load(tableRoot)
-      else LakeTable.create(tableRoot, nBuckets)
+    val mainTable = LakeTable.create(tableRoot, nBuckets)
     require(branch.isEmpty || (expireEveryBatches == 0 &&
         retainBinlogEveryBatches == 0),
       "branch ingest cannot run table-wide maintenance: snapshot expiry is " +
@@ -395,9 +391,7 @@ object Ingest {
     topics.map { topic =>
       val target = remap(topic)
       val tableRoot = tableRootFor(target)
-      val table =
-        if (LakeTable.exists(tableRoot)) LakeTable.load(tableRoot)
-        else LakeTable.create(tableRoot, nBuckets)
+      val table = LakeTable.create(tableRoot, nBuckets)
       val checkpointDir = s"$checkpointRootDir/$target"
       val lineageToken = s"ingest:$checkpointDir"
       val stream = spark.readStream
@@ -426,9 +420,7 @@ object Ingest {
   def replayBatch(spark: SparkSession, binlogDir: String, tableRoot: Path,
       eventsPerBatch: Long, nBuckets: Int = 32, firstBatchId: Long = 0L,
       mode: MergeMode = Cow, opts: MergeOptions = MergeOptions()): LakeTable = {
-    val table =
-      if (LakeTable.exists(tableRoot)) LakeTable.load(tableRoot)
-      else LakeTable.create(tableRoot, nBuckets)
+    val table = LakeTable.create(tableRoot, nBuckets)
     val segs = graft.binlog.Segment.listAll(Paths.get(binlogDir))
     if (segs.isEmpty) return table
     val maxEnd = segs.map(_.endOffset).max

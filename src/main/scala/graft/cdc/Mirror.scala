@@ -164,9 +164,7 @@ object Mirror {
     require(!opts.lateMaterialize,
       "mirror batches carry sparse non-binlog envelopes; use Cow or Mor " +
         "without lateMaterialize")
-    val dst =
-      if (LakeTable.exists(dstRoot)) LakeTable.load(dstRoot)
-      else LakeTable.create(dstRoot, nBuckets)
+    val dst = LakeTable.create(dstRoot, nBuckets)
     val token = s"mirror:$checkpointDir"
     val reader = spark.readStream.format("graft-feed")
       .option("path", srcRoot.toString)

@@ -77,18 +77,13 @@ object Bloom {
   }
 
   /** The one sidecar routine: fold `n` url hashes into a bitset sized for
-    * THIS file's own key count (`bitsFor(n)`) and rename it into place next
-    * to the data file. The tmp name is attempt-unique, so retried or
-    * speculative tasks never tear each other's sidecar. */
+    * THIS file's own key count (`bitsFor(n)`) and publish it next to the
+    * data file ([[MetaFiles.publish]]: retried or speculative tasks never
+    * tear each other's sidecar). */
   private[lake] def writeSidecar(dataFile: Path, n: Long, hashes: Iterator[Long]): Unit = {
     val bits = new Array[Byte](bitsFor(n) / 8)
     hashes.foreach(set(bits, _))
-    val tmp = dataFile.resolveSibling(dataFile.getFileName.toString +
-      s".bloom.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, bits)
-    Files.move(tmp, sidecar(dataFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    MetaFiles.publish(sidecar(dataFile), bits, replace = true)
   }
 
   /** Backfill sidecars for the given data files (absolute path → expected

@@ -97,9 +97,7 @@ final class LakeStreamingWrite(root: String, nBuckets: Int, mode: graft.cdc.Merg
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     Staged.commit(spark, stagingDir(epochId), messages) { staged =>
-      val table =
-        if (LakeTable.exists(tableRoot)) LakeTable.load(tableRoot)
-        else LakeTable.create(tableRoot, nBuckets)
+      val table = LakeTable.create(tableRoot, nBuckets)
       if (!table.currentSnapshot.committedBatchIds.contains(epochId)) // else a replayed epoch
         staged.foreach(s => graft.cdc.Merge(spark, table, s.events, epochId, s.lineage, mode): Unit)
     }

@@ -1,7 +1,7 @@
 package graft.lake
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,11 +18,18 @@ import org.apache.spark.sql.types.StructType
   * ingest pipeline is single-writer per table, like one sink task per
   * partition in the reference).
   *
-  * Layout:
+  * Layout (this class is the only reader and writer of `meta/`; every
+  * file in it is published through [[MetaFiles.publish]]):
   * {{{
   *   <root>/data/s<snapshotId>/bucket=<n>/part-<task>-<uuid>.parquet
+  *   <root>/data/ref-<b>-f<fork>-s<id>/…  — branch `<b>`'s data files
   *   <root>/meta/snap-<snapshotId>.json
   *   <root>/meta/VERSION            — contains the current snapshotId
+  *   <root>/meta/refs/<b>/          — branch `<b>`: its own snap-*.json and
+  *                                    VERSION, plus FORK (the main snapshot
+  *                                    it was forked at, JSON)
+  *   <root>/meta/tags/<name>.json   — tag → snapshot id (JSON)
+  *   <root>/meta/pins/pin-<id>[-<owner>]-<nonce>  — empty lease files
   * }}}
   *
   * Scale notes (100 TB): all per-file metadata ops here are O(#files touched
@@ -38,15 +45,18 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * across the fork, so per-chain GC reasoning would delete live files. */
   def isMain: Boolean = ref == LakeTable.MainRef
 
-  private def metaDir = root.resolve("meta")
+  private def metaDir = LakeTable.metaDirOf(root)
   /** The chain's own metadata dir: `meta/` for main, `meta/refs/<name>/`
     * for a branch — branch snapshots are INVISIBLE to every main-chain
     * walk (the change feed's id-ordered parent-chain scan, `TIMESTAMP AS
     * OF`, expiry), which is what keeps the main chain's "id order == parent
     * order" invariant true with branches present. */
-  private def refDir = if (isMain) metaDir else metaDir.resolve("refs").resolve(ref)
+  private def refDir = if (isMain) metaDir else branchDir(ref)
+  private def branchDir(name: String) = metaDir.resolve("refs").resolve(name)
   private def versionFile = refDir.resolve("VERSION")
   private def snapFile(id: Long) = refDir.resolve(s"snap-$id.json")
+  private def tagsDir = metaDir.resolve("tags")
+  private def pinsDir = metaDir.resolve("pins")
   /** Branch data dirs are prefixed so a branch's files stay apart from
     * main's `data/s<id>` dir for the same id — the two chains allocate ids
     * independently past the fork (file names are unique anyway, so no write
@@ -61,8 +71,7 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * before the branch VERSION exists). Main handles have no fork. */
   def forkSnapshotId: Long = {
     require(!isMain, "main has no fork point")
-    Snapshot.mapper.readTree(Files.readAllBytes(refDir.resolve("FORK")))
-      .get("fork_snapshot_id").asLong()
+    MetaFiles.readJson(refDir.resolve("FORK")).get("fork_snapshot_id").asLong()
   }
 
   def currentSnapshotId: Long =
@@ -74,18 +83,12 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
   def currentSnapshot: Snapshot = snapshot(currentSnapshotId)
 
   /** All snapshot ids, ascending (time travel surface). */
-  def snapshotIds: Vector[Long] = {
-    val s = Files.list(refDir)
-    try {
-      val b = Vector.newBuilder[Long]
-      s.iterator().forEachRemaining { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("snap-") && n.endsWith(".json"))
-          b += n.stripPrefix("snap-").stripSuffix(".json").toLong
-      }
-      b.result().sorted
-    } finally s.close()
-  }
+  def snapshotIds: Vector[Long] = MetaFiles.list(refDir) { p =>
+    val n = p.getFileName.toString
+    if (n.startsWith("snap-") && n.endsWith(".json"))
+      Some(n.stripPrefix("snap-").stripSuffix(".json").toLong)
+    else None
+  }.sorted
 
   /** `TIMESTAMP AS OF` resolution: the LATEST retained snapshot whose commit
     * wall-clock stamp is ≤ `tsMs`. Commit stamps are strictly monotonic per
@@ -159,10 +162,8 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
       LakeTable.commitLock(root).synchronized {
     require(Files.exists(snapFile(snapshotId)), s"no snapshot $snapshotId")
     LakeTable.validateOwner(owner)
-    val dir = metaDir.resolve("pins")
-    Files.createDirectories(dir)
-    val tag = if (owner.isEmpty) "" else s"$owner-"
-    val f = dir.resolve(s"pin-$snapshotId-$tag${java.util.UUID.randomUUID().toString.take(8)}")
+    Files.createDirectories(pinsDir)
+    val f = pinsDir.resolve(LakeTable.Lease.fileName(snapshotId, owner))
     Files.write(f, Array.empty[Byte])
     new SnapshotPin(snapshotId, f)
   }
@@ -173,24 +174,19 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * block expiry for the rest of the table's life. Under the commit lock
     * (expiry reads the pin set under the same lock).
     *
-    * Ownership is matched POSITIONALLY (the third dash-field of
-    * `pin-<id>-<tag>-<uuid>`), never by substring — a numeric tag can
-    * therefore never match another lease's snapshot-id field, and anonymous
-    * three-field leases can never match at all. */
+    * Ownership is matched POSITIONALLY ([[LakeTable.Lease]]), never by
+    * substring. */
   def releaseOwnedPins(owner: String, except: Set[Path] = Set.empty): Int =
       LakeTable.commitLock(root).synchronized {
     LakeTable.validateOwner(owner)
     require(owner.nonEmpty, "owner tag required")
-    val dir = metaDir.resolve("pins")
-    if (!Files.isDirectory(dir)) return 0
-    val s = Files.list(dir)
-    val mine = Vector.newBuilder[Path]
-    try s.iterator().forEachRemaining { p =>
-      val parts = p.getFileName.toString.split("-")
-      if (parts.length == 4 && parts(0) == "pin" && parts(2) == owner) mine += p
-    } finally s.close()
-    mine.result().count(p => !except.contains(p) && Files.deleteIfExists(p))
+    leases.count(l => l.owner == owner && !except.contains(l.file) &&
+      Files.deleteIfExists(l.file))
   }
+
+  /** Every lease file in `meta/pins/`. */
+  private[lake] def leases: Vector[LakeTable.Lease] =
+    MetaFiles.list(pinsDir)(LakeTable.Lease.parse)
 
   /** Atomically resolve the current snapshot AND pin it: taken under the
     * commit lock, so a concurrent [[Maintain.expireSnapshots]] (which holds
@@ -208,21 +204,9 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
   /** Snapshot ids currently pinned (optionally ignoring leases older than
     * `ignoreOlderThanMs` — crashed holders). */
   def pinnedSnapshotIds(ignoreOlderThanMs: Long = Long.MaxValue): Set[Long] = {
-    val dir = metaDir.resolve("pins")
-    if (!Files.isDirectory(dir)) return Set.empty
     val now = System.currentTimeMillis()
-    val s = Files.list(dir)
-    try {
-      val b = Set.newBuilder[Long]
-      s.iterator().forEachRemaining { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("pin-")) {
-          val fresh = now - Files.getLastModifiedTime(p).toMillis < ignoreOlderThanMs
-          if (fresh) n.split("-").lift(1).flatMap(_.toLongOption).foreach(b += _)
-        }
-      }
-      b.result()
-    } finally s.close()
+    leases.filter(l => now - Files.getLastModifiedTime(l.file).toMillis < ignoreOlderThanMs)
+      .map(_.snapshotId).toSet
   }
 
   /** Commit `next` whose parent must be the current version (CAS).
@@ -248,13 +232,10 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     val stamped = next.copy(commitTsMs =
       math.max(System.currentTimeMillis(),
         parentCommitTsMs.getOrElse(snapshot(cur).commitTsMs) + 1))
-    val tmp = metaDir.resolve(s".snap-${next.snapshotId}.json.tmp")
-    Files.write(tmp, stamped.toJson.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, snapFile(next.snapshotId), StandardCopyOption.ATOMIC_MOVE)
-    val vTmp = metaDir.resolve(s".VERSION.${next.snapshotId}.tmp")
-    Files.write(vTmp, next.snapshotId.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(vTmp, versionFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaFiles.publish(snapFile(next.snapshotId),
+      stamped.toJson.getBytes(StandardCharsets.UTF_8), replace = true)
+    MetaFiles.publish(versionFile,
+      next.snapshotId.toString.getBytes(StandardCharsets.UTF_8), replace = true)
     // every branch commit heartbeats the fork lease: a multi-hour audit
     // must not look like a crashed holder to a pin-horizon expiry
     // (`ignorePinsOlderThanMs`) — main expiring the fork would delete files
@@ -429,22 +410,15 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     LakeTable.validateTagName(name)
     require(Files.exists(snapFile(snapshotId)),
       s"no retained snapshot $snapshotId to tag (have ${snapshotIds.mkString(", ")})")
-    val dir = metaDir.resolve("tags")
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".tag", ".tmp")
-    try {
-      Files.write(tmp,
-        s"""{"snapshot_id":$snapshotId,"created_ms":${System.currentTimeMillis()}}"""
-          .getBytes(StandardCharsets.UTF_8))
-      // move WITHOUT replace: create-new is the uniqueness check, atomic
-      // with the content (an existence poll can never read a partial tag)
-      Files.move(tmp, dir.resolve(s"$name.json")): Unit
-    } catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalArgumentException(
-          s"tag '$name' already exists — dropTag first to re-point it", e)
-      case e: Throwable => Files.deleteIfExists(tmp); throw e
+    Files.createDirectories(tagsDir)
+    // put-if-absent: create-new is the uniqueness check, atomic with the
+    // content (an existence poll can never read a partial tag)
+    try MetaFiles.publish(tagsDir.resolve(s"$name.json"), MetaFiles.json(
+      _.put("snapshot_id", snapshotId).put("created_ms", System.currentTimeMillis())),
+      replace = false)
+    catch {
+      case e: FileAlreadyExistsException => throw new IllegalArgumentException(
+        s"tag '$name' already exists — dropTag first to re-point it", e)
     }
   }
 
@@ -452,28 +426,21 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * expirable again at the next [[Maintain.expireSnapshots]]. */
   def dropTag(name: String): Boolean = LakeTable.commitLock(root).synchronized {
     LakeTable.validateTagName(name)
-    Files.deleteIfExists(metaDir.resolve("tags").resolve(s"$name.json"))
+    Files.deleteIfExists(tagsDir.resolve(s"$name.json"))
   }
 
   /** All tags as (name, snapshotId, createdMs). Unparseable files are
     * skipped (a concurrent createTag's staged `.tmp` is dot-prefixed and
     * never matches). */
-  def tagEntries: Seq[(String, Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val dir = metaDir.resolve("tags")
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    try s.iterator().asScala.flatMap { p =>
-      val n = p.getFileName.toString
-      if (!n.endsWith(".json") || n.startsWith(".")) None
-      else try {
-        val node = Snapshot.mapper.readTree(Files.readAllBytes(p))
-        Some((n.stripSuffix(".json"), node.get("snapshot_id").asLong(),
-          node.get("created_ms").asLong()))
-      } catch { case _: Exception => None }
-    }.toVector.sortBy(_._1)
-    finally s.close()
-  }
+  def tagEntries: Seq[(String, Long, Long)] = MetaFiles.list(tagsDir) { p =>
+    val n = p.getFileName.toString
+    if (!n.endsWith(".json") || n.startsWith(".")) None
+    else try {
+      val node = MetaFiles.readJson(p)
+      Some((n.stripSuffix(".json"), node.get("snapshot_id").asLong(),
+        node.get("created_ms").asLong()))
+    } catch { case _: Exception => None }
+  }.sortBy(_._1)
 
   /** Tag name → snapshot id. */
   def tags: Map[String, Long] = tagEntries.map(t => t._1 -> t._2).toMap
@@ -516,26 +483,26 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
       LakeTable.commitLock(root).synchronized {
     require(isMain, s"cannot fork a branch from branch '$ref' — branches fork from main only")
     LakeTable.validateBranchName(name)
-    val dir = metaDir.resolve("refs").resolve(name)
+    val dir = branchDir(name)
     if (Files.exists(dir.resolve("VERSION")))
       throw new IllegalArgumentException(
         s"branch '$name' already exists — dropBranch first to re-fork it")
     if (Files.isDirectory(dir)) LakeTable.deleteRecursively(dir) // creation crash debris
     val cur = currentSnapshotId
     Files.createDirectories(dir)
-    Files.copy(snapFile(cur), dir.resolve(s"snap-$cur.json"))
-    Files.write(dir.resolve("FORK"),
-      s"""{"fork_snapshot_id":$cur,"created_ms":${System.currentTimeMillis()}}"""
-        .getBytes(StandardCharsets.UTF_8))
+    MetaFiles.publish(dir.resolve(s"snap-$cur.json"), Files.readAllBytes(snapFile(cur)),
+      replace = false)
+    MetaFiles.publish(dir.resolve("FORK"), MetaFiles.json(
+      _.put("fork_snapshot_id", cur).put("created_ms", System.currentTimeMillis())),
+      replace = false)
     // the fork lease: main expiry must keep the fork's files readable for
     // the branch's lifetime. Owned, so publish/drop (or a re-fork after a
     // crash) can clean it up deterministically.
     releaseOwnedPins(s"${LakeTable.ForkLeasePrefix}$name")
     pinUnchecked(cur, s"${LakeTable.ForkLeasePrefix}$name")
     // branch VERSION last, atomically with content (existence keys on it)
-    val tmp = dir.resolve(".VERSION.tmp")
-    Files.write(tmp, cur.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve("VERSION"), StandardCopyOption.ATOMIC_MOVE)
+    MetaFiles.publish(dir.resolve("VERSION"), cur.toString.getBytes(StandardCharsets.UTF_8),
+      replace = false)
     new LakeTable(root, name)
   }
 
@@ -557,45 +524,33 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * VERSION) and silently read main while reporting a branch read. */
   def branchExists(name: String): Boolean =
     LakeTable.isValidBranchName(name) && name != LakeTable.MainRef &&
-      Files.exists(metaDir.resolve("refs").resolve(name).resolve("VERSION"))
+      Files.exists(branchDir(name).resolve("VERSION"))
 
   /** Heartbeat every lease `owner` holds (bump mtime) so a pin-horizon
     * expiry (`ignorePinsOlderThanMs`) doesn't mistake a LIVE long-lived
     * holder for a crashed one. Missing-file races are benign (the lease was
     * just released). */
   private def touchOwnedPins(owner: String): Unit = {
-    val dir = metaDir.resolve("pins")
-    if (!Files.isDirectory(dir)) return
     val now = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())
-    val s = Files.list(dir)
-    try s.iterator().forEachRemaining { p =>
-      val parts = p.getFileName.toString.split("-")
-      if (parts.length == 4 && parts(0) == "pin" && parts(2) == owner)
-        try { Files.setLastModifiedTime(p, now): Unit }
-        catch { case _: java.nio.file.NoSuchFileException => () }
-    } finally s.close()
+    leases.filter(_.owner == owner).foreach { l =>
+      try { Files.setLastModifiedTime(l.file, now): Unit }
+      catch { case _: java.nio.file.NoSuchFileException => () }
+    }
   }
 
   /** All branches as (name, headSnapshotId, forkSnapshotId, createdMs).
     * Creation-crash debris (no VERSION yet) is skipped. */
-  def branchEntries: Seq[(String, Long, Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val dir = metaDir.resolve("refs")
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    try s.iterator().asScala.flatMap { p =>
-      val name = p.getFileName.toString
+  def branchEntries: Seq[(String, Long, Long, Long)] =
+    MetaFiles.list(metaDir.resolve("refs")) { p =>
       if (!Files.exists(p.resolve("VERSION"))) None
       else try {
         val head = new String(Files.readAllBytes(p.resolve("VERSION")),
           StandardCharsets.UTF_8).trim.toLong
-        val fork = Snapshot.mapper.readTree(Files.readAllBytes(p.resolve("FORK")))
-        Some((name, head, fork.get("fork_snapshot_id").asLong(),
+        val fork = MetaFiles.readJson(p.resolve("FORK"))
+        Some((p.getFileName.toString, head, fork.get("fork_snapshot_id").asLong(),
           fork.get("created_ms").asLong()))
       } catch { case _: Exception => None }
-    }.toVector.sortBy(_._1)
-    finally s.close()
-  }
+    }.sortBy(_._1)
 
   /** PUBLISH a branch onto main (the WAP "fast-forward"): one squash
     * commit at `mainHead + 1` carrying the branch head's files, schema
@@ -628,7 +583,7 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     val cur = currentSnapshot
     def cleanup(): Unit = {
       releaseOwnedPins(s"${LakeTable.ForkLeasePrefix}$name")
-      LakeTable.deleteRecursively(metaDir.resolve("refs").resolve(name))
+      LakeTable.deleteRecursively(branchDir(name))
     }
     if (bHead.snapshotId == fork) { cleanup(); return cur } // empty audit
     // read the fork manifest ONCE — both the marker-domain guard and the
@@ -707,7 +662,7 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     LakeTable.validateBranchName(name)
     val existed = branchExists(name)
     releaseOwnedPins(s"${LakeTable.ForkLeasePrefix}$name")
-    LakeTable.deleteRecursively(metaDir.resolve("refs").resolve(name))
+    LakeTable.deleteRecursively(branchDir(name))
     existed
   }
 
@@ -884,6 +839,21 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
       blooms: Boolean = false): Vector[DataFile] =
     DataFileWriter.write(df, root, s"data/$dataDirPrefix$dirName", schemaVersion, blooms)
 
+  /** Delete snapshot `id`'s manifest ([[Maintain.expireSnapshots]], under
+    * the commit lock). */
+  private[lake] def deleteSnapshot(id: Long): Unit = Files.deleteIfExists(snapFile(id)): Unit
+
+  /** Publish staging files anywhere under `meta/` ([[MetaFiles.isStagedTmp]]):
+    * in-flight ones, and debris of writers that died mid-publish. */
+  private[lake] def stagedMetaFiles: Vector[Path] = {
+    def walk(dir: Path): Vector[Path] = MetaFiles.list(dir)(Some(_)).flatMap { p =>
+      if (Files.isDirectory(p)) walk(p)
+      else if (MetaFiles.isStagedTmp(p.getFileName.toString)) Vector(p)
+      else Vector.empty
+    }
+    walk(metaDir)
+  }
+
   /** Remove written-but-uncommitted files (and any bloom sidecars). */
   private def discard(files: Seq[DataFile]): Unit = files.foreach { f =>
     val p = root.resolve(f.path)
@@ -924,6 +894,29 @@ object LakeTable {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[lake] def commitLock(root: Path): Object =
     commitLocks.computeIfAbsent(root.toAbsolutePath.normalize.toString, _ => new Object)
+
+  private def metaDirOf(root: Path): Path = root.resolve("meta")
+
+  /** A snapshot lease file `meta/pins/pin-<snapshotId>[-<owner>]-<nonce>`
+    * ([[LakeTable.pin]]). Owners match `[A-Za-z0-9_]*` ([[validateOwner]])
+    * and nonces are 8 hex chars, so a name splits on `-` into 3 fields
+    * (anonymous) or 4 (owned). Ownership is the third of 4 fields —
+    * positional, never a substring — so a numeric owner can never match
+    * another lease's snapshot-id field. */
+  private[lake] final case class Lease(file: Path, snapshotId: Long, owner: String)
+
+  private[lake] object Lease {
+    def fileName(snapshotId: Long, owner: String): String = {
+      val tag = if (owner.isEmpty) "" else s"$owner-"
+      s"pin-$snapshotId-$tag${java.util.UUID.randomUUID().toString.take(8)}"
+    }
+
+    def parse(file: Path): Option[Lease] = {
+      val parts = file.getFileName.toString.split("-")
+      if (parts.length < 2 || parts(0) != "pin") None
+      else parts(1).toLongOption.map(Lease(file, _, if (parts.length == 4) parts(2) else ""))
+    }
+  }
 
   /** Owner tags ride inside dash-delimited pin file names — enforce the
     * charset instead of rewriting it (a lossy sanitize could collapse two
@@ -993,43 +986,40 @@ object LakeTable {
         "never resolve it as a tag; include a non-digit character")
   }
 
-  /** Create an empty table with an initial snapshot 0.
+  /** Create an empty table with an initial snapshot 0, or return the table
+    * already at `root` untouched — its head, layout and schema win over the
+    * arguments, so every ingest entry point just calls `create`.
     *
-    * Both metadata files publish via tmp + atomic rename — the same
-    * discipline as [[LakeTable.commit]] — because [[exists]] keys on the
+    * Both metadata files publish put-if-absent ([[MetaFiles.publish]]),
+    * `snap-0.json` first and `VERSION` last, because [[exists]] keys on the
     * VERSION file: a concurrent poller doing `exists → load →
     * currentSnapshot` (the live-maintenance threads in RebucketLiveSpec /
     * TortureSpec, or any second pipeline watching for the table to appear)
-    * must never observe a created-but-empty VERSION. */
+    * never observes a created-but-empty VERSION. Racing creators all return
+    * the one table whose files landed first, a create never moves an
+    * existing pointer, and a create that died between the two publishes is
+    * finished by the next one. */
   def create(root: Path, nBuckets: Int, schemaVersion: Int = TableSchemas.current): LakeTable = {
-    val meta = root.resolve("meta")
-    Files.createDirectories(meta)
-    Files.createDirectories(root.resolve("data"))
     val t = new LakeTable(root)
+    if (exists(root)) return t
+    Files.createDirectories(t.metaDir)
+    Files.createDirectories(root.resolve("data"))
     val snap0 = Snapshot(0L, -1L, schemaVersion, nBuckets, Vector.empty, Vector.empty, 0L,
       commitTsMs = System.currentTimeMillis())
-    // REPLACE_EXISTING like commit(): a crashed-then-retried create (or two
-    // racing creators of the same empty table) must land on equivalent
-    // content, not throw FileAlreadyExists on filesystems where ATOMIC_MOVE
-    // alone refuses to overwrite (the contents differ only in the wall-clock
-    // commit stamp — either stamp is a valid creation time)
-    val sTmp = meta.resolve(".snap-0.json.tmp")
-    Files.write(sTmp, snap0.toJson.getBytes(StandardCharsets.UTF_8))
-    Files.move(sTmp, meta.resolve("snap-0.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    val vTmp = meta.resolve(".VERSION.0.tmp")
-    Files.write(vTmp, "0".getBytes(StandardCharsets.UTF_8))
-    Files.move(vTmp, meta.resolve("VERSION"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    def putIfAbsent(f: Path, bytes: Array[Byte]): Unit =
+      try MetaFiles.publish(f, bytes, replace = false)
+      catch { case _: FileAlreadyExistsException => () } // another creator's
+    putIfAbsent(t.snapFile(0L), snap0.toJson.getBytes(StandardCharsets.UTF_8))
+    putIfAbsent(t.versionFile, "0".getBytes(StandardCharsets.UTF_8))
     t
   }
 
   def load(root: Path): LakeTable = {
-    require(Files.exists(root.resolve("meta").resolve("VERSION")), s"no table at $root")
+    require(exists(root), s"no table at $root")
     new LakeTable(root)
   }
 
-  def exists(root: Path): Boolean = Files.exists(root.resolve("meta").resolve("VERSION"))
+  def exists(root: Path): Boolean = Files.exists(metaDirOf(root).resolve("VERSION"))
 
   /** Unbounded url bounds (manifests from writers that took them from
     * parquet footers with no stats; the table writer always records exact

@@ -293,7 +293,7 @@ object Maintain {
         }
       } catch { case _: Exception => }
     }
-    expire.foreach(id => Files.deleteIfExists(table.root.resolve("meta").resolve(s"snap-$id.json")))
+    expire.foreach(table.deleteSnapshot)
     (expire.size, deletedFiles)
   }
 
@@ -323,11 +323,14 @@ object Maintain {
     * pruned only when this call emptied them or when older than the
     * horizon (a writer's freshly created bucket dir must not vanish under
     * it; deleting a file bumps the parent's mtime, so "we emptied it"
-    * cannot be inferred from age). Crashed-commit temp files
-    * (dot-prefixed `*.tmp` directly under `meta/`) age out too; orphan
-    * `snap-*.json` manifests are deliberately KEPT — a crashed commit's
-    * manifest is overwritten by that id's next committer, and deleting it
-    * here could race that rename cross-process.
+    * cannot be inferred from age). The staging files of crashed metadata
+    * publishes ([[MetaFiles.isStagedTmp]]: dot-prefixed `*.tmp`) age out
+    * too, in every dir under `meta/` — commits, tags, and branch
+    * `meta/refs/<b>/` files alike; orphan `snap-*.json` manifests are
+    * deliberately KEPT — a crashed commit's manifest is overwritten by that
+    * id's next committer, and deleting it here could race that rename
+    * cross-process. So are `branch_<name>` fork leases whose branch does
+    * not exist (a crashed [[LakeTable.createBranch]]).
     *
     * Returns the table-root-relative paths removed (or that WOULD be
     * removed, with `dryRun = true`). */
@@ -375,21 +378,12 @@ object Maintain {
     }
     Seq("data", "staging").map(table.root.resolve)
       .filter(Files.isDirectory(_)).foreach(sweep(_, isRoot = true): Unit)
-    // crashed-commit (meta/) and crashed-createTag (meta/tags/) staged
-    // temp files age out too — both are dot-prefixed `*.tmp`, invisible to
+    // crashed metadata publishes' staging files age out too — invisible to
     // readers, and referenced by nothing once their writer died
-    Seq(table.root.resolve("meta"), table.root.resolve("meta").resolve("tags"))
-      .filter(Files.isDirectory(_)).foreach { dir =>
-        val s = Files.list(dir)
-        try s.forEach { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith(".") && n.endsWith(".tmp") &&
-              Files.isRegularFile(p) && ageOk(p)) {
-            out += table.root.relativize(p).toString
-            if (!dryRun) Files.deleteIfExists(p): Unit
-          }
-        } finally s.close()
-      }
+    table.stagedMetaFiles.filter(ageOk).foreach { p =>
+      out += table.root.relativize(p).toString
+      if (!dryRun) Files.deleteIfExists(p): Unit
+    }
     // crashed-createBranch lease debris: a creation that died between
     // taking the `branch_<name>` fork lease and the branch VERSION move
     // leaves a lease no branch owns — and since expireSnapshots honors
@@ -400,18 +394,11 @@ object Maintain {
     // and behind the mtime horizon (a cross-process create's fresh lease
     // is always younger).
     LakeTable.commitLock(table.root).synchronized {
-      val pinsDir = table.root.resolve("meta").resolve("pins")
-      if (Files.isDirectory(pinsDir)) {
-        val s = Files.list(pinsDir)
-        try s.forEach { p =>
-          val parts = p.getFileName.toString.split("-")
-          if (parts.length == 4 && parts(0) == "pin" &&
-              parts(2).startsWith(LakeTable.ForkLeasePrefix) &&
-              !table.branchExists(parts(2).stripPrefix(LakeTable.ForkLeasePrefix)) && ageOk(p)) {
-            out += table.root.relativize(p).toString
-            if (!dryRun) Files.deleteIfExists(p): Unit
-          }
-        } finally s.close()
+      table.leases.filter(l => l.owner.startsWith(LakeTable.ForkLeasePrefix) &&
+          !table.branchExists(l.owner.stripPrefix(LakeTable.ForkLeasePrefix)) &&
+          ageOk(l.file)).foreach { l =>
+        out += table.root.relativize(l.file).toString
+        if (!dryRun) Files.deleteIfExists(l.file): Unit
       }
     }
     out.result()

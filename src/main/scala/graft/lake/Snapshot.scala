@@ -128,7 +128,7 @@ final case class Snapshot(
 }
 
 object Snapshot {
-  private[lake] val mapper = new ObjectMapper()
+  private val mapper = new ObjectMapper()
 
   def fromJson(json: String): Snapshot = {
     val root = mapper.readTree(json)

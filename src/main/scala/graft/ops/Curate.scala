@@ -1,14 +1,13 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.{Ingest, MergeMode, Mor}
-import graft.lake.{LakeTable, SnapshotPin}
+import graft.lake.{LakeTable, MetaFiles, SnapshotPin}
 
 /** The CDC → curation loop: the composition a training-data pipeline runs
   * on top of this engine. As change batches MERGE into the url-keyed
@@ -127,23 +126,17 @@ object Curate {
   private def readCursor(lshDir: Path): Option[CursorMeta] = {
     val f = cursorFile(lshDir)
     if (!Files.exists(f)) return None
-    val j = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-    def num(name: String): Option[Long] =
-      s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(j).map(_.group(1).toLong)
-    num("curatedSnapshotId").map(id =>
-      CursorMeta(id, num("rowsSinceRebuild").getOrElse(0L),
-        num("rowsAtRebuild").getOrElse(0L)))
+    val j = MetaFiles.readJson(f)
+    Option(j.get("curatedSnapshotId")).map(id =>
+      CursorMeta(id.asLong(), j.path("rowsSinceRebuild").asLong(0L),
+        j.path("rowsAtRebuild").asLong(0L)))
   }
 
-  private def writeCursor(lshDir: Path, m: CursorMeta): Unit = {
-    val tmp = lshDir.resolve(s".curated_head.${m.curatedSnapshotId}.tmp")
-    Files.write(tmp,
-      (s"""{"curatedSnapshotId":${m.curatedSnapshotId},""" +
-        s""""rowsSinceRebuild":${m.rowsSinceRebuild},""" +
-        s""""rowsAtRebuild":${m.rowsAtRebuild}}""").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, cursorFile(lshDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  private def writeCursor(lshDir: Path, m: CursorMeta): Unit =
+    MetaFiles.publish(cursorFile(lshDir), MetaFiles.json(
+      _.put("curatedSnapshotId", m.curatedSnapshotId)
+        .put("rowsSinceRebuild", m.rowsSinceRebuild)
+        .put("rowsAtRebuild", m.rowsAtRebuild)), replace = true)
 
   /** Curate everything between the persisted cursor and the table's CURRENT
     * head, then advance the cursor; `None` when the cursor is already at

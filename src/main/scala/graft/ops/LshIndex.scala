@@ -1,10 +1,12 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.lake.MetaFiles
 
 /** PERSISTED MinHash-LSH band index for INCREMENTAL near-duplicate
   * detection — the shape a web-scale training-data pipeline actually runs:
@@ -143,32 +145,31 @@ object LshIndex {
   def create(dir: Path, params: Params): Unit = {
     require(params.n >= 1 && params.bands >= 1 && params.rowsPerBand >= 1 && params.shards >= 1)
     Files.createDirectories(dir)
-    require(!Files.exists(paramsFile(dir)), s"index already exists at $dir")
-    val json = s"""{"layout":$CurrentLayout,"n":${params.n},"bands":${params.bands},""" +
-      s""""rowsPerBand":${params.rowsPerBand},"shards":${params.shards}}"""
-    Files.write(paramsFile(dir), json.getBytes(StandardCharsets.UTF_8)): Unit
+    try MetaFiles.publish(paramsFile(dir), MetaFiles.json(_.put("layout", CurrentLayout)
+      .put("n", params.n).put("bands", params.bands)
+      .put("rowsPerBand", params.rowsPerBand).put("shards", params.shards)),
+      replace = false)
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        throw new IllegalArgumentException(s"index already exists at $dir", e)
+    }
   }
-
-  private def readParamsJson(dir: Path): String =
-    new String(Files.readAllBytes(paramsFile(dir)), StandardCharsets.UTF_8)
 
   /** Layout-tolerant load (params parse on any version — [[rebuild]] uses
     * it to migrate a legacy tree without reading its data files). */
-  def load(dir: Path): Params = parseParams(readParamsJson(dir), dir)
+  def load(dir: Path): Params = parseParams(MetaFiles.readJson(paramsFile(dir)), dir)
 
-  private def parseParams(j: String, dir: Path): Params = {
-    def field(name: String): Int =
-      s""""$name":(\\d+)""".r.findFirstMatchIn(j)
-        .getOrElse(throw new IllegalStateException(s"bad params.json at $dir"))
-        .group(1).toInt
+  private def parseParams(j: JsonNode, dir: Path): Params = {
+    def field(name: String): Int = Option(j.get(name))
+      .getOrElse(throw new IllegalStateException(s"bad params.json at $dir")).asInt()
     Params(field("n"), field("bands"), field("rowsPerBand"), field("shards"))
   }
 
   /** One read: parse params AND enforce the current layout (a params.json
     * without the `layout` field predates versioning → 1). */
   private def loadChecked(dir: Path): Params = {
-    val j = readParamsJson(dir)
-    val l = """"layout":(\d+)""".r.findFirstMatchIn(j).map(_.group(1).toInt).getOrElse(1)
+    val j = MetaFiles.readJson(paramsFile(dir))
+    val l = j.path("layout").asInt(1)
     if (l != CurrentLayout)
       throw new IllegalStateException(
         s"LSH index at $dir uses legacy layout $l (current $CurrentLayout): " +
@@ -350,20 +351,10 @@ object LshIndex {
   /** Tags of the span directories currently in the index (the ad-hoc
     * accumulator included), lexicographically sorted. Driver-side list:
     * O(spans). */
-  def spanTags(dir: Path): Seq[String] = {
-    val b = bandsDir(dir)
-    if (!Files.isDirectory(b)) return Seq.empty
-    val s = Files.list(b)
-    try {
-      val it = s.iterator()
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val name = it.next().getFileName.toString
-        if (name.startsWith("span=")) out += name.stripPrefix("span=")
-      }
-      out.toSeq.sorted
-    } finally s.close()
-  }
+  def spanTags(dir: Path): Seq[String] = MetaFiles.list(bandsDir(dir)) { p =>
+    val name = p.getFileName.toString
+    Option.when(name.startsWith("span="))(name.stripPrefix("span="))
+  }.sorted
 
   /** `(tag, visible parquet bytes)` per span — the fold policy's input
     * ([[graft.ops.Curate.maybeCompactSpans]] folds smallest-first, the
@@ -373,23 +364,12 @@ object LshIndex {
   def spanSizes(dir: Path): Seq[(String, Long)] = spanTags(dir).map { t =>
     val d = if (t == AdhocTag) adhocDir(dir) else spanDir(dir, t)
     def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def go(x: Path): Long = {
-      val s = Files.list(x)
-      try {
-        val it = s.iterator()
-        var bytes = 0L
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (!hidden(n))
-            bytes += (if (Files.isDirectory(p)) go(p)
-                      else if (n.endsWith(".parquet")) Files.size(p)
-                      else 0L)
-        }
-        bytes
-      } finally s.close()
-    }
-    (t, if (Files.isDirectory(d)) go(d) else 0L)
+    def go(x: Path): Long = MetaFiles.list(x) { p =>
+      val n = p.getFileName.toString
+      Option.when(!hidden(n))(
+        if (Files.isDirectory(p)) go(p) else if (n.endsWith(".parquet")) Files.size(p) else 0L)
+    }.sum
+    (t, go(d))
   }
 
   /** COMPACT closed spans: fold the rows of `tags`' span directories into
@@ -456,7 +436,7 @@ object LshIndex {
     * shape, one `span=<tag>` directory), and swaps — after it, the index
     * equals `create` + one `append` of `liveDocs`, bit for bit.
     *
-    * Swap protocol (the [[Similarity.rebuildIvfIndex]] discipline): build
+    * Swap protocol ([[graft.lake.MetaFiles.swapDir]]): build
     * under `<dir>.rebuild-<nonce>` (probes never see it), `beforeSwap` runs
     * against the finished fresh tree and its (doc, band) row count (install
     * sidecar state — e.g. the curation cursor with its reset GC growth
@@ -474,16 +454,12 @@ object LshIndex {
       idCol: String, dir: Path, span: String = "rebuilt",
       beforeSwap: (Path, Long) => Unit = (_, _) => ()): Long = {
     val p = load(dir)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val fresh = dir.resolveSibling(s"${dir.getFileName}.rebuild-$nonce")
-    create(fresh, p)
-    val n = append(liveDocs, textCol, idCol, fresh, Some(span))
-    beforeSwap(fresh, n)
-    val old = dir.resolveSibling(s"${dir.getFileName}.old-$nonce")
-    Files.move(dir, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Files.move(fresh, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    graft.lake.LakeTable.deleteRecursively(old)
-    n
+    MetaFiles.swapDir(dir) { fresh =>
+      create(fresh, p)
+      val n = append(liveDocs, textCol, idCol, fresh, Some(span))
+      beforeSwap(fresh, n)
+      n
+    }
   }
 
   /** Convenience: probe-then-append in the canonical ingest order — returns

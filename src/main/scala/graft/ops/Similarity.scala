@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.VecFns
+import graft.lake.MetaFiles
 import graft.util.Rng
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -223,10 +224,7 @@ object Similarity {
     val obs = org.apache.spark.sql.Observation()
     assigned.observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").partitionBy("list").parquet(dir)
-    val json = cents.sortBy(_._1).map(_._2.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_centroids.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeCentroids(dir, cents)
     writeTrainMeta(dir, TrainMeta(nLists, seed, md5Seeding,
       trainedRows = obs.get("n").asInstanceOf[Long], appendedRows = 0L,
       idCol = idCol, vecCol = vecCol))
@@ -260,10 +258,7 @@ object Similarity {
     sq8Columns(assigned, idCol, vecCol)
       .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").partitionBy("list").parquet(dir)
-    val json = cents.sortBy(_._1).map(_._2.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_centroids.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeCentroids(dir, cents)
     writeTrainMeta(dir, TrainMeta(nLists, seed, md5Seeding,
       trainedRows = obs.get("n").asInstanceOf[Long], appendedRows = 0L,
       idCol = idCol, vecCol = vecCol, quant = "sq8"))
@@ -283,17 +278,12 @@ object Similarity {
   private def metaPath(dir: String) =
     java.nio.file.Paths.get(dir, "_train_meta.json")
 
-  private def writeTrainMeta(dir: String, m: TrainMeta): Unit = {
-    val json = s"""{"nLists":${m.nLists},"seed":${m.seed},""" +
-      s""""md5Seeding":${m.md5Seeding},"trainedRows":${m.trainedRows},""" +
-      s""""appendedRows":${m.appendedRows},""" +
-      s""""idCol":"${m.idCol}","vecCol":"${m.vecCol}","quant":"${m.quant}"}"""
-    val tmp = java.nio.file.Paths.get(dir, s".train_meta.tmp")
-    java.nio.file.Files.write(tmp, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, metaPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  private def writeTrainMeta(dir: String, m: TrainMeta): Unit =
+    MetaFiles.publish(metaPath(dir), MetaFiles.json(_.put("nLists", m.nLists)
+      .put("seed", m.seed).put("md5Seeding", m.md5Seeding)
+      .put("trainedRows", m.trainedRows).put("appendedRows", m.appendedRows)
+      .put("idCol", m.idCol).put("vecCol", m.vecCol).put("quant", m.quant)),
+      replace = true)
 
   /** `None` for a pre-meta index (created before training provenance was
     * recorded): appends still work, the automated cadence just can't judge
@@ -301,21 +291,20 @@ object Similarity {
   def readTrainMeta(dir: String): Option[TrainMeta] = {
     val p = metaPath(dir)
     if (!java.nio.file.Files.exists(p)) return None
-    val j = new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)
-    def f(name: String): String =
-      s""""$name":([^,}]+)""".r.findFirstMatchIn(j)
-        .getOrElse(throw new IllegalStateException(s"bad _train_meta.json at $dir"))
-        .group(1)
-    def str(name: String): String =
-      s""""$name":"([^"]*)"""".r.findFirstMatchIn(j).map(_.group(1))
-        .getOrElse(throw new IllegalStateException(s"bad _train_meta.json at $dir"))
+    val j = MetaFiles.readJson(p)
+    def f(name: String): com.fasterxml.jackson.databind.JsonNode = Option(j.get(name))
+      .getOrElse(throw new IllegalStateException(s"bad _train_meta.json at $dir"))
     // quant is optional for pre-SQ8 metas: absent ⇒ raw float storage
-    val quant = """"quant":"([^"]*)"""".r.findFirstMatchIn(j).map(_.group(1)).getOrElse("raw")
-    Some(TrainMeta(f("nLists").toInt, f("seed").toLong, f("md5Seeding").toBoolean,
-      f("trainedRows").toLong, f("appendedRows").toLong, str("idCol"), str("vecCol"),
-      quant))
+    Some(TrainMeta(f("nLists").asInt(), f("seed").asLong(), f("md5Seeding").asBoolean(),
+      f("trainedRows").asLong(), f("appendedRows").asLong(), f("idCol").asText(),
+      f("vecCol").asText(), j.path("quant").asText("raw")))
   }
+
+  /** `_centroids.json`: one array of doubles per list, in list order. */
+  private def writeCentroids(dir: String, cents: Array[(Int, Array[Double])]): Unit =
+    MetaFiles.publish(java.nio.file.Paths.get(dir, "_centroids.json"),
+      cents.sortBy(_._1).map(_._2.mkString("[", ",", "]")).mkString("[", ",", "]")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8), replace = true)
 
   /** INCREMENTAL index maintenance: assign a new vector batch with the
     * index's FROZEN codebook (the FAISS discipline — the coarse quantizer is
@@ -382,15 +371,14 @@ object Similarity {
     * index's CURRENT contents (same seeded-sample + one-Lloyd-pass
     * procedure as [[writeIvfIndex]] — a rebuild equals a from-scratch index
     * over the same rows, bit for bit), re-assigns every vector, writes a
-    * complete fresh inverted file NEXT TO the live one, and swaps.
-    *
-    * Swap protocol: build under `<dir>.rebuild-<nonce>` (readers never see
-    * it), then `dir → <dir>.old-<nonce>` and `rebuild → dir` (two atomic
-    * renames), then delete the old tree. Probes re-list the directory per
-    * call, so the only hazard is the instant between the renames — a
-    * concurrent probe fails loudly on the missing dir (retry) and can never
-    * observe a half-written MIX of codebooks. Crash between the renames:
-    * restore by renaming the `.old-<nonce>` sibling back. Retrain cadence
+    * complete fresh inverted file NEXT TO the live one, and swaps
+    * ([[graft.lake.MetaFiles.swapDir]]: the builder fully materializes —
+    * train collects + parquet write — before two atomic renames). Probes
+    * re-list the directory per call, so the only hazard is the instant
+    * between the renames — a concurrent probe fails loudly on the missing
+    * dir (retry) and can never observe a half-written MIX of codebooks.
+    * Crash between the renames: restore by renaming the `.old-<nonce>`
+    * sibling back. Retrain cadence
     * is the deployment's contract (e.g. when appended rows since last train
     * exceed ~the trained corpus, or recall probes degrade). */
   def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -398,8 +386,8 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       md5Seeding: Boolean = false): Array[(Int, Array[Double])] = {
     val vecs = spark.read.parquet(dir).select(col(idCol), col(vecCol))
-    swapRebuild(dir)(fresh => writeIvfIndex(vecs, fresh, nLists, seed,
-      idCol, vecCol, md5Seeding))
+    MetaFiles.swapDir(java.nio.file.Paths.get(dir))(fresh => writeIvfIndex(vecs,
+      fresh.toString, nLists, seed, idCol, vecCol, md5Seeding))
   }
 
   /** [[rebuildIvfIndex]] for an SQ8 index: retrains over the caller-supplied
@@ -410,24 +398,8 @@ object Similarity {
       source: DataFrame, nLists: Int, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       md5Seeding: Boolean = false): Array[(Int, Array[Double])] =
-    swapRebuild(dir)(fresh => writeIvfIndexSq8(source, fresh, nLists, seed,
-      idCol, vecCol, md5Seeding))
-
-  /** Build-next-to-live-then-swap: the builder fully materializes (train
-    * collects + parquet write) into `<dir>.rebuild-<nonce>` BEFORE the two
-    * atomic renames, so readers never observe a half-written mix. */
-  private def swapRebuild(dir: String)(
-      build: String => Array[(Int, Array[Double])]): Array[(Int, Array[Double])] = {
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val cents = build(s"$dir.rebuild-$nonce")
-    val live = java.nio.file.Paths.get(dir)
-    val old = java.nio.file.Paths.get(s"$dir.old-$nonce")
-    java.nio.file.Files.move(live, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir.rebuild-$nonce"), live,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    graft.lake.LakeTable.deleteRecursively(old)
-    cents
-  }
+    MetaFiles.swapDir(java.nio.file.Paths.get(dir))(fresh => writeIvfIndexSq8(source,
+      fresh.toString, nLists, seed, idCol, vecCol, md5Seeding))
 
   /** IVF top-k for EXTERNAL query vectors (a new batch not yet in the index)
     * against a persisted index: probes are partition-pruned, the query batch
@@ -458,9 +430,7 @@ object Similarity {
 
   /** Load the centroid matrix written by [[writeIvfIndex]]. */
   def readIvfCentroids(dir: String): Array[(Int, Array[Double])] = {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_centroids.json")), java.nio.charset.StandardCharsets.UTF_8)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    val node = MetaFiles.readJson(java.nio.file.Paths.get(dir, "_centroids.json"))
     (0 until node.size()).map { i =>
       val arr = node.get(i)
       i -> Array.tabulate(arr.size())(j => arr.get(j).asDouble())

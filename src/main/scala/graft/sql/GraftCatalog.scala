@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{LakeTable, TableSchemas}
+import graft.lake.{LakeTable, MetaFiles, TableSchemas}
 
 /** `TableCatalog` for graft lake tables — the declarative surface:
   *
@@ -72,14 +72,8 @@ class GraftCatalog extends TableCatalog
     else Array.empty
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
-    val dir = namespace.foldLeft(warehouse)(_.resolve(_))
-    if (!Files.isDirectory(dir)) return Array.empty
-    val s = Files.list(dir)
-    try s.iterator().asScala
-      .filter(p => LakeTable.exists(p))
-      .map(p => Identifier.of(namespace, p.getFileName.toString))
-      .toArray
-    finally s.close()
+    MetaFiles.list(namespace.foldLeft(warehouse)(_.resolve(_)))(p =>
+      Option.when(LakeTable.exists(p))(Identifier.of(namespace, p.getFileName.toString))).toArray
   }
 
   override def loadTable(ident: Identifier): Table = {

@@ -43,6 +43,36 @@ class LakeTableSpec extends SparkSpec {
     intercept[IllegalArgumentException](t.evolveSchema(2))
   }
 
+  test("create on an existing table returns it untouched: the pointer never moves back") {
+    val root = tmpDir("lake-recreate")
+    val t = LakeTable.create(root, nBuckets = 8, schemaVersion = 1)
+    t.evolveSchema(2)
+    val again = LakeTable.create(root, nBuckets = 16, schemaVersion = 2)
+    assert(again.currentSnapshotId == 1)
+    assert(again.currentSnapshot.nBuckets == 8 && again.currentSnapshot.schemaVersion == 2)
+    assert(again.snapshotIds == Vector(0L, 1L) && again.snapshot(0).nBuckets == 8)
+  }
+
+  test("racing creators of one root all succeed and all see one snapshot 0") {
+    val threads = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try (1 to 50).foreach { round =>
+      val root = tmpDir("lake-race")
+      val barrier = new java.util.concurrent.CyclicBarrier(threads)
+      val creates = (0 until threads).map(i => pool.submit(() => {
+        barrier.await()
+        LakeTable.create(root, nBuckets = 4 + i).currentSnapshot
+      }))
+      val seen = creates.map(_.get()) // a failed create rethrows here
+      assert(seen.distinct.size == 1, s"round $round: creators saw ${seen.distinct}")
+      assert(seen.head.snapshotId == 0L)
+      val meta = root.resolve("meta")
+      assert(Files.list(meta).toArray.map(_.toString).sorted.toSeq ==
+        Seq(meta.resolve("VERSION").toString, meta.resolve("snap-0.json").toString),
+        s"round $round: staging files left behind")
+    } finally pool.shutdown()
+  }
+
   /** A v2 table row plus its bucket. */
   private def v2Row(u: String, tsMicros: Long, html: String, off: Long, del: Boolean,
       nBuckets: Int): Row =

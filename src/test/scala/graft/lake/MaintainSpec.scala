@@ -209,6 +209,23 @@ class MaintainSpec extends SparkSpec {
     assert(oracle.forall { case (u, (ts, _, _, _)) => got(u) == ts })
   }
 
+  test("removeOrphanFiles: aged staging files under every meta dir go, fresh ones stay") {
+    import java.nio.file.{Files => F}
+    val table = LakeTable.create(tmpDir("mtmp"), nBuckets = 2)
+    table.createBranch("x")
+    val now = System.currentTimeMillis()
+    // a createBranch that died before its VERSION publish, and an in-flight
+    // branch commit's staging file
+    val aged = table.root.resolve("meta/refs/x/.VERSION.tmp")
+    val fresh = table.root.resolve("meta/refs/x/.snap-1.json.0a1b2c3d.tmp")
+    F.write(aged, Array[Byte](1))
+    F.setLastModifiedTime(aged, java.nio.file.attribute.FileTime.fromMillis(now - 2 * 3600 * 1000L))
+    F.write(fresh, Array[Byte](1))
+    assert(Maintain.removeOrphanFiles(table, now - 3600 * 1000L) == Vector("meta/refs/x/.VERSION.tmp"))
+    assert(!F.exists(aged) && F.exists(fresh))
+    assert(table.branchExists("x") && table.branchTable("x").currentSnapshotId == 0L)
+  }
+
   private def countDataFiles(table: LakeTable): Int = {
     val data = table.root.resolve("data")
     val out = new java.util.concurrent.atomic.AtomicInteger()
