@@ -96,28 +96,19 @@ object Bloom {
     val missing = files.filterNot(f => Files.exists(sidecar(f._1)))
       .map { case (p, rows) => (p.toString, rows) }
     if (missing.isEmpty) return 0
+    // the table's one parquet reader, pruned to `url`: a non-null string in
+    // every schema version, so one version's reader reads every file's urls
     val urlOnly = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType, nullable = false)))
-    // Spark's own parquet reader closure (driver-built, executor-shippable —
-    // same pattern as the bucket scans); requiredSchema prunes to `url`
-    val readFile = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = urlOnly,
-        partitionSchema = new org.apache.spark.sql.types.StructType(),
-        requiredSchema = urlOnly,
-        filters = Nil,
-        options = Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = spark.sessionState.newHadoopConf())
+    val reader = graft.sql.GraftBucketReader.parquetReaders(spark, urlOnly,
+      Seq(TableSchemas.current), filters = Nil)(TableSchemas.current)
     val slices = math.max(1, math.min(missing.size, spark.sparkContext.defaultParallelism * 2))
     spark.sparkContext.parallelize(missing, slices).map { case (pathStr, rows) =>
       val p = java.nio.file.Paths.get(pathStr)
       if (Files.exists(sidecar(p))) 0
       else {
-        val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
-          org.apache.spark.sql.catalyst.InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPathString(pathStr), 0L, Files.size(p))
-        writeSidecar(p, rows, readFile(pf).map(r => hashOf(r.getUTF8String(0))))
+        writeSidecar(p, rows,
+          reader.open(pathStr, Files.size(p)).map(r => hashOf(r.getUTF8String(0))))
         1
       }
     }.sum().toInt

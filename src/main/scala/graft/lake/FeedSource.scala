@@ -583,7 +583,7 @@ final class FeedMicroBatchStream(root: Path, pinnedVersion: Int,
 }
 
 final class FeedReaderFactory(
-    readers: Map[Int, org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]],
+    readers: Map[Int, graft.sql.GraftBucketReader.FileReader],
     required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new FeedPartitionReader(partition.asInstanceOf[FeedInputPartition], readers, required)
@@ -596,17 +596,13 @@ final class FeedReaderFactory(
   * winners by envelope, which is what makes COW re-emission and duplicate
   * replay harmless. */
 final class FeedPartitionReader(p: FeedInputPartition,
-    readers: Map[Int, org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]],
+    readers: Map[Int, graft.sql.GraftBucketReader.FileReader],
     required: StructType) extends PartitionReader[InternalRow] {
 
   private val proj: UnsafeProjection = graft.sql.GraftBucketReader.alignProj(
     required, p.schemaVersion, Map("_feed_snapshot" -> Literal(p.snapshotId, LongType)))
 
-  private val it: Iterator[InternalRow] = {
-    val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
-      InternalRow.empty, org.apache.spark.paths.SparkPath.fromPathString(p.path), 0L, p.bytes)
-    readers(p.schemaVersion)(pf)
-  }
+  private val it: Iterator[InternalRow] = readers(p.schemaVersion).open(p.path, p.bytes)
 
   private var cur: InternalRow = _
   override def next(): Boolean = {

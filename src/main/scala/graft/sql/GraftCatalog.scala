@@ -5,15 +5,28 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, PartitionedFile, RecordReaderIterator}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.lake.{LakeTable, MetaFiles, TableSchemas}
 
@@ -687,7 +700,13 @@ final class GraftLakeScan(lake: LakeTable, snapshotId: Option[Long],
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  /** Built ONCE per scan: Spark asks for the factory while planning
+    * (`supportsColumnar`) and again from the executed `BatchScanExec`. It
+    * depends only on the static pushdown state (the pruned schema,
+    * `urlRowFilters`, `tsRowFilters`); runtime filtering changes none of it. */
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  private lazy val readerFactory: PartitionReaderFactory = {
     val out = readSchema()
     // the merge reader's WORKING schema: the projected columns plus the
     // always-needed resolution internals, in the logical layout's order
@@ -734,30 +753,144 @@ object GraftBucketReader {
   val MergeInternals: Set[String] =
     Set("url", "_deleted") ++ graft.lake.Resolve.OrderCols
 
-  /** A driver-built parquet reader closure: one file in, rows out. */
-  type FileReader = org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]
+  /** One schema version's parquet reader: opens one file at a time with
+    * Spark's `VectorizedParquetRecordReader`, step for step as the per-file
+    * closure of Spark's V1 `ParquetFileFormat` reader does, but without
+    * that builder's conf broadcast per call: the conf is the session's cached
+    * broadcast ([[SessionHadoopConf]]), and the per-query state — the
+    * requested columns and the pushed filters — travels in this object. */
+  final class FileReader private[GraftBucketReader] (
+      conf: Broadcast[SerializableConfiguration], s: ReadSettings,
+      requiredJson: String, filters: Seq[org.apache.spark.sql.sources.Filter])
+    extends Serializable {
+
+    /** Rows (not batches) of the parquet file at `path`, `bytes` long. The
+      * reader closes itself once drained and at the end of the task that
+      * opened it, so a fold that stops early (a pushed LIMIT) leaves no
+      * file open. */
+    def open(path: String, bytes: Long): Iterator[InternalRow] = {
+      val file = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, bytes)
+      val shared = conf.value.value
+      val opened = ParquetFooterReader.openFileAndReadFooter(shared, file, true)
+      var handedOver = false // once initialized, the reader owns the stream
+      try {
+        val meta = opened.footer.getFileMetaData
+        val kv = meta.getKeyValueMetaData
+        val dtRebase = DataSourceUtils.datetimeRebaseSpec(kv.get(_), s.datetimeRebaseMode)
+        val int96Rebase = DataSourceUtils.int96RebaseSpec(kv.get(_), s.int96RebaseMode)
+        // filters bind against this file's own footer schema
+        val pushed =
+          if (!s.pushDown) None
+          else {
+            val pf = new ParquetFilters(meta.getSchema, s.pushDownDate, s.pushDownTimestamp,
+              s.pushDownDecimal, s.pushDownStringPredicate, s.pushDownInThreshold,
+              s.caseSensitive, dtRebase)
+            filters.flatMap(pf.createFilter(_)).reduceOption(FilterApi.and)
+          }
+        val convertTz =
+          if (s.int96Conversion && !meta.getCreatedBy.startsWith("parquet-mr"))
+            DateTimeUtils.getZoneId(shared.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+          else null
+        // the context COPIES the shared conf: the per-query keys go on the copy
+        val ctx = new TaskAttemptContextImpl(shared,
+          new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
+        ctx.getConfiguration.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requiredJson)
+        ctx.getConfiguration.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, requiredJson)
+        pushed.foreach(ParquetInputFormat.setFilterPredicate(ctx.getConfiguration, _))
+        val task = Option(TaskContext.get())
+        val reader = new VectorizedParquetRecordReader(convertTz,
+          dtRebase.mode.toString, dtRebase.timeZone,
+          int96Rebase.mode.toString, int96Rebase.timeZone,
+          s.offHeap && task.isDefined, s.batchSize)
+        val rows = new RecordReaderIterator[InternalRow](
+          reader.asInstanceOf[org.apache.hadoop.mapreduce.RecordReader[Void, InternalRow]])
+        try {
+          reader.initialize(new FileSplit(file.toPath, 0L, bytes, Array.empty[String]), ctx,
+            Some(opened.inputFile), Some(opened.inputStream), Some(opened.footer))
+          handedOver = true
+          reader.initBatch(new StructType(), InternalRow.empty)
+        } catch { case e: Throwable => rows.close(); throw e }
+        task.foreach(_.addTaskCompletionListener[Unit](_ => rows.close()))
+        rows
+      } finally if (!handedOver) opened.inputStream.close()
+    }
+  }
+
+  /** The session's parquet read settings, taken on the driver, where the
+    * session's `SQLConf` lives, as Spark's own closure takes them. */
+  private[GraftBucketReader] final case class ReadSettings(offHeap: Boolean,
+      int96Conversion: Boolean, batchSize: Int, pushDown: Boolean,
+      pushDownDate: Boolean, pushDownTimestamp: Boolean, pushDownDecimal: Boolean,
+      pushDownStringPredicate: Boolean, pushDownInThreshold: Int, caseSensitive: Boolean,
+      datetimeRebaseMode: String, int96RebaseMode: String)
+
+  private object ReadSettings {
+    def of(c: SQLConf): ReadSettings = {
+      val o = new ParquetOptions(Map.empty[String, String], c)
+      ReadSettings(c.offHeapColumnVectorEnabled, c.isParquetINT96TimestampConversion,
+        c.parquetVectorizedReaderBatchSize, c.parquetFilterPushDown,
+        c.parquetFilterPushDownDate, c.parquetFilterPushDownTimestamp,
+        c.parquetFilterPushDownDecimal, c.parquetFilterPushDownStringPredicate,
+        c.parquetFilterPushDownInFilterThreshold, c.caseSensitiveAnalysis,
+        o.datetimeRebaseModeInRead, o.int96RebaseModeInRead)
+    }
+  }
+
+  /** The session's resolved Hadoop conf (`newHadoopConf` plus the
+    * session-wide parquet read keys Spark's `ParquetFileFormat` sets) as
+    * ONE broadcast per SparkContext, rebuilt only when its content changes:
+    * the key is the context's Hadoop conf entries and the session's set SQL
+    * confs, exactly what `newHadoopConf` merges. One slot, so the cache
+    * cannot grow: a changed conf or a new context replaces it, and Spark's
+    * ContextCleaner reclaims the old broadcast. */
+  private object SessionHadoopConf {
+    /** (Hadoop conf entries, set SQL confs) */
+    private type Key = (Map[String, String], Map[String, String])
+    private var slot: (SparkContext, Key, Broadcast[SerializableConfiguration]) = _
+
+    def apply(spark: SparkSession): Broadcast[SerializableConfiguration] = synchronized {
+      val sc = spark.sparkContext
+      val key: Key = (sc.hadoopConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap,
+        spark.sessionState.conf.getAllConfs)
+      if (slot == null || (slot._1 ne sc) || slot._2 != key) {
+        val conf = spark.sessionState.newHadoopConf()
+        val c = spark.sessionState.conf
+        // the requested schema is per query: each file's context sets it
+        conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+        conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, c.sessionLocalTimeZone)
+        Seq(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> c.nestedSchemaPruningEnabled,
+          SQLConf.CASE_SENSITIVE -> c.caseSensitiveAnalysis,
+          SQLConf.PARQUET_BINARY_AS_STRING -> c.isParquetBinaryAsString,
+          SQLConf.PARQUET_INT96_AS_TIMESTAMP -> c.isParquetINT96AsTimestamp,
+          SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> c.parquetInferTimestampNTZEnabled,
+          SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> c.legacyParquetNanosAsLong,
+          SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+            c.parquetReaderRespectUnknownTypeAnnotation)
+          .foreach { case (e, v) => conf.setBoolean(e.key, v) }
+        slot = (sc, key, sc.broadcast(new SerializableConfiguration(conf)))
+      }
+      slot._3
+    }
+  }
 
   /** One parquet reader per physical schema version among `versions`, each
     * requesting only the columns of `scanSchema` (the reader's working
     * layout) that its version physically holds, with `filters` pushed into
-    * parquet. Spark's own (vectorized) reader, asked for rows. */
+    * parquet: row groups, and pages through the column index, whose
+    * statistics exclude them are never decoded. The engine's one parquet
+    * reader builder. */
   def parquetReaders(spark: SparkSession, scanSchema: StructType,
       versions: Seq[Int], filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Map[Int, FileReader] =
+      : Map[Int, FileReader] = {
+    val conf = SessionHadoopConf(spark)
+    val settings = ReadSettings.of(spark.sessionState.conf)
     versions.distinct.map { v =>
       val phys = TableSchemas.forVersion(v)
-      v -> new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        .buildReaderWithPartitionValues(
-          sparkSession = spark,
-          dataSchema = phys,
-          partitionSchema = new StructType(),
-          requiredSchema = StructType(physRequired(scanSchema, v)),
-          // a version's reader gets only the filters its columns can bind
-          filters = filters.filter(_.references.forall(phys.fieldNames.contains(_))),
-          // rows, not ColumnarBatch: the fold consumes row iterators
-          options = Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          hadoopConf = spark.sessionState.newHadoopConf())
+      v -> new FileReader(conf, settings, StructType(physRequired(scanSchema, v)).json,
+        // a version's reader gets only the filters its columns can bind
+        filters.filter(_.references.forall(phys.fieldNames.contains(_))))
     }.toMap
+  }
 
   /** The columns of `target` a version-`v` file physically holds, with
     * their physical types, in `target` order: what its parquet reader
@@ -815,10 +948,7 @@ final class GraftBucketReader(
   // heads (one live row per file) occupy distinct buffers
   private val its: Array[Iterator[InternalRow]] = p.files.toArray.map { case (path, bytes, v) =>
     val proj = GraftBucketReader.alignProj(full, v)
-    val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
-      InternalRow.empty, org.apache.spark.paths.SparkPath.fromPathString(path), 0L, bytes)
-    // OPTION_RETURNING_BATCH=false → the reader yields rows, never batches
-    readers(v)(pf).map(proj)
+    readers(v).open(path, bytes).map(proj)
   }
   private val heads: Array[InternalRow] = its.map(it => if (it.hasNext) it.next() else null)
 
