@@ -12,7 +12,7 @@ package graft.app
   * means, and their ratio (≈1.0 = no degradation with table growth).
   *
   * `rebucketAt` > 0 starts a LIVE bucket-count doubling
-  * ([[graft.lake.Maintain.rebucketLive]]) on a background thread when that
+  * ([[graft.lake.Maintain.rebucket]]) on a background thread when that
   * batch index commits — the evidence that the one remaining growth
   * operation runs WITHOUT pausing ingest: batches keep landing during the
   * cutover (at most one recomputes on the layout guard), and the JSON
@@ -50,7 +50,7 @@ object SustainedBench {
         rbThread = new Thread(() => {
           try {
             val t0 = System.nanoTime()
-            graft.lake.Maintain.rebucketLive(spark, table,
+            graft.lake.Maintain.rebucket(spark, table,
               table.currentSnapshot.nBuckets * 2)
             rbSec = (System.nanoTime() - t0) / 1e9
             rbDoneAtBatch = curBatch.get()

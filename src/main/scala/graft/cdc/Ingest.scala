@@ -333,11 +333,7 @@ object Ingest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, id: Long) =>
-        // foreachBatch wraps the batch as an opaque LogicalRDD, so recover
-        // the batch's offset ranges from the source's planning registry —
-        // one pass saved per batch vs aggregating them from the data.
-        val lineage = graft.binlog.BinlogLineage.lastPlanned(lineageToken).map(_.toSeq.sortBy(_._1)
-          .map { case (p, (from, until)) => PartLineage(p, from, until - from, until - from) })
+        val lineage = plannedLineage(lineageToken)
         // branch streams mark batches in their own salted id domain — raw
         // epochs would collide with the main stream's after publish
         val markerId = if (branch.isEmpty) id else branchBatchId(checkpointDir, id)
@@ -368,14 +364,25 @@ object Ingest {
       .start()
   }
 
-  /** Tail a TOPIC SET: one streaming query per topic subdirectory of
-    * `binlogRoot`, each with its own checkpoint, lineage token and target
-    * table (≙ the reference consuming a topic set with per-topic tasks and
-    * per-topic remap, `S3SourceTask.java:137-143,236-238`). `remap` renames
-    * a topic to its target table (identity by default). Queries are
-    * independent — per-topic backpressure, rate limits and failure
-    * isolation, exactly like connector task sets; the token-keyed lineage
-    * registry keeps their exactly-once metadata separate. */
+  /** The offset ranges the source registered under `token` when it planned
+    * the current micro-batch, as per-partition lineage in partition order.
+    * `foreachBatch` wraps a batch as an opaque LogicalRDD, so a streaming
+    * apply recovers the batch's span from the source's planning registry
+    * ([[graft.binlog.BinlogLineage]]) — one pass saved per batch vs
+    * aggregating it from the data. */
+  private[cdc] def plannedLineage(token: String): Option[Seq[PartLineage]] =
+    graft.binlog.BinlogLineage.lastPlanned(token).map(_.toSeq.sortBy(_._1)
+      .map { case (p, (from, until)) => PartLineage(p, from, until - from, until - from) })
+
+  /** Tail a TOPIC SET: one [[startStream]] per topic subdirectory of
+    * `binlogRoot`, each with its own checkpoint `checkpointRootDir/<table>`,
+    * lineage token and target table (≙ the reference consuming a topic set
+    * with per-topic tasks and per-topic remap,
+    * `S3SourceTask.java:137-143,236-238`). `remap` renames a topic to its
+    * target table (identity by default). Queries are independent —
+    * per-topic backpressure, rate limits and failure isolation, exactly
+    * like connector task sets; the token-keyed lineage registry keeps their
+    * exactly-once metadata separate. */
   def startTopicSet(spark: SparkSession, binlogRoot: String, topics: Seq[String],
       tableRootFor: String => Path, checkpointRootDir: String,
       remap: String => String = identity,
@@ -390,28 +397,9 @@ object Ingest {
       s"remap must be injective — one writer per table (got ${targets.mkString(", ")})")
     topics.map { topic =>
       val target = remap(topic)
-      val tableRoot = tableRootFor(target)
-      val table = LakeTable.create(tableRoot, nBuckets)
-      val checkpointDir = s"$checkpointRootDir/$target"
-      val lineageToken = s"ingest:$checkpointDir"
-      val stream = spark.readStream
-        .format("graft.binlog.BinlogSourceProvider")
-        .option("path", binlogRoot)
-        .option("topic", topic)
-        .option("maxEventsPerBatch", maxEventsPerBatch)
-        .option("lineageToken", lineageToken)
-        .load()
-      val q = stream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          val lineage = graft.binlog.BinlogLineage.lastPlanned(lineageToken)
-            .map(_.toSeq.sortBy(_._1)
-              .map { case (p, (from, until)) => PartLineage(p, from, until - from, until - from) })
-          applyBatch(spark, table, lineage, mode, opts)(df, id)
-        }
-        .start()
-      topic -> q
+      topic -> startStream(spark, s"$binlogRoot/$topic", tableRootFor(target),
+        s"$checkpointRootDir/$target", maxEventsPerBatch, trigger, nBuckets, mode,
+        opts = opts)
     }.toMap
   }
 

@@ -304,7 +304,7 @@ object Merge {
     * incrementally compact any bucket that exceeded MaxFilesPerBucket.
     * Per-batch cost is O(batch), independent of table size.
     *
-    * If a CONCURRENT [[graft.lake.Maintain.rebucketLive]] swaps the bucket
+    * If a CONCURRENT [[graft.lake.Maintain.rebucket]] swaps the bucket
     * layout between this batch's shuffle and its commit, the layout-guarded
     * append throws and the whole batch is recomputed under the new layout
     * (rare — once per table growth step; the batch plan is re-executable and

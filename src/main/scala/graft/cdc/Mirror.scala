@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.lake.{FeedSource, LakeTable, PartLineage}
+import graft.lake.{FeedSource, LakeTable}
 
 /** Chained CDC pipelines: tail one graft table's change feed
   * ([[graft.lake.FeedSourceProvider]]) and apply it into another graft
@@ -185,14 +185,10 @@ object Mirror {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, id: Long) =>
-        // feed-domain lineage from the source's planning registry (same
-        // trick as Ingest.startStream: foreachBatch wraps the batch as an
-        // opaque LogicalRDD, so the scan's planned span is recovered
-        // out-of-band). Covers maintenance-only spans too — an empty batch
-        // still marks its snapshot span applied.
-        val lineage = graft.binlog.BinlogLineage.lastPlanned(token).map(_.toSeq
-          .map { case (p, (from, until)) => PartLineage(p, from, until - from, until - from) }
-          .filter(_.count > 0))
+        // feed-domain lineage from the source's planning registry (see
+        // Ingest.plannedLineage). Covers maintenance-only spans too — an
+        // empty batch still marks its snapshot span applied.
+        val lineage = Ingest.plannedLineage(token).map(_.filter(_.count > 0))
         Ingest.applyBatch(spark, dst, lineage, mode, opts)(
           feedEvents(df), batchId(checkpointDir, id))
         if (expireEveryBatches > 0 && id > 0 && id % expireEveryBatches == 0)

@@ -27,7 +27,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * is a pure function of A's retained snapshot chain). The same provider
   * also serves one-shot BATCH change reads (`spark.read.format
   * ("graft-feed")` — the Delta `table_changes` shape; see
-  * [[FeedScan.toBatch]] for the batch option semantics).
+  * [[FeedScan.toBatch]] for the batch option semantics), and the engine's
+  * raw reads of stored rows ride the same scan: [[LakeTable.readFiles]],
+  * and with it `readIncrement` and `readRaw`, is this batch read over the
+  * caller's file selection, so a table's data files have one reader.
   *
   * Emitted rows are the PHYSICAL table rows — user columns plus the
   * engine's envelope (`_seq_part`, `_seq_offset`, `_deleted`) and a
@@ -89,7 +92,7 @@ class FeedSourceProvider extends TableProvider with DataSourceRegister {
   }
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new FeedTable(properties.get("path"))
+    FeedTable(properties.get("path"))
 }
 
 object FeedSource {
@@ -112,9 +115,21 @@ object FeedSource {
     StructType(TableSchemas.forVersion(version).fields :+
       StructField("_feed_snapshot", LongType, nullable = false))
 
-  /** Fail loudly when the span committed files past the stream's pinned
-    * schema version (shared by the streaming and batch paths). */
-  private[lake] def guardSchema(files: Seq[(Long, DataFile)], pinnedVersion: Int): Unit =
+  /** The span walk behind every feed read (the batch scan, the micro-batch
+    * stream and [[LakeTable.readIncrement]]): each file with the snapshot
+    * it is emitted for — when `full`, every file of `from`'s state (tagged
+    * `from`), then the files each snapshot in `(from, to]` added
+    * ([[LakeTable.incrementFilesBySnapshot]]). */
+  private[lake] def spanFiles(table: LakeTable, from: Long, to: Long,
+      full: Boolean): Seq[(Long, DataFile)] =
+    (if (full) table.snapshot(from).files.map(from -> _) else Nil) ++
+      (if (to == from) Nil
+       else table.incrementFilesBySnapshot(from, to).flatMap { case (id, fs) => fs.map(id -> _) })
+
+  /** A span's input partitions, one per file `admit` keeps. Fails loudly
+    * when the span committed files past the pinned schema version. */
+  private[lake] def planPartitions(root: Path, files: Seq[(Long, DataFile)],
+      pinnedVersion: Int)(admit: DataFile => Boolean): Seq[FeedInputPartition] = {
     files.find(_._2.schemaVersion > pinnedVersion).foreach { case (id, f) =>
       throw new IllegalStateException(
         s"feed pinned table schema v$pinnedVersion but snapshot $id committed " +
@@ -122,6 +137,10 @@ object FeedSource {
           "stream's schema — restart the stream to re-pin (the checkpoint " +
           "replays the in-flight span under the new, wider schema)")
     }
+    files.collect { case (id, f) if admit(f) =>
+      FeedInputPartition(root.resolve(f.path).toString, f.bytes, f.rowCount, f.schemaVersion, id)
+    }
+  }
 
   /** Wire format for the streaming `urlKeys` option: a JSON string array
     * (urls can contain any delimiter a naive join would pick). */
@@ -224,19 +243,33 @@ object FeedSource {
       SparkSession.active, required, versions, rowFilters), required)
 }
 
-final class FeedTable(rootPath: String) extends Table with SupportsRead {
-  require(rootPath != null, "graft-feed requires option 'path' (table root)")
-  private val pinnedVersion =
-    LakeTable.load(Paths.get(rootPath)).currentSnapshot.schemaVersion
-  override def name(): String = s"graft-feed($rootPath)"
+/** The change feed of the table at `root`, pinned at schema version
+  * `pinnedVersion`. `files`, when given, is a fixed span (each file with the
+  * snapshot it is emitted for) that a batch read returns in place of the
+  * option-selected one — [[LakeTable.readFiles]]' relation, which is never
+  * streamed. */
+final class FeedTable private[lake] (root: Path, pinnedVersion: Int,
+    files: Option[Seq[(Long, DataFile)]]) extends Table with SupportsRead {
+  override def name(): String = s"graft-feed($root)"
   override def schema(): StructType = FeedSource.schemaFor(pinnedVersion)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new FeedScan(Paths.get(rootPath), pinnedVersion, options)
+    new FeedScan(root, pinnedVersion, options, files)
 }
 
-final class FeedScan(root: Path, pinnedVersion: Int, options: CaseInsensitiveStringMap)
+object FeedTable {
+  /** The change feed of the table at `rootPath`, pinned at its current
+    * schema version. */
+  def apply(rootPath: String): FeedTable = {
+    require(rootPath != null, "graft-feed requires option 'path' (table root)")
+    val root = Paths.get(rootPath)
+    new FeedTable(root, LakeTable.load(root).currentSnapshot.schemaVersion, None)
+  }
+}
+
+final class FeedScan(root: Path, pinnedVersion: Int, options: CaseInsensitiveStringMap,
+    files: Option[Seq[(Long, DataFile)]])
     extends ScanBuilder with Scan with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -319,17 +352,18 @@ final class FeedScan(root: Path, pinnedVersion: Int, options: CaseInsensitiveStr
       s.toLongOption.getOrElse(java.time.Instant.parse(s).toEpochMilli)
     }
 
-  /** The batch span's post-pruning file set — shared by [[toBatch]] and
-    * [[estimateStatistics]] so the size estimate reflects what the scan
-    * will actually read. */
-  private def batchFiles(): Seq[(Long, DataFile)] = {
-    val table = LakeTable.load(root)
-    val to = Option(options.get("toSnapshot")).map(_.toLong)
-      .getOrElse(table.currentSnapshotId)
-    val files: Seq[(Long, DataFile)] =
+  /** The batch span's input partitions after pruning — shared by
+    * [[toBatch]] and [[estimateStatistics]] so the size estimate reflects
+    * what the scan will actually read. A fixed `files` span ignores the
+    * span options. */
+  private def batchPartitions(): Seq[FeedInputPartition] = {
+    val span = files.getOrElse {
+      val table = LakeTable.load(root)
+      val to = Option(options.get("toSnapshot")).map(_.toLong)
+        .getOrElse(table.currentSnapshotId)
       fromTimestampMs.map(ms => table.snapshotAsOfTimestampMs(ms).toString)
         .orElse(Option(options.get("fromSnapshot"))).getOrElse("genesis") match {
-        case "full" => table.snapshot(to).files.map(f => to -> f)
+        case "full" => FeedSource.spanFiles(table, to, to, full = true)
         case "latest" => throw new IllegalArgumentException(
           "fromSnapshot=latest is a streaming attach point; batch change " +
             "reads take 'genesis', 'full' or a snapshot id")
@@ -339,20 +373,15 @@ final class FeedScan(root: Path, pinnedVersion: Int, options: CaseInsensitiveStr
               s"fromSnapshot must be 'genesis', 'full' or a snapshot id for batch reads; got '$s'")
           }
           require(to >= from, s"toSnapshot $to < fromSnapshot $from")
-          table.incrementFilesBySnapshot(from, to)
-            .flatMap { case (id, fs) => fs.map(id -> _) }
+          FeedSource.spanFiles(table, from, to, full = false)
       }
-    FeedSource.guardSchema(files, pinnedVersion)
-    files.filter { case (_, f) =>
-      FeedSource.fileAdmits(root, f, urlKeys) &&
-        FeedSource.fileAdmitsTime(f, tsLo, tsHi) }
+    }
+    FeedSource.planPartitions(root, span, pinnedVersion)(f =>
+      FeedSource.fileAdmits(root, f, urlKeys) && FeedSource.fileAdmitsTime(f, tsLo, tsHi))
   }
 
   override def toBatch: Batch =
-    new FeedBatch(batchFiles()
-      .map { case (id, f) =>
-        FeedInputPartition(root.resolve(f.path).toString, f.bytes, f.schemaVersion, id)
-      }.toArray, required, pushedFilters().toSeq)
+    new FeedBatch(batchPartitions().toArray, required, pushedFilters().toSeq)
 
   /** Manifest-exact statistics over the pruned span (see
     * [[GraftLakeScan.estimateStatistics]] for the rationale). Defensive:
@@ -366,8 +395,8 @@ final class FeedScan(root: Path, pinnedVersion: Int, options: CaseInsensitiveStr
   // per-batch planning tax; an estimate going stale as the span grows is
   // harmless (stats are bounds for join planning, not correctness)
   private lazy val statsEstimate: Option[(Long, Long)] = try {
-    val fs = batchFiles()
-    Some((fs.iterator.map(_._2.bytes).sum, fs.iterator.map(_._2.rowCount).sum))
+    val ps = batchPartitions()
+    Some((ps.iterator.map(_.bytes).sum, ps.iterator.map(_.rows).sum))
   } catch { case _: Exception => None }
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
@@ -416,6 +445,7 @@ object FeedOffset {
 final case class FeedInputPartition(
     path: String, // absolute
     bytes: Long,
+    rows: Long,
     schemaVersion: Int,
     snapshotId: Long) extends InputPartition
 
@@ -531,31 +561,21 @@ final class FeedMicroBatchStream(root: Path, pinnedVersion: Int,
     val s = start.asInstanceOf[FeedOffset]
     val e = end.asInstanceOf[FeedOffset]
     ensurePinned(s.snapshotId)
-    val files: Seq[(Long, DataFile)] =
-      (if (s.pendingFull) table.snapshot(s.snapshotId).files.map(f => s.snapshotId -> f)
-       else Seq.empty) ++
-      (if (e.snapshotId > s.snapshotId)
-        table.incrementFilesBySnapshot(s.snapshotId, e.snapshotId)
-          .flatMap { case (id, fs) => fs.map(id -> _) }
-       else Seq.empty)
-    FeedSource.guardSchema(files, pinnedVersion)
+    // url-key file pruning (the `urlKeys` option — a single-tenant mirror
+    // skips every file whose bounds/bloom exclude its keys)
+    val parts = FeedSource.planPartitions(root,
+      FeedSource.spanFiles(table, s.snapshotId, e.snapshotId, full = s.pendingFull),
+      pinnedVersion)(FeedSource.fileAdmits(root, _, urlKeys))
     // honest feed-domain lineage for a downstream mirror: this batch covers
     // snapshot ids (base, end] — base 0 when the initial state is included
     // (state(S) ≡ snapshots 1..S applied, and covering the empty genesis
-    // id 0 is vacuously true)
+    // id 0 is vacuously true). Recorded UNPRUNED: the batch still covers
+    // its snapshots even when every file is skipped
     lineageToken.foreach { token =>
       val base = if (s.pendingFull) 0L else s.snapshotId
       graft.binlog.BinlogLineage.record(token,
         Map(FeedSource.LineagePartition -> (base, e.snapshotId)))
     }
-    // url-key file pruning (the `urlKeys` option — a single-tenant mirror
-    // skips every file whose bounds/bloom exclude its keys); the span's
-    // lineage above is recorded UNPRUNED: the batch still covers its
-    // snapshots even when every file is skipped
-    val parts = files.filter { case (_, f) => FeedSource.fileAdmits(root, f, urlKeys) }
-      .map { case (id, f) =>
-        FeedInputPartition(root.resolve(f.path).toString, f.bytes, f.schemaVersion, id)
-      }
     plannedVersions = parts.map(_.schemaVersion).distinct
     parts.toArray
   }

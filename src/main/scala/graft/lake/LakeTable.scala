@@ -5,7 +5,6 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Self-built Iceberg-style table ("LakeTable"): Parquet data files + JSON
   * snapshot metadata + an atomically-swapped version pointer.
@@ -255,7 +254,7 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     *
     * `expectedBuckets`: the bucket count the files were SHUFFLED under.
     * The rebase is only sound while the table's bucket function is
-    * unchanged — if a concurrent [[Maintain.rebucketLive]] swapped the
+    * unchanged — if a concurrent [[Maintain.rebucket]] swapped the
     * layout, appending old-layout files would break the bucket invariant
     * (a file's urls would no longer all hash to its bucket id), silently
     * corrupting co-located reads. The commit then throws
@@ -690,41 +689,38 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * LWW-resolved, tombstones filtered, internal columns dropped. */
   def read(spark: SparkSession, snapshotId: Option[Long] = None): DataFrame = {
     val snap = snapshotId.map(snapshot).getOrElse(currentSnapshot)
-    val tbl = new graft.sql.GraftSqlTable(this, s"lake:${root.getFileName}",
-      pinnedSnapshot = Some(snap.snapshotId))
-    org.apache.spark.sql.GraftBridge.ofRows(spark,
-      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-        tbl, None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
+    org.apache.spark.sql.GraftBridge.readTable(spark, new graft.sql.GraftSqlTable(this,
+      s"lake:${root.getFileName}", pinnedSnapshot = Some(snap.snapshotId)))
   }
 
   /** Incremental read (CDC-out): rows in data files ADDED between
     * `fromSnapshotId` (exclusive) and `toSnapshotId` (inclusive, default
     * current) — under merge-on-read each batch's delta files are exactly its
     * post-dedup winners (upserts + tombstones), so this is the table's
-    * outgoing change feed (≙ Iceberg incremental scan / changelog read).
-    * Rows carry the internal columns; `_deleted = true` rows are the delete
-    * events. Compaction/maintenance snapshots rewrite rows without changing
-    * content — pass `skipMaintenance = true` (default) to ignore snapshots
-    * that carry no new batch markers (incl. tier folds). A LONG-LIVED
-    * consumer should [[pin]] its `from` snapshot — expiry then retains the
-    * pin's entire forward span, so the increment stays readable; if the
-    * span WAS expired anyway (no pin, or the lease aged out), the broken
-    * parent chain is detected and the read fails loudly rather than
+    * outgoing change feed (≙ Iceberg incremental scan / changelog read):
+    * the `graft-feed` batch read of the span, without `_feed_snapshot`,
+    * aligned to `toSnapshotId`'s schema. Rows carry the internal columns;
+    * `_deleted = true` rows are the delete events. Maintenance snapshots
+    * (no new batch markers, incl. tier folds) rewrite rows without changing
+    * content and add nothing. A LONG-LIVED consumer should [[pin]] its
+    * `from` snapshot — expiry then retains the pin's entire forward span,
+    * so the increment stays readable; if the span WAS expired anyway (no
+    * pin, or the lease aged out), the broken parent chain is detected here,
+    * when the read is built, and the read fails loudly rather than
     * misreporting rewritten files as changes. */
   def readIncrement(spark: SparkSession, fromSnapshotId: Long,
-      toSnapshotId: Option[Long] = None, skipMaintenance: Boolean = true): DataFrame = {
+      toSnapshotId: Option[Long] = None): DataFrame = {
     val to = toSnapshotId.getOrElse(currentSnapshotId)
-    val added = incrementFilesBySnapshot(fromSnapshotId, to, skipMaintenance)
-      .flatMap(_._2)
-    readFiles(spark, snapshot(to), added)
+    readSpan(spark, snapshot(to).schemaVersion,
+      FeedSource.spanFiles(this, fromSnapshotId, to, full = false))
   }
 
   /** The snapshot-chain walk under [[readIncrement]] and the `graft-feed`
     * streaming source: files ADDED by each snapshot in `(fromSnapshotId,
     * to]`, in chain order, as `(snapshotId, files)` pairs. Maintenance
     * snapshots (no new batch markers — compaction, tier folds, blooms,
-    * expiry) rewrite rows without changing content and are skipped by
-    * default. Fails loudly when the span crosses an EXPIRED gap (the
+    * expiry) rewrite rows without changing content and are skipped
+    * here. Fails loudly when the span crosses an EXPIRED gap (the
     * parent chain is broken) or a history REWRITE — any commit where the
     * parent's batch-marker ids do NOT survive as a prefix: ROLLBACK
     * (markers truncated), TRUNCATE (cleared), INSERT OVERWRITE (replaced,
@@ -733,8 +729,7 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
     * files are not "changes" — an incremental consumer that crossed it
     * silently would keep vanished rows forever. Re-seed the consumer from
     * the rewrite snapshot instead (pass it as the new `from`). */
-  def incrementFilesBySnapshot(fromSnapshotId: Long, to: Long,
-      skipMaintenance: Boolean = true): Seq[(Long, Vector[DataFile])] = {
+  def incrementFilesBySnapshot(fromSnapshotId: Long, to: Long): Seq[(Long, Vector[DataFile])] = {
     require(to >= fromSnapshotId, s"$to < $fromSnapshotId")
     val ids = snapshotIds.filter(id => id > fromSnapshotId && id <= to)
     var prev = snapshot(fromSnapshotId)
@@ -772,7 +767,7 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
             s"restart the consumer from snapshot $id")
       }
       val isMaintenance = cur.batches.size == prev.batches.size
-      if (!(skipMaintenance && isMaintenance)) {
+      if (!isMaintenance) {
         val prevPaths = prev.files.map(_.path).toSet
         added += id -> cur.files.filterNot(f => prevPaths.contains(f.path))
       }
@@ -783,37 +778,27 @@ final class LakeTable(val root: Path, val ref: String = LakeTable.MainRef) {
   }
 
   /** Full physical read including tombstones, internal columns, and (under
-    * merge-on-read) unresolved multi-version rows. */
+    * merge-on-read) unresolved multi-version rows: [[readFiles]] over every
+    * file of the snapshot (default current). */
   def readRaw(spark: SparkSession, snapshotId: Option[Long] = None): DataFrame = {
     val snap = snapshotId.map(snapshot).getOrElse(currentSnapshot)
     readFiles(spark, snap, snap.files)
   }
 
-  /** Read only the given files of a snapshot, aligned to the current logical
-    * schema. */
-  def readFiles(spark: SparkSession, snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-    val logical = TableSchemas.forVersion(snap.schemaVersion)
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
-    val byVersion = files.groupBy(_.schemaVersion)
-    val parts = byVersion.toSeq.sortBy(_._1).map { case (v, fs) =>
-      val physical = TableSchemas.forVersion(v)
-      val df = spark.read.schema(physical).parquet(fs.map(f => root.resolve(f.path).toString): _*)
-      align(df, physical, logical)
-    }
-    parts.reduce(_.unionByName(_))
-  }
+  /** The raw, unresolved rows of the given files of `snap`, aligned to its
+    * schema version: the `graft-feed` batch scan over exactly these files
+    * (no listing — the manifest holds each file's path and size), read by
+    * the engine's one parquet reader. Column pruning reaches the reader, so
+    * a projection without `html` never decodes payload pages. */
+  def readFiles(spark: SparkSession, snap: Snapshot, files: Seq[DataFile]): DataFrame =
+    readSpan(spark, snap.schemaVersion, files.map(snap.snapshotId -> _))
 
-  /** Project `df` (physical schema) onto `logical`: cast widened columns,
-    * null-fill added ones. */
-  private def align(df: DataFrame, physical: StructType, logical: StructType): DataFrame = {
-    val phys = physical.fieldNames.toSet
-    val cols: Seq[Column] = logical.fields.toSeq.map { f =>
-      if (phys.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
-    df.select(cols: _*)
-  }
+  /** The feed relation over a fixed span, pinned at `version`, minus the
+    * `_feed_snapshot` column. */
+  private def readSpan(spark: SparkSession, version: Int,
+      files: Seq[(Long, DataFile)]): DataFrame =
+    org.apache.spark.sql.GraftBridge.readTable(spark, new FeedTable(root, version, Some(files)))
+      .drop("_feed_snapshot")
 
   /** Write `df` (current-schema columns + an int `bucket` column, each
     * partition holding url-sorted runs of whole buckets) as one parquet

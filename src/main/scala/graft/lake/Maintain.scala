@@ -74,61 +74,33 @@ object Maintain {
   }
 
   /** Rewrite the table under a NEW bucket count (≙ rewriting under a new
-    * Iceberg partition spec): resolve everything, hash-repartition by url
-    * into `newBuckets`, write, commit a maintenance snapshot carrying the
-    * new `nBuckets`. The bucket==partition invariant (and with it the
-    * co-located merge/read/point-lookup paths) holds again immediately —
-    * subsequent merges shuffle into the new layout.
+    * Iceberg partition spec) WITHOUT pausing ingest. The bucket==partition
+    * invariant (and with it the co-located merge/read/point-lookup paths)
+    * holds again at the swap — subsequent merges shuffle into the new
+    * layout.
     *
     * This is how a 10^10-row table outgrows its creation-time bucket count:
     * buckets size write parallelism AND per-task merge state, so they must
     * scale with the table. One full rewrite, run on the maintenance cadence
-    * when `avg bucket bytes > target` (see [[maybeGrowBuckets]]).
-    *
-    * UNLIKE compaction, THIS offline variant must NOT run concurrently with
-    * ingest: a rebase would mix files bucketed under two different bucket
-    * functions. The commit is deliberately fail-fast — a concurrent commit
-    * raises [[CommitConflict]] and this rewrite is discarded; pause the
-    * stream, or use [[rebucketLive]] to cut over WITHOUT pausing. */
-  def rebucket(spark: SparkSession, table: LakeTable, newBuckets: Int): Snapshot = {
-    val (snap, pin) = table.pinCurrent()
-    try {
-    require(newBuckets >= 1)
-    if (newBuckets == snap.nBuckets || snap.files.isEmpty) return snap
-    // resolve under the OLD layout first (co-located, tombstones retained —
-    // replay safety unchanged), then ONE shuffle of the winners into the
-    // new bucket function
-    val out = graft.sql.GraftRead.rawResolved(spark, table, Some(snap.snapshotId))
-      .repartition(newBuckets, col("url"))
-      .withColumn("bucket", LakeTable.bucketOf(col("url"), newBuckets))
-      .sortWithinPartitions(col("url"))
-    val nextId = snap.snapshotId + 1
-    val newFiles = table.writeDataFilesTo(out, s"s$nextId", snap.schemaVersion)
-    val next = snap.copy(snapshotId = nextId, parentId = snap.snapshotId,
-      nBuckets = newBuckets, files = newFiles,
-      totalRows = newFiles.map(_.rowCount).sum)
-    table.commit(next, Some(snap.commitTsMs))
-    } finally pin.release()
-  }
-
-  /** LIVE bucket-count change: rebucket WITHOUT pausing ingest — the
-    * staged-cutover alternative to [[rebucket]], removing the engine's last
-    * stop-the-world operation (a 10^10-row table outgrows its bucket count
-    * while its change stream keeps flowing).
+    * when `avg bucket bytes > target` (see [[maybeGrowBuckets]]), while the
+    * table's change stream keeps flowing. With no concurrent writer it is a
+    * single commit of the rewritten state.
     *
     * Protocol (all machinery reused from the concurrency/pin substrate):
     *  1. PIN the current snapshot `s0` — expiry retains the pin's forward
     *     span, so every intermediate snapshot and its (possibly
     *     folded-away) delta files stay readable for the whole cutover.
-    *  2. REWRITE (long, no lock): LWW-resolve the table as of `s0`
-    *     (tombstones retained — replay safety unchanged) and shuffle the
-    *     winners once into the NEW bucket function; write as the new base.
-    *     Ingest keeps committing batches under the old layout meanwhile.
+    *  2. REWRITE (long, no lock): LWW-resolve the table as of `s0` under
+    *     the old layout (co-located, tombstones retained — replay safety
+    *     unchanged), then shuffle the winners once into the NEW bucket
+    *     function; write as the new base. Ingest keeps committing batches
+    *     under the old layout meanwhile.
     *  3. CATCH UP (no lock): replay the batches committed during step 2 via
     *     [[LakeTable.readIncrement]] (fold-transparent: exactly the
     *     per-batch post-dedup winners incl. tombstones, envelopes kept) and
     *     re-shuffle them into new-layout DELTA files. Loop while ingest
-    *     stays ahead; each round shrinks the remaining tail.
+    *     stays ahead, at most `maxCatchupRounds` times; each round shrinks
+    *     the remaining tail.
     *  4. BARRIER (commit lock): write the final sliver the same way, then
     *     atomically swap — a snapshot carrying the new `nBuckets`, the new
     *     base + catch-up deltas, and the UNCHANGED batch markers/lineage
@@ -143,12 +115,12 @@ object Maintain {
     * files no-ops cleanly (vanished inputs, [[LakeTable.commitReplace]]).
     * COW streams keep their pre-existing fail-fast CAS contract: a
     * concurrent swap surfaces as [[CommitConflict]] rather than corruption
-    * — run live rebucketing under merge-on-read ingest (the mode a
-    * 10^10-scale deployment runs anyway).
+    * — rebucket under merge-on-read ingest (the mode a 10^10-scale
+    * deployment runs anyway).
     *
-    * Run ONE live rebucket at a time; concurrent calls stay correct (each
-    * swap is a complete state) but waste the loser's rewrite. */
-  def rebucketLive(spark: SparkSession, table: LakeTable, newBuckets: Int,
+    * Run ONE rebucket at a time; concurrent calls stay correct (each swap
+    * is a complete state) but waste the loser's rewrite. */
+  def rebucket(spark: SparkSession, table: LakeTable, newBuckets: Int,
       maxCatchupRounds: Int = 8): Snapshot = {
     val (s0, pin) = table.pinCurrent()
     try {
@@ -156,7 +128,7 @@ object Maintain {
       if (newBuckets == s0.nBuckets || s0.files.isEmpty) return s0
       val tag = s"rb${java.util.UUID.randomUUID().toString.take(8)}"
       // step 2: resolve as of s0 under the old layout, one shuffle into the
-      // new function (same formulation as the offline rebucket)
+      // new function
       val base = graft.sql.GraftRead.rawResolved(spark, table, Some(s0.snapshotId))
         .repartition(newBuckets, col("url"))
         .withColumn("bucket", LakeTable.bucketOf(col("url"), newBuckets))

@@ -106,7 +106,7 @@ class GraftCatalog extends TableCatalog
       val base = Identifier.of(ident.namespace(), name.substring(0, dollar))
       val root = rootOf(base)
       if (!LakeTable.exists(root)) throw new NoSuchTableException(base)
-      return new graft.lake.FeedTable(root.toString)
+      return graft.lake.FeedTable(root.toString)
     }
     if (dollar > 0 && GraftMetaTable.Kinds.contains(name.substring(dollar + 1))) {
       val base = Identifier.of(ident.namespace(), name.substring(0, dollar))
@@ -420,10 +420,7 @@ object GraftRead {
   def rawResolved(spark: SparkSession, lake: LakeTable,
       snapshotId: Option[Long] = None,
       files: Option[Seq[graft.lake.DataFile]] = None): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.GraftBridge.ofRows(spark,
-      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-        new GraftRawTable(lake, snapshotId, files), None, None,
-        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
+    org.apache.spark.sql.GraftBridge.readTable(spark, new GraftRawTable(lake, snapshotId, files))
 }
 
 final case class GraftBucketPartition(

@@ -12,6 +12,10 @@ object GraftBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** A batch read of a DSv2 `table`, without options. */
+  def readTable(spark: SparkSession, table: connector.catalog.Table): DataFrame =
+    ofRows(spark, execution.datasources.v2.DataSourceV2Relation.create(
+      table, None, None, util.CaseInsensitiveStringMap.empty()))
   /** Drop cached catalog instances so a changed `spark.sql.catalog.*` conf
     * (e.g. a new graft warehouse) takes effect on next reference. */
   def resetCatalogs(spark: SparkSession): Unit =

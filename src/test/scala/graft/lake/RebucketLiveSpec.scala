@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{Oracle, SparkSpec}
 import graft.binlog.{ChangeEventGen, GenProfile}
 
-/** Live rebucketing: the staged cutover ([[Maintain.rebucketLive]]) doubles
+/** Live rebucketing: the staged cutover ([[Maintain.rebucket]]) doubles
   * the bucket count while a merge-on-read ingest stream keeps committing —
   * no stop-the-world. The cutover pins its base snapshot (expiry-safe),
   * chases the head via the fold-transparent change feed, swaps atomically
@@ -27,7 +27,7 @@ class RebucketLiveSpec extends SparkSpec {
         while (!LakeTable.exists(tblDir) ||
           LakeTable.load(tblDir).currentSnapshot.batches.size < 3) Thread.sleep(30)
         val t = LakeTable.load(tblDir)
-        val swapped = Maintain.rebucketLive(spark, t, 16)
+        val swapped = Maintain.rebucket(spark, t, 16)
         swapId = swapped.snapshotId
         batchesAtSwap = swapped.batches.size
       } catch { case e: Throwable => rbErr = e }

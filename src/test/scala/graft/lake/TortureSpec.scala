@@ -53,7 +53,7 @@ class TortureSpec extends SparkSpec {
           LakeTable.load(tblDir).currentSnapshot.batches.size < 3)) Thread.sleep(30)
         if (!stop) {
           val t = LakeTable.load(tblDir)
-          Maintain.rebucketLive(spark, t, 16)
+          Maintain.rebucket(spark, t, 16)
           rebucketed = true
         }
       } catch { case e: Throwable => errs.add(e) }

@@ -23,13 +23,28 @@ class MixedSchemaReadSpec extends SparkSpec {
       (if (df.columns.contains("lang")) Seq(col("lang")) else Nil): _*)
     .collect().map(_.toString).sorted
 
-  /** The shuffle resolve (align + Resolve.lww) of a snapshot's files, as a
-    * user-facing read presents it. */
+  /** A snapshot's files read independently of the engine's reader and its
+    * alignment: Spark's own parquet source, one read per schema version,
+    * each cast (widened) and null-filled to the snapshot's logical schema
+    * here, then unioned. */
+  private def sparkRead(table: LakeTable, snap: Snapshot): org.apache.spark.sql.DataFrame = {
+    val logical = TableSchemas.forVersion(snap.schemaVersion)
+    snap.files.groupBy(_.schemaVersion).toSeq.sortBy(_._1).map { case (v, fs) =>
+      val physical = TableSchemas.forVersion(v)
+      spark.read.schema(physical).parquet(fs.map(f => table.root.resolve(f.path).toString): _*)
+        .select(logical.fields.toSeq.map { f =>
+          (if (physical.fieldNames.contains(f.name)) col(f.name) else lit(null))
+            .cast(f.dataType).as(f.name)
+        }: _*)
+    }.reduce(_.unionByName(_))
+  }
+
+  /** The shuffle resolve (Spark's parquet read + Resolve.lww) of a
+    * snapshot's files, as a user-facing read presents it. */
   private def reference(table: LakeTable, snap: Snapshot): Array[String] = {
     val dataCols = TableSchemas.forVersion(snap.schemaVersion)
       .fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-    canon(Resolve.lww(
-      table.readFiles(spark, snap, snap.files).repartition(4, col("url")), dataCols)
+    canon(Resolve.lww(sparkRead(table, snap).repartition(4, col("url")), dataCols)
       .filter(!col("_deleted")).drop(TableSchemas.internalNames: _*))
   }
 
