@@ -1,54 +1,13 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.lake._
 import graft.functions.NativeFns
 
-/** MERGE INTO for the url-keyed LakeTable, ONE batch-sized shuffle per
-  * batch.
-  *
-  * The reference has no joins; its analog of this operator is the
-  * cursor→index→data dereference plus idempotent overwrite-on-replay
-  * (`/root/reference/sink/src/main/java/com/spredfast/kafka/connect/s3/S3Writer.java:47-109`,
-  * proven idempotent by the rewind IT,
-  * `sink/src/test/.../S3SinkConnectorIT.java:474-612`). Last-writer-wins
-  * MERGE resolves by url under the `S3Offset`-style total order
-  * `(warc_ts, offset, partition)` (`S3Offset.java:46-49`):
-  *
-  *  1. prune — only target files whose `bucket` (and manifest url bounds,
-  *     unsigned-UTF-8 compared) intersect the batch are
-  *     rewritten; everything else is carried forward untouched (manifest
-  *     skip-scan ≙ chunk-index skip-scan);
-  *  2. resolve winners CO-LOCATED ([[graft.plans.BucketMergeExec]]): the
-  *     table side is read IN PLACE — its files are already
-  *     bucket-partitioned with `bucketOf(url) == Spark's partitionId(url)`
-  *     by construction ([[LakeTable.bucketOf]]), which the custom scan
-  *     truthfully declares, so only the BATCH is shuffled (O(batch) bytes
-  *     regardless of table size). Each task folds its bucket's stored files
-  *     with the same k-way LWW reader every SQL read uses
-  *     ([[graft.sql.GraftBucketReader]]: tombstone winners kept, files of
-  *     older schema versions aligned, several versions of a url in one file
-  *     tolerated) and streams the winners against the url-sorted batch
-  *     winners in a sorted merge;
-  *  3. a winning delete is persisted as a TOMBSTONE (`_deleted = true`):
-  *     the final state must be independent of how the log is split into
-  *     batches, and only a durable tombstone beats a late upsert replayed
-  *     after it (SURVEY.md §2.9 T7);
-  *  4. text extraction runs POST-aggregation, only on batch-side winners
-  *     (target winners carry their stored text) — the extractor cost is
-  *     O(surviving rows), never O(events);
-  *  5. write per-bucket sorted by url (deterministic replay); the writing
-  *     tasks return each file's manifest stats, computed while writing;
-  *     commit with the `(batchId, lineage)` marker.
-  *
-  * Scale: shuffle bounded by batch rows; `nBuckets` sizes rewrite
-  * granularity, write parallelism AND per-task merge state (grow via
-  * [[graft.lake.Maintain.rebucket]]); hot-url duplicates collapse in the
-  * batch side's sorted url runs (the Zipf-head defense).
-  */
 /** Merge strategy: copy-on-write (rewrite touched buckets each batch — reads
   * amplify writes, zero read overhead) vs merge-on-read (append per-bucket
   * delta files of batch winners — O(batch) writes regardless of table size,
@@ -79,6 +38,44 @@ final class MergeAudit {
   def admitBitmapBytes: Long = bitmapBytes
 }
 
+/** MERGE INTO for the url-keyed LakeTable: one winner pass, then a
+  * per-mode tail.
+  *
+  * The reference has no joins; its analog of this operator is the
+  * cursor→index→data dereference plus idempotent overwrite-on-replay
+  * (the reference's `sink/src/main/java/com/spredfast/kafka/connect/s3/S3Writer.java:47-109`,
+  * proven idempotent by the rewind IT,
+  * `sink/src/test/.../S3SinkConnectorIT.java:474-612`). Last-writer-wins
+  * MERGE resolves by url under the `S3Offset`-style total order
+  * `(warc_ts, offset, partition)` (`S3Offset.java:46-49`).
+  *
+  * The winner pass ([[winners]]) aligns the batch to the snapshot's logical
+  * schema and resolves each url's winner with [[graft.lake.Resolve.lww]]
+  * over ONE `repartition(nBuckets, url)`, the batch's only shuffle: its
+  * partition i is bucket i ([[LakeTable.bucketOf]]), so the winners arrive
+  * bucket-aligned whatever the table's size. A winning delete is kept as a
+  * TOMBSTONE (`_deleted = true`): the final state must be independent of
+  * how the log is split into batches, and only a durable tombstone beats a
+  * late upsert replayed after it (SURVEY.md §2.9 T7). Text extraction runs
+  * on the winners only, O(surviving rows), never O(events). One
+  * Observation counts winners and tombstones: the batch marker's
+  * upserts/deletes in both modes.
+  *
+  * The tails:
+  *  - MOR appends the winners as per-bucket DELTA files (`commitAppend`,
+  *    rebased over concurrent commits), then folds the tiers of crowded
+  *    buckets; per-batch cost is O(batch), independent of table size.
+  *  - COW folds the winners into their buckets' stored files with the
+  *    table's own k-way fold ([[graft.plans.BucketMergeExec]], no shuffle
+  *    of table rows), writes each touched bucket as one base file and
+  *    commits with one CAS on the snapshot it read, replacing every
+  *    stored file of the rewritten buckets; untouched buckets are carried
+  *    forward.
+  *
+  * Scale: shuffle bounded by batch rows; `nBuckets` sizes rewrite
+  * granularity, write parallelism AND per-task fold state (grow via
+  * [[graft.lake.Maintain.rebucket]]).
+  */
 object Merge {
 
   /** MOR: fold a bucket's DELTA tier once it accumulates this many delta
@@ -120,22 +117,20 @@ object Merge {
     *  - `lineage` empty (ad-hoc callers, SQL merges): broadcast semi-join on
     *    the winners' exact (partition, offset) keys — bounded by batch
     *    admission control (maxEventsPerBatch × 16 B). */
-  private def lateResolved(batch: DataFrame, srcAligned: DataFrame,
+  private def lateResolved(batch: DataFrame, wMeta: DataFrame,
       nBuckets: Int, dataCols: Seq[String], lineage: Seq[PartLineage],
       audit: Option[MergeAudit]): DataFrame = {
     if (lineage.nonEmpty)
-      return lateResolvedBitmap(batch, srcAligned, nBuckets, dataCols, lineage, audit)
+      return lateResolvedBitmap(batch, wMeta, nBuckets, dataCols, lineage, audit)
     audit.foreach(_.bitmapBytes = -1L)
-    val metaCols = dataCols.filterNot(_ == "html")
-    // phase A: winners over the meta projection — projection collapse drops
-    // html BEFORE the exchange, so the dedup shuffle never carries payloads.
-    // NOT persisted: the two consumers below are the SAME subtree, so the
-    // meta exchange is written once and reused (ReusedExchange); a persist
-    // would wrap the plan in an InMemoryRelation whose AQE-finalized
-    // partitioning is opaque to the outer planner, forcing the attach join
-    // to re-shuffle BOTH sides (measured: worse than the full-payload path).
-    val wMeta = graft.lake.Resolve.lww(
-      srcAligned.drop("html").repartition(nBuckets, col("url")), metaCols)
+    // phase A (`wMeta`): winners over the meta projection — projection
+    // collapse drops html BEFORE the exchange, so the dedup shuffle never
+    // carries payloads. NOT persisted: the two consumers below are the SAME
+    // subtree, so the meta exchange is written once and reused
+    // (ReusedExchange); a persist would wrap the plan in an InMemoryRelation
+    // whose AQE-finalized partitioning is opaque to the outer planner,
+    // forcing the attach join to re-shuffle BOTH sides (measured: worse than
+    // the full-payload path).
     // phase B: second pass over the SAME batch plan; only rows whose exact
     // (partition, offset) won phase A survive the broadcast semi-join, so
     // the payload shuffle is O(winners). Tombstone winners fetch nothing.
@@ -186,11 +181,10 @@ object Merge {
     * winner outside every run fails LOUDLY — lineage claims exactly the
     * batch's offset coverage, and silently dropping a winner's payload
     * would corrupt the table. */
-  private def lateResolvedBitmap(batch: DataFrame, srcAligned: DataFrame,
+  private def lateResolvedBitmap(batch: DataFrame, metaWinners: DataFrame,
       nBuckets: Int, dataCols: Seq[String], lineage: Seq[PartLineage],
       audit: Option[MergeAudit]): DataFrame = {
     val spark = batch.sparkSession
-    val metaCols = dataCols.filterNot(_ == "html")
     val runs = lineage.sortBy(l => (l.partition, l.startOffset))
     val bases = runs.scanLeft(0L)((acc, r) => acc + r.count)
     val totalBits = bases.last
@@ -218,9 +212,7 @@ object Merge {
     // nBuckets) the repartition guarantees — plain localCheckpoint loses it
     // under AQE and the attach join would re-shuffle the winners.
     val wMeta = org.apache.spark.sql.GraftBridge.localCheckpointHashPartitioned(
-      graft.lake.Resolve.lww(
-        srcAligned.drop("html").repartition(nBuckets, col("url")), metaCols),
-      Seq("url"), nBuckets)
+      metaWinners, Seq("url"), nBuckets)
     val posU = udf((p: Int, o: Long) => {
       val pos = posOf(p, o)
       if (pos < 0) throw new IllegalStateException(
@@ -271,7 +263,7 @@ object Merge {
       batchId: Long, lineage: Seq[PartLineage], mode: MergeMode = Cow,
       opts: MergeOptions = MergeOptions()): Snapshot =
     mode match {
-      case Cow => applyCow(spark, table, batch, batchId, lineage, opts)
+      case Cow => applyCow(table, batch, batchId, lineage, opts)
       case Mor => applyMor(spark, table, batch, batchId, lineage, opts)
     }
 
@@ -287,22 +279,21 @@ object Merge {
     * rewrite, so merge-on-read deltas have nothing to defer. */
   def overwrite(spark: SparkSession, table: LakeTable, batch: DataFrame,
       batchId: Long): Snapshot = {
-    val committed = applyCow(spark, table, batch, batchId, lineage = Nil,
+    val committed = applyCow(table, batch, batchId, lineage = Nil,
       MergeOptions(), emptyBase = true)
-    // an EMPTY batch falls through applyCow's stats-empty no-op — but the
-    // overwrite contract is "the batch IS the new state", so empty means
-    // TRUNCATE (one metadata commit clearing files and markers), never a
-    // silent keep-everything. Detected by the unchanged head rather than a
+    // an EMPTY batch commits nothing in applyCow — but the overwrite
+    // contract is "the batch IS the new state", so empty means TRUNCATE
+    // (one metadata commit clearing files and markers), never a silent
+    // keep-everything. Detected by the unchanged head rather than a
     // pre-count so the non-empty path stays single-pass.
     if (committed.committedBatchIds.contains(batchId)) committed
     else table.truncate()
   }
 
-  /** MERGE-ON-READ apply: dedup the batch to per-url winners (same single
-    * bucket-aligned shuffle as COW, but the union side is EMPTY — the table
-    * is never read), append the winners as per-bucket DELTA files, then
-    * incrementally compact any bucket that exceeded MaxFilesPerBucket.
-    * Per-batch cost is O(batch), independent of table size.
+  /** MERGE-ON-READ apply: the winner pass (the table is never read), the
+    * winners appended as per-bucket DELTA files, then an incremental fold
+    * of any bucket that exceeded MaxFilesPerBucket. Per-batch cost is
+    * O(batch), independent of table size.
     *
     * If a CONCURRENT [[graft.lake.Maintain.rebucket]] swaps the bucket
     * layout between this batch's shuffle and its commit, the layout-guarded
@@ -322,47 +313,13 @@ object Merge {
       batchId: Long, lineage: Seq[PartLineage], opts: MergeOptions): Snapshot = {
     val snap = table.currentSnapshot
     if (snap.committedBatchIds.contains(batchId)) return snap
-    val nBuckets = snap.nBuckets
-    val logical = TableSchemas.forVersion(snap.schemaVersion)
-    val typeOf = logical.fields.map(f => f.name -> f.dataType).toMap
-    val dataCols = logical.fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-
-    val srcAligned = batch
-      .withColumn("text", lit(null).cast("string"))
-      .withColumn("content_len", lit(null).cast(typeOf("content_len")))
-      .withColumn("_seq_part", col("partition"))
-      .withColumn("_seq_offset", col("offset"))
-      .withColumn("_deleted", col("op") === "delete")
-      .select((dataCols ++ TableSchemas.internalNames).map(c => col(c).cast(typeOf(c)).as(c)): _*)
-
-    val winners =
-      if (opts.lateMaterialize && batch.columns.contains("offset") && batch.columns.contains("partition"))
-        lateResolved(batch, srcAligned, nBuckets, dataCols, lineage, opts.audit)
-      else
-        graft.lake.Resolve.lww(srcAligned.repartition(nBuckets, col("url")), dataCols)
-    val obs = org.apache.spark.sql.Observation()
-    val merged = winners
-      .withColumn("text", when(!col("_deleted"), NativeFns.extractText(col("html"))).otherwise(lit(null)))
-      .withColumn("content_len",
-        when(col("html").isNull, lit(null)).otherwise(length(col("html"))).cast(typeOf("content_len")))
-      .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
-      .sortWithinPartitions(col("url"))
-      .observe(obs, count(lit(1)).as("n"),
-        sum(when(col("_deleted"), 1L).otherwise(0L)).as("dels"))
-
-    val nextId = snap.snapshotId + 1
-    val newFiles = table.writeDataFilesTo(merged, s"s$nextId", snap.schemaVersion)
-    val row = obs.get
-    val dels = row("dels").asInstanceOf[Long]
-    val n = row("n").asInstanceOf[Long]
+    val (merged, obs) = winners(batch, snap, lineage, opts)
+    val newFiles = table.writeDataFilesTo(merged, s"s${snap.snapshotId + 1}", snap.schemaVersion)
     // ADD-ONLY commit with rebase: a concurrent maintenance commit (blooms
     // excepted — no commit — but compaction commits) between our read and
     // here just moves the head; the delta applies identically on top.
-    // Marker counts are post-dedup winners in MOR (raw counts would need an
-    // extra pass; lineage carries the raw coverage).
     val next = table.commitAppend(newFiles.map(_.copy(tier = DataFile.TierDelta)),
-      Some(BatchMarker(batchId, lineage, n - dels, dels)),
-      expectedBuckets = Some(nBuckets))
+      Some(marker(batchId, lineage, obs)), expectedBuckets = Some(snap.nBuckets))
 
     // TIERED incremental compaction (LSM-style size tiering): when a
     // bucket's DELTA count crosses MaxFilesPerBucket, fold just the deltas
@@ -400,6 +357,56 @@ object Merge {
     if (deltaFold.nonEmpty) compactDeltaTier(spark, table, deltaFold) else afterFull
   }
 
+  /** The winner pass both modes share (see the object doc): the batch
+    * aligned to `snap`'s logical schema, one LWW winner per url over one
+    * `repartition(nBuckets, url)` (or the late-materialized dedup), text
+    * and `content_len` computed, `bucket` added, url-sorted within each
+    * bucket's partition. The Observation counts the winners (`n`) and the
+    * tombstones among them (`dels`) once the rows are written. */
+  private def winners(batch: DataFrame, snap: Snapshot, lineage: Seq[PartLineage],
+      opts: MergeOptions): (DataFrame, Observation) = {
+    val nBuckets = snap.nBuckets
+    val logical = TableSchemas.forVersion(snap.schemaVersion)
+    val typeOf = logical.fields.map(f => f.name -> f.dataType).toMap
+    val dataCols = logical.fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
+
+    val srcAligned = batch
+      .withColumn("text", lit(null).cast("string"))
+      .withColumn("content_len", lit(null).cast(typeOf("content_len")))
+      .withColumn("_seq_part", col("partition"))
+      .withColumn("_seq_offset", col("offset"))
+      .withColumn("_deleted", col("op") === "delete")
+      .select((dataCols ++ TableSchemas.internalNames).map(c => col(c).cast(typeOf(c)).as(c)): _*)
+
+    // late materialization dedups the html-free META projection and
+    // fetches the winners' payloads afterwards (see lateResolved)
+    val late = opts.lateMaterialize && batch.columns.contains("offset") && batch.columns.contains("partition")
+    val lww = graft.lake.Resolve.lww(
+      (if (late) srcAligned.drop("html") else srcAligned).repartition(nBuckets, col("url")),
+      if (late) dataCols.filterNot(_ == "html") else dataCols)
+    val won = if (late) lateResolved(batch, lww, nBuckets, dataCols, lineage, opts.audit) else lww
+    val obs = Observation()
+    val merged = won
+      .withColumn("text", when(!col("_deleted"), NativeFns.extractText(col("html"))).otherwise(lit(null)))
+      .withColumn("content_len",
+        when(col("html").isNull, lit(null)).otherwise(length(col("html"))).cast(typeOf("content_len")))
+      .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
+      .sortWithinPartitions(col("url"))
+      .observe(obs, count(lit(1)).as("n"),
+        sum(when(col("_deleted"), 1L).otherwise(0L)).as("dels"))
+    (merged, obs)
+  }
+
+  /** The batch's marker once its winner pass has run: upserts are the live
+    * winners, deletes the tombstone winners (lineage carries the raw
+    * coverage). */
+  private def marker(batchId: Long, lineage: Seq[PartLineage], obs: Observation): BatchMarker = {
+    val row = obs.get
+    val n = row("n").asInstanceOf[Long]
+    val dels = row("dels").asInstanceOf[Long]
+    BatchMarker(batchId, lineage, n - dels, dels)
+  }
+
   /** Mid files per bucket before the full fold runs (the tiering fan-out). */
   final val MidFilesPerBucket = 4
 
@@ -430,127 +437,47 @@ object Merge {
     Maintain.foldReplace(spark, table, DataFile.TierBase, "c")(
       _.files.filter(f => buckets.contains(f.bucket)))
 
-  /** COPY-ON-WRITE apply: see object doc — pruned target files folded in
-    * place against the batch, one batch-sized shuffle, touched buckets
-    * rewritten. */
-  private def applyCow(spark: SparkSession, table: LakeTable, batch: DataFrame,
+  /** COPY-ON-WRITE apply: see the object doc. An empty batch commits
+    * nothing (the head is returned). */
+  private def applyCow(table: LakeTable, batch: DataFrame,
       batchId: Long, lineage: Seq[PartLineage], opts: MergeOptions,
       emptyBase: Boolean = false): Snapshot = {
     val head = table.currentSnapshot
     if (head.committedBatchIds.contains(batchId)) return head // exactly-once replay skip
     // emptyBase (INSERT OVERWRITE): merge against a VIRTUAL empty state at
-    // the real head's identity — untouched files come out empty and the
+    // the real head's identity — no stored file is folded or kept and the
     // marker list restarts at the overwrite's own, so the one commit below
     // atomically replaces the whole table; its CAS still guards against
     // concurrent writers (parentId = the head we read)
     val snap = if (emptyBase)
       head.copy(files = Vector.empty, batches = Vector.empty, totalRows = 0L)
     else head
-
     val nBuckets = snap.nBuckets
 
-    // the batch is read twice (stats pass + merge); cache it — unless the
-    // CALLER already cached these rows (applyBatch's non-binlog fallback),
-    // where re-caching a projection would double-store every payload: the
-    // bucket hash is trivial to recompute against the existing cache
-    val callerCached = batch.storageLevel.useMemory || batch.storageLevel.useDisk
-    val withBucket = batch.withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
-    if (!callerCached) withBucket.persist(StorageLevel.MEMORY_AND_DISK): Unit
-    try {
-      // batch-side stats for pruning: touched buckets, url bounds,
-      // upsert/delete counts — one aggregate, O(nBuckets) on the driver.
-      val stats = withBucket.groupBy(col("bucket")).agg(
-        count(lit(1)).as("n"),
-        min(col("url")).as("umin"), max(col("url")).as("umax"),
-        sum(when(col("op") === "upsert", 1L).otherwise(0L)).as("ups"))
-        .collect()
-      // empty batch: no-op on the REAL head (the synthetic empty base must
-      // never escape; an empty INSERT OVERWRITE is routed to truncate() by
-      // the write layer before reaching here)
-      if (stats.isEmpty) return head
-      val srcBuckets = stats.map(r => r.getInt(0)).toSet
-      val bounds = stats.map(r => r.getInt(0) -> (r.getString(2), r.getString(3))).toMap
-      val upserts = stats.map(_.getLong(4)).sum
-      val total = stats.map(_.getLong(1)).sum
-      val deletes = total - upserts
+    val (won, obs) = winners(batch, snap, lineage, opts)
+    val bucketFiles = snap.files.groupBy(_.bucket).map { case (b, fs) =>
+      b -> fs.map(f => (table.root.resolve(f.path).toString, f.bytes, f.schemaVersion))
+    }
+    val merged = graft.plans.BucketMergeStrategy.mergedRows(won.drop("bucket"),
+      bucketFiles, nBuckets, TableSchemas.forVersion(snap.schemaVersion))
+      .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
+    // the rewrite keeps bloom sidecars when the table has any, as every
+    // fold of stored files does (Maintain.foldReplace)
+    val blooms = head.files.exists(f => Files.exists(Bloom.sidecar(table.root.resolve(f.path))))
+    val nextId = snap.snapshotId + 1
+    val newFiles = table.writeDataFilesTo(merged, s"s$nextId", snap.schemaVersion, blooms)
+    val m = marker(batchId, lineage, obs)
+    if (m.upserts + m.deletes == 0) return head // empty batch: no rows, no files
 
-      // 1. prune — bounds compared in unsigned-UTF-8 byte order (the order
-      //    Spark's min/max(url) and the parquet stats actually use; Java
-      //    String order would silently mis-prune supplementary-plane urls).
-      //    NoStatsMax means "unbounded": never skip such a file. SAFETY NET:
-      //    even a wrong prune miss stays read-correct, because every read
-      //    LWW-resolves each bucket's files (GraftBucketReader) — but we
-      //    keep bounds conservative so that net is never load-bearing.
-      val (touched, untouched) = snap.files.partition { f =>
-        srcBuckets.contains(f.bucket) && {
-          val (umin, umax) = bounds(f.bucket)
-          f.urlMax == LakeTable.NoStatsMax ||
-            (LakeTable.compareUtf8(f.urlMin, umax) <= 0 &&
-              LakeTable.compareUtf8(umin, f.urlMax) <= 0)
-        }
-      }
-
-      val logical = TableSchemas.forVersion(snap.schemaVersion)
-      val typeOf = logical.fields.map(f => f.name -> f.dataType).toMap
-      val dataCols = logical.fieldNames.toSeq.filterNot(TableSchemas.internalNames.contains)
-
-      // 2. align the batch to the logical schema + `_xt` flag (does this row
-      //    still need text extraction?)
-      val srcAligned = withBucket
-        .withColumn("text", lit(null).cast("string"))
-        .withColumn("content_len", lit(null).cast(typeOf("content_len")))
-        .withColumn("_seq_part", col("partition"))
-        .withColumn("_seq_offset", col("offset"))
-        .withColumn("_deleted", col("op") === "delete")
-        .withColumn("_xt", lit(true))
-      val allCols = (dataCols ++ TableSchemas.internalNames :+ "_xt")
-      val aligned = (df: DataFrame) => df.select(allCols.map(c => col(c).cast(
-        if (c == "_xt") org.apache.spark.sql.types.BooleanType else typeOf.getOrElse(c, org.apache.spark.sql.types.BooleanType)).as(c)): _*)
-
-      // 3. resolve winners: CO-LOCATED bucket merge — table files are
-      //    bucket-partitioned + url-sorted already, so only the BATCH is
-      //    shuffled (one Exchange, O(batch) bytes); each task folds its
-      //    bucket's files (any schema version) and streams them against the
-      //    batch winners (BucketMergeExec).
-      val bucketFiles = touched.groupBy(_.bucket).map { case (b, fs) =>
-        b -> fs.map(f => (table.root.resolve(f.path).toString, f.bytes, f.schemaVersion))
-      }
-      // LATE MATERIALIZATION (see lateResolved): pre-resolve batch winners
-      // meta-first and feed THOSE to the exec — its required
-      // HashPartitioning(url, nBuckets) is already satisfied (no extra
-      // exchange), LWW over pre-LWW'd input is idempotent, and the
-      // payload shuffle shrinks to O(winners)
-      val batchSide =
-        if (opts.lateMaterialize && batch.columns.contains("offset") && batch.columns.contains("partition"))
-          aligned(lateResolved(withBucket, srcAligned, nBuckets, dataCols, lineage, opts.audit)
-            .withColumn("_xt", lit(true)))
-        else aligned(srcAligned)
-      val winners = graft.plans.BucketMergeStrategy.mergedRows(
-        spark, batchSide, bucketFiles, nBuckets, logical)
-
-      // 4. finish rows: extract text only for batch-side winners; recompute
-      //    content_len; bucket == physical partition id by construction.
-      val merged = winners
-        .withColumn("text", when(col("_xt") && !col("_deleted"), NativeFns.extractText(col("html")))
-          .otherwise(col("text")))
-        .withColumn("content_len",
-          when(col("html").isNull, lit(null)).otherwise(length(col("html"))).cast(typeOf("content_len")))
-        .withColumn("bucket", LakeTable.bucketOf(col("url"), nBuckets))
-        .drop("_xt")
-        .sortWithinPartitions(col("url"))
-
-      // 5. write (the tasks return each file's manifest entry) + commit
-      val nextId = snap.snapshotId + 1
-      val newFiles = table.writeDataFilesTo(merged, s"s$nextId", snap.schemaVersion)
-
-      val newTotal = untouched.map(_.rowCount).sum + newFiles.map(_.rowCount).sum
-      val next = snap.copy(
-        snapshotId = nextId,
-        parentId = snap.snapshotId,
-        files = untouched ++ newFiles,
-        batches = snap.batches :+ BatchMarker(batchId, lineage, upserts, deletes),
-        totalRows = newTotal)
-      table.commit(next, Some(snap.commitTsMs))
-    } finally { if (!callerCached) withBucket.unpersist(): Unit }
+    // every bucket with batch winners wrote one file holding its whole fold
+    val rewritten = newFiles.map(_.bucket).toSet
+    val kept = snap.files.filterNot(f => rewritten.contains(f.bucket))
+    val next = snap.copy(
+      snapshotId = nextId,
+      parentId = snap.snapshotId,
+      files = kept ++ newFiles,
+      batches = snap.batches :+ m,
+      totalRows = kept.map(_.rowCount).sum + newFiles.map(_.rowCount).sum)
+    table.commit(next, Some(snap.commitTsMs))
   }
 }

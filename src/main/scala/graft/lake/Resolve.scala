@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 /** The one owner of last-writer-wins: one row per url, winner by the
   * `S3Offset`-style total order `(warc_ts, _seq_offset, _seq_part)`
   * (`/root/reference/source/src/main/java/com/spredfast/kafka/connect/s3/source/S3Offset.java:46-49`).
-  * The streaming folds ([[graft.sql.GraftBucketReader]],
-  * [[graft.plans.BucketMergeExec]]) compare rows with [[newer]]; the
-  * DataFrame form is [[lww]]. */
+  * The one streaming fold, [[graft.sql.GraftBucketReader]] (every read,
+  * every fold of stored files, and the COW merge, which passes its batch
+  * winners to it as one more input), compares rows with [[newer]]; the
+  * DataFrame form [[lww]] resolves a batch's unsorted rows, once per merge
+  * ([[graft.cdc.Merge]]'s winner pass). */
 object Resolve {
   /** The winner order's columns, most significant first. */
   val OrderCols: Seq[String] = Seq("warc_ts", "_seq_offset", "_seq_part")

@@ -64,7 +64,8 @@ object DataFile {
   * the batch, not events that survived reader-side filters
   * (`excludeUrlContains`) or dedup. Gap-free coverage is exactly what the
   * exactly-once audit needs; merged-row counts live in the BatchMarker's
-  * upserts/deletes. */
+  * upserts/deletes: the batch's LWW winners, live and tombstone, in both
+  * merge modes. */
 final case class PartLineage(partition: Int, startOffset: Long, count: Long, rows: Long)
 
 /** One committed microbatch's marker: the exactly-once key `(batchId,

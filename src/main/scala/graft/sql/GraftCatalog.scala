@@ -920,12 +920,15 @@ object GraftBucketReader {
 
 /** Streaming k-way LWW merge over one bucket's url-sorted files: the one
   * fold of stored files, behind every SQL read (`LakeTable.read` included),
-  * every compaction and tier fold, and the COW merge's table side
-  * ([[graft.plans.BucketTableScanExec]]). */
+  * every compaction and tier fold, and the COW merge
+  * ([[graft.plans.BucketMergeExec]]), which passes its bucket's url-sorted
+  * batch winners, already in `scanSchema`'s layout, as `batch`: one more
+  * input after the files, so a tie keeps the stored row. */
 final class GraftBucketReader(
     p: GraftBucketPartition,
     readers: Map[Int, GraftBucketReader.FileReader],
-    scanSchema: StructType, outSchema: StructType)
+    scanSchema: StructType, outSchema: StructType,
+    batch: Option[Iterator[InternalRow]] = None)
   extends PartitionReader[InternalRow] {
 
   // the WORKING layout (projected columns + merge internals, pruned —
@@ -946,7 +949,7 @@ final class GraftBucketReader(
   private val its: Array[Iterator[InternalRow]] = p.files.toArray.map { case (path, bytes, v) =>
     val proj = GraftBucketReader.alignProj(full, v)
     readers(v).open(path, bytes).map(proj)
-  }
+  } ++ batch
   private val heads: Array[InternalRow] = its.map(it => if (it.hasNext) it.next() else null)
 
   // raw mode (compaction/maintenance) keeps tombstone winners; user mode

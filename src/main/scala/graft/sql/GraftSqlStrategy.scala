@@ -429,6 +429,5 @@ object GraftSql {
     if (!spark.experimental.extraStrategies.contains(GraftSqlStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ GraftSqlStrategy
-    graft.plans.BucketMergeStrategy.ensureRegistered(spark)
   }
 }

@@ -86,14 +86,11 @@ class LateMatSpec extends SparkSpec {
       Ingest.applyBatch(spark, table, mode = mode, opts = lateOpts)(doubled, 0L)
       val clean = replay(binlog, s"lmdupref-$mode", mode, eventsPerBatch = Long.MaxValue)
       assert(state(table) == state(clean), s"$mode duplicated-batch state diverged")
-      // MOR markers carry post-dedup winner counts: copies must not inflate
-      // them (COW markers record RAW event counts by design, so a doubled
-      // batch legitimately doubles those)
-      if (mode == Mor) {
-        val (m, mc) = (table.currentSnapshot.batches.head, clean.currentSnapshot.batches.head)
-        assert((m.upserts, m.deletes) == (mc.upserts, mc.deletes),
-          s"marker inflated: got (${m.upserts},${m.deletes}), want (${mc.upserts},${mc.deletes})")
-      }
+      // markers carry post-dedup winner counts in both modes: copies must
+      // not inflate them
+      val (m, mc) = (table.currentSnapshot.batches.head, clean.currentSnapshot.batches.head)
+      assert((m.upserts, m.deletes) == (mc.upserts, mc.deletes),
+        s"marker inflated: got (${m.upserts},${m.deletes}), want (${mc.upserts},${mc.deletes})")
       // MOR delta invariant: at most one winner row per url in the delta tier
       if (mode == Mor) {
         import org.apache.spark.sql.functions._

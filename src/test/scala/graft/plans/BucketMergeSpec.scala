@@ -12,9 +12,9 @@ import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TextExtract}
 
 /** The co-located COW merge's structural guarantees:
-  *  - the TABLE side is read in-place (no Exchange above BucketTableScan) —
-  *    only the batch is shuffled, so per-batch shuffle bytes are O(batch)
-  *    regardless of table size;
+  *  - the stored files are folded in place inside the merge's tasks (no
+  *    scan or Exchange of table rows) — only the batch is shuffled, so
+  *    per-batch shuffle bytes are O(batch) regardless of table size;
   *  - the stored state equals the single-threaded oracle LWW fold of the
   *    same events, tombstone winners included.
   */
@@ -65,6 +65,7 @@ class BucketMergeSpec extends SparkSpec {
     val (work, binlog) = mkBinlog(1500) // per-partition offsets 0..1499
     val table = LakeTable.create(work.resolve("t1"), nBuckets = 8)
     Ingest.applyBatch(spark, table)(BinlogRead.range(spark, binlog.toString, 0, 750), 0L)
+    val stored = table.currentSnapshot.files
 
     // capture the second batch's write job through Spark's listener channel
     // and render the plan it was planned with (the adaptive plan's initial
@@ -74,18 +75,22 @@ class BucketMergeSpec extends SparkSpec {
     }.map(qe => formatted(qe.executedPlan)).filter(_.contains("BucketMerge"))
     assert(writes.size == 1, s"expected ONE merge write job, got ${writes.size}")
     val plan = writes.head
-    assert(plan.contains("BucketMerge"), plan.take(2000))
-    assert(plan.contains("BucketTableScan"))
-    // one Exchange total (the batch side), none between scan and merge
-    val exchanges = "(?m)^.*Exchange.*$".r.findAllIn(plan).size
-    val planTree = plan.linesIterator.takeWhile(!_.startsWith("(1)")).mkString("\n")
-    assert(planTree.split("Exchange").length - 1 == 1,
-      s"expected exactly ONE Exchange in the tree:\n$planTree")
-    // in the tree rendering the scan must hang directly under BucketMerge
-    val scanLine = planTree.linesIterator.find(_.contains("BucketTableScan")).get
-    val mergeLine = planTree.linesIterator.find(_.contains("BucketMerge")).get
-    assert(planTree.indexOf(mergeLine) < planTree.indexOf(scanLine))
-    assert(exchanges >= 1)
+    val planTree = plan.linesIterator.takeWhile(!_.startsWith("(1)")).toSeq
+    // one Exchange total: the batch side's
+    assert(planTree.count(_.contains("Exchange")) == 1,
+      s"expected exactly ONE Exchange in the tree:\n${planTree.mkString("\n")}")
+    // the fold is a unary node above that Exchange: its only input is the
+    // batch, and it names the stored files it folds in its own tasks
+    val foldAt = planTree.indexWhere(_.contains("BucketMerge"))
+    val exchangeAt = planTree.indexWhere(_.contains("Exchange"))
+    assert(foldAt >= 0 && foldAt < exchangeAt, planTree.mkString("\n"))
+    assert(plan.contains(s"Arguments: stored files: ${stored.size} in " +
+      s"${stored.map(_.bucket).distinct.size} buckets"), plan.take(4000))
+    // no scan of the table's files: the plan's only scan is the batch's
+    // binlog read, under the Exchange
+    val scans = planTree.zipWithIndex.filter(_._1.contains("Scan"))
+    assert(scans.nonEmpty && scans.forall { case (l, i) => l.contains("binlog") && i > exchangeAt },
+      planTree.mkString("\n"))
   }
 
   test("co-located merge state == oracle LWW fold, including tombstones and seq columns") {
